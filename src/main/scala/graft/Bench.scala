@@ -265,10 +265,10 @@ object Bench {
         sumCols = Seq("c_custkey"))
 
     def writeWindowed(root: String): Unit =
-      // four disjoint window directories, each write deterministic —
-      // overlapped (§2.6) so the lane pays one planning/commit tail, not
-      // four; bytes per window are identical to the sequential loop
-      graft.sinks.Sinks.inParallel(4)((0 until 4).map { w => () =>
+      // four disjoint window directories, each write deterministic, so
+      // the lane pays one planning/commit tail, not four; bytes per window
+      // are identical to the sequential loop
+      DriverPool.run(4)((0 until 4).map { w => () =>
         graft.sinks.Sinks.zorderedWrite(
           windowedProj.filter(col("c_custkey") % 4 === w),
           "a", "b", s"$root/win=$w", numFiles = 4, bits = 8,
@@ -292,11 +292,11 @@ object Bench {
     }
 
     def build(): Unit = {
-      // independent fixtures overlap (§2.6); each thunk keeps its own
-      // internal ordering (snapshot after its lake, appends after their
-      // base, MaxSim registration after both of its inputs)
+      // independent fixtures; each thunk keeps its own internal ordering
+      // (snapshot after its lake, appends after their base, MaxSim
+      // registration after both of its inputs)
       val emb = T("embeddings")
-      graft.sinks.Sinks.inParallel(6)(Seq(
+      DriverPool.run(6)(Seq(
         () => {
           writeFlat(flat)
           // pin the flat lake for the snapshot read lane: qR_snapshot_agg

@@ -46,10 +46,6 @@ object QueriesDns {
     * {1.2.3.4 (biz, attrs resA/tA/pA), 5.6.7.8 (media)}, auth-domain attrs
     * for every third dN.com, and a geo dim covering the three real answer
     * IPs (0.0.0.0 deliberately outside it). */
-  /** [[windowDims]] for the profiling tool (same bundle, same shapes). */
-  private[graft] def profileDims(s: SparkSession): graft.dns.BatchRunner.DimTables =
-    windowDims(s)
-
   private def windowDims(s: SparkSession): graft.dns.BatchRunner.DimTables = {
     import s.implicits._
     val base = 167772160L // ip_to_long("10.0.0.0")

@@ -67,51 +67,36 @@ object BatchRunner {
     val stamp = lit(new java.sql.Timestamp(windowStartMs))
     def stamped(df: DataFrame): DataFrame = df.withColumn("accesstime", stamp)
 
-    // The six reports are composed CONCURRENTLY (optimization guide §2.6
-    // applied to the DRIVER): given the persisted fact set each report's
-    // build — catalyst analysis of its plan plus any dim collect /
-    // interval-index broadcast it needs — is independent of the others,
-    // so a window pays max(report build) instead of the sum. Profiled at
-    // sf0.1 the serial build is ~0.45 s of pure driver time per window
-    // (topDetail alone ~0.2 s), about a third of the q68 lane. The pool
-    // is CALL-TIME so Spark's thread-local job group/description are
-    // inherited (the [[graft.operators.NgramLm.train]] / Sinks.inParallel
-    // pattern); plans, rows and column order are byte-identical to the
-    // sequential build — only the composition wall changes.
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(6)
-    try {
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      val clearF = Future(stamped(Reports.qps(enriched, windowSec.toInt)))
-      val trendF = Future(stamped(Reports.trendAgg(enriched, trendThreshold)))
-      // the full dns_flow_top shape: top-K + Tuple2Es enrichment (protocol
-      // strip, inNet, business attrs, auth-domain attrs, geo counters) —
-      // every step an index probe or broadcast join over the K-sized top set
-      val topDetailF = Future(stamped(Reports.topDetailEnriched(spark,
-        Reports.topDetail(enriched, dims.whitelist, topDetailK),
-        dims.geoDim, dims.authDomains, dims.mediaRules, dims.businessRules)))
-      val ratiosF = Future(stamped(
-        Reports.requestTypeRatio(enriched).withColumn("kind", lit("request"))
-          .unionByName(Reports.responseCodeRatio(enriched)
-            .withColumnRenamed("responseCode", "requestType")
-            .withColumn("requestType", col("requestType").cast("string"))
-            .withColumn("kind", lit("code")))))
-      val perCodeTopF =
-        Future(stamped(Reports.perCodeTopK(enriched, "domain", perCodeK)))
-      val topUsersF = Future(stamped(Reports.topUsers(
-        Dims.enrichUser(enriched, dims.users, dims.userInfo),
-        minResolver = topUserMinResolver)))
-      ReportSet(
-        facts = enriched,
-        clear = Await.result(clearF, graft.sinks.Sinks.DriverPoolTimeout),
-        trend = Await.result(trendF, graft.sinks.Sinks.DriverPoolTimeout),
-        topDetail =
-          Await.result(topDetailF, graft.sinks.Sinks.DriverPoolTimeout),
-        ratios = Await.result(ratiosF, graft.sinks.Sinks.DriverPoolTimeout),
-        perCodeTop =
-          Await.result(perCodeTopF, graft.sinks.Sinks.DriverPoolTimeout),
-        topUsers =
-          Await.result(topUsersF, graft.sinks.Sinks.DriverPoolTimeout))
-    } finally { pool.shutdown() }
+    // The six reports are composed concurrently: given the persisted fact
+    // set each report's build (catalyst analysis of its plan plus any dim
+    // collect / interval-index broadcast it needs) is independent of the
+    // others, so a window pays max(report build) instead of the sum.
+    // Profiled at sf0.1 the serial build is ~0.45 s of pure driver time
+    // per window (topDetail alone ~0.2 s), about a third of the q68 lane.
+    // Plans, rows and column order are byte-identical to the sequential
+    // build; only the composition wall changes.
+    val Seq(clear, trend, topDetail, ratios, perCodeTop, topUsers) =
+      graft.DriverPool.run(6)(Seq[() => DataFrame](
+        () => stamped(Reports.qps(enriched, windowSec.toInt)),
+        () => stamped(Reports.trendAgg(enriched, trendThreshold)),
+        // the full dns_flow_top shape: top-K + Tuple2Es enrichment
+        // (protocol strip, inNet, business attrs, auth-domain attrs, geo
+        // counters) — every step an index probe or broadcast join over the
+        // K-sized top set
+        () => stamped(Reports.topDetailEnriched(spark,
+          Reports.topDetail(enriched, dims.whitelist, topDetailK),
+          dims.geoDim, dims.authDomains, dims.mediaRules,
+          dims.businessRules)),
+        () => stamped(
+          Reports.requestTypeRatio(enriched).withColumn("kind", lit("request"))
+            .unionByName(Reports.responseCodeRatio(enriched)
+              .withColumnRenamed("responseCode", "requestType")
+              .withColumn("requestType", col("requestType").cast("string"))
+              .withColumn("kind", lit("code")))),
+        () => stamped(Reports.perCodeTopK(enriched, "domain", perCodeK)),
+        () => stamped(Reports.topUsers(
+          Dims.enrichUser(enriched, dims.users, dims.userInfo),
+          minResolver = topUserMinResolver))))
+    ReportSet(enriched, clear, trend, topDetail, ratios, perCodeTop, topUsers)
   }
 }

@@ -59,42 +59,24 @@ object NgramLm {
       .withColumn("ord", size(split(col("gram"), " ", -1)))
       .persist()
     try {
-      // the per-order caps are independent TakeOrdered jobs over the one
-      // persisted count frame — submit them CONCURRENTLY instead of as n
-      // sequential driver round-trips; results are per-order
-      // deterministic either way (the (cnt DESC, gram) total order), only
-      // the wall-clock changes
-      import scala.concurrent.{Await, ExecutionContext, Future}
       // total runs FIRST (alone): it materializes the persisted counts,
       // so the concurrent cap jobs read the cache instead of racing to
       // recompute the same partitions
       val total = counts.filter(col("ord") === 1)
         .agg(coalesce(sum(col("cnt")), lit(0L))).head.getLong(0)
       require(total > 0, "ngram training corpus has no tokens")
-      // a CALL-TIME pool, not ExecutionContext.Implicits.global (ADVICE
-      // r14): Spark localProperties (job group, scheduler pool,
-      // description) ride an InheritableThreadLocal copied at THREAD
-      // CREATION — the lazily-built, reused global-pool threads submit
-      // jobs outside the caller's job group, so cancelJobGroup stops
-      // cancelling training. A fresh fixed pool creates its workers
-      // inside this thread's execute() calls, inheriting them.
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(n)
-      try {
-        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-        val capsF = Future.sequence((1 to n).map { o =>
-          Future {
-            counts.filter(col("ord") === o && col("cnt") >= minCount)
-              .orderBy(col("cnt").desc, col("gram").asc)
-              .limit(maxGramsPerOrder)
-              .select(col("gram"), col("cnt"))
-              .collect()
-          }
-        })
-        val map = new java.util.HashMap[String, java.lang.Long]()
-        Await.result(capsF, scala.concurrent.duration.Duration.Inf)
-          .foreach(_.foreach(r => map.put(r.getString(0), r.getLong(1))))
-        new NgramLmTable(n, alpha, total, map)
-      } finally { pool.shutdown() }
+      // the per-order caps are independent TakeOrdered jobs over the one
+      // persisted count frame; results are per-order deterministic either
+      // way (the (cnt DESC, gram) total order)
+      val map = new java.util.HashMap[String, java.lang.Long]()
+      graft.DriverPool.run(n)((1 to n).map { o => () =>
+        counts.filter(col("ord") === o && col("cnt") >= minCount)
+          .orderBy(col("cnt").desc, col("gram").asc)
+          .limit(maxGramsPerOrder)
+          .select(col("gram"), col("cnt"))
+          .collect()
+      }).foreach(_.foreach(r => map.put(r.getString(0), r.getLong(1))))
+      new NgramLmTable(n, alpha, total, map)
     } finally { counts.unpersist(); () }
   }
 

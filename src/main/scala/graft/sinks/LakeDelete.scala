@@ -1517,26 +1517,14 @@ object LakeDelete {
     finally rd.close()
   }
 
-  /** [[footerRows]] for a batch of files, footers opened CONCURRENTLY
-    * from a bounded driver pool: every journaled mutation row-counts its
-    * staged outputs, and a sequential footer sweep serializes N
-    * filesystem round-trips the driver then sits in between jobs (each
-    * open is I/O-bound, ~5-20 ms local and far worse on object stores).
-    * Order-insensitive by construction — the result is keyed by path. */
+  /** [[footerRows]] for a batch of files, footers opened concurrently:
+    * every journaled mutation row-counts its staged outputs, and a
+    * sequential footer sweep serializes N filesystem round-trips the
+    * driver then sits in between jobs (each open is I/O-bound, ~5-20 ms
+    * local and far worse on object stores). Each open reads one file. */
   private[sinks] def footerRowsAll(fs: FileSystem,
       conf: org.apache.hadoop.conf.Configuration,
-      ps: Seq[Path]): Map[Path, Long] = {
-    if (ps.sizeIs <= 1) ps.map(p => p -> footerRows(fs, conf, p)).toMap
-    else {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      val pool = java.util.concurrent.Executors
-        .newFixedThreadPool(math.min(8, ps.size))
-      try {
-        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-        Await.result(
-          Future.sequence(ps.map(p => Future(p -> footerRows(fs, conf, p)))),
-          scala.concurrent.duration.Duration.Inf).toMap
-      } finally { pool.shutdown() }
-    }
-  }
+      ps: Seq[Path]): Map[Path, Long] =
+    ps.zip(graft.DriverPool.run(8)(ps.map(p => () => footerRows(fs, conf, p))))
+      .toMap
 }

@@ -2,6 +2,8 @@ package graft.sinks
 
 import org.apache.spark.sql.DataFrame
 
+import graft.DriverPool
+
 /** Sink layer (SURVEY §2.2).
   *
   * K1: the reference appends each report to ClickHouse through one JDBC
@@ -11,41 +13,6 @@ import org.apache.spark.sql.DataFrame
   * for tests/local runs.
   */
 object Sinks {
-
-  /** Generous FINITE bound on every driver-side pool Await (sink overlap,
-    * footer sweeps, staging copies): converts a hung FS call into an
-    * error instead of wedging the sink forever (VERDICT r16 #4). Far
-    * above any legitimate job — a 100 TB write that genuinely needs
-    * longer has bigger problems than this timeout. */
-  private[graft] val DriverPoolTimeout: scala.concurrent.duration.Duration =
-    scala.concurrent.duration.Duration(6, java.util.concurrent.TimeUnit.HOURS)
-
-  /** Overlap INDEPENDENT Spark actions from a bounded thread pool
-    * (optimization guide §2.6): Spark happily runs several jobs at once
-    * inside one application — independent writes submitted sequentially
-    * leave the cluster idle through each job's scheduling/commit tail and
-    * the driver idle through each job's planning. The pool is created PER
-    * CALL so Spark's thread-local job group/description are inherited by
-    * the worker threads (the [[graft.operators.NgramLm.train]] pattern —
-    * a shared global pool's threads would escape the caller's job group
-    * and survive cancelJobGroup). Bodies must target disjoint outputs;
-    * the first failure is rethrown after all bodies settle. */
-  private[graft] def inParallel(maxConcurrent: Int)
-                               (bodies: Seq[() => Unit]): Unit = {
-    if (bodies.sizeIs <= 1 || maxConcurrent <= 1) bodies.foreach(_())
-    else {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      val pool = java.util.concurrent.Executors
-        .newFixedThreadPool(math.min(maxConcurrent, bodies.size))
-      try {
-        implicit val ec: ExecutionContext =
-          ExecutionContext.fromExecutor(pool)
-        Await.result(Future.sequence(bodies.map(b => Future(b()))),
-          DriverPoolTimeout)
-        ()
-      } finally { pool.shutdown() }
-    }
-  }
 
   /** K1: JDBC append tuned for a columnar OLAP store (batch insert, single
     * writer connection, isolation NONE — ClickUtils.scala:24-27). */
@@ -80,9 +47,9 @@ object Sinks {
     * 983-1012); see LakeLayoutSpec. */
   def lakeAppend(tables: Map[String, DataFrame], root: String,
                  stampCol: String = "accesstime"): Unit =
-    // per-table appends target disjoint directories — overlap them
-    // (§2.6) so a six-sink window pays one commit tail, not six
-    inParallel(4)(tables.toSeq.sortBy(_._1).map { case (name, df) => () =>
+    // per-table appends target disjoint directories, so a six-sink
+    // window pays one commit tail, not six
+    DriverPool.run(4)(tables.toSeq.sortBy(_._1).map { case (name, df) => () =>
       parquetAppend(
         df.withColumn("win",
           org.apache.spark.sql.functions.date_format(
@@ -115,10 +82,9 @@ object Sinks {
                 sketchCols: Seq[String] = Nil,
                 bloomCols: Seq[String] = Nil,
                 sumCols: Seq[String] = Nil): Unit =
-    // tables are disjoint sink directories: overlap them like the
-    // windows within each (§2.6); total in-flight jobs stay bounded
-    // (outer 2 x inner 4)
-    inParallel(2)(tables.toSeq.sortBy(_._1).map { case (name, df) => () =>
+    // tables are disjoint sink directories; total in-flight jobs stay
+    // bounded (outer 2 x inner 4)
+    DriverPool.run(2)(tables.toSeq.sortBy(_._1).map { case (name, df) => () =>
       import org.apache.spark.sql.functions.{col, date_format}
       val stamped = df.withColumn("win",
         date_format(col(stampCol), WinFormat))
@@ -137,9 +103,8 @@ object Sinks {
           // metadata-sum queries exactly like batch zorderedWrite lakes.
           val cached = stamped.cache()
           // window writes target disjoint directories and are each
-          // deterministic — overlap them (§2.6) instead of paying every
-          // window's planning + commit tail sequentially
-          try inParallel(4)(
+          // deterministic
+          try DriverPool.run(4)(
             cached.select("win").distinct().collect().map(_.getString(0))
               .sorted.toSeq.map { w => () =>
                 zorderedWrite(cached.filter(col("win") === w).drop("win"),
@@ -850,36 +815,23 @@ object Sinks {
     // ---- STAGE all eligible windows first, bounded-parallel ------------
     // The per-window zorderedWrite (histogram + clustered write) is the
     // entire cost of a compaction; the swaps below are renames. Windows
-    // are independent, so their staging jobs submit concurrently from a
-    // small pool — a 100-window maintenance cycle pays max(window) + the
-    // scheduler's overlap, not sum(window). Spark's scheduler interleaves
-    // concurrent actions safely; crash mid-staging leaves only tmps the
-    // recovery pass discards.
+    // are independent, so a 100-window maintenance cycle pays max(window)
+    // + the scheduler's overlap, not sum(window). Crash mid-staging leaves
+    // only tmps the recovery pass discards.
     val toStage = dirsNow.filter { dir =>
       !recovered(dir.getName) && closed(dir) && {
         val before = parquets(dir).size
         before > filesPerPartition || !hasManifest(dir)
       }
     }
-    if (toStage.size > 1) {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(4, toStage.size))
-      try {
-        val futures = toStage.map { dir =>
-          pool.submit(new java.util.concurrent.Callable[Unit] {
-            override def call(): Unit = {
-              val tmp = new Path(tmpRoot, dir.getName)
-              if (fs.exists(tmp)) { fs.delete(tmp, true); () }
-              zorderedWrite(spark.read.parquet(dir.toString), colA, colB,
-                tmp.toString, filesPerPartition, bits,
-                sketchCols = sketchCols, bloomCols = bloomCols,
-                sumCols = sumCols)
-            }
-          })
-        }
-        futures.foreach(_.get()) // propagate the first staging failure
-      } finally pool.shutdown()
-    }
+    DriverPool.run(4)(toStage.map { dir => () =>
+      val tmp = new Path(tmpRoot, dir.getName)
+      if (fs.exists(tmp)) { fs.delete(tmp, true); () }
+      zorderedWrite(spark.read.parquet(dir.toString), colA, colB,
+        tmp.toString, filesPerPartition, bits,
+        sketchCols = sketchCols, bloomCols = bloomCols,
+        sumCols = sumCols)
+    })
 
     dirsNow.flatMap { dir =>
       val before = parquets(dir).size
@@ -889,8 +841,8 @@ object Sinks {
       else if (before <= filesPerPartition && hasManifest(dir)) None
       else {
         val tmp = new Path(tmpRoot, dir.getName)
-        // staged above for the multi-window case; single window (or a
-        // window that became eligible between the passes) stages here
+        // staged above; a window that became eligible between the
+        // passes stages here
         if (!(fs.exists(tmp) && hasManifest(tmp))) {
           if (fs.exists(tmp)) { fs.delete(tmp, true); () }
           // both zorderedWrite actions (histogram + write) finish before

@@ -566,22 +566,13 @@ object Snapshots {
         (p, new Path(new Path(destPath,
           graft.sinks.DeletionVectors.DvDirName), p.getName))
       }
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(8, math.max(1, copies.size)))
-    val bytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    try {
-      copies.map { case (src, dst) =>
-        pool.submit(new java.util.concurrent.Callable[Unit] {
-          override def call(): Unit = {
-            dfs.mkdirs(dst.getParent)
-            require(org.apache.hadoop.fs.FileUtil.copy(
-              fs, src, dfs, dst, false, conf),
-              s"export failed copying $src to $dst")
-            bytes.addAndGet(fs.getFileStatus(src).getLen); ()
-          }
-        })
-      }.foreach(_.get())
-    } finally pool.shutdown()
+    val bytes = graft.DriverPool.run(8)(copies.map { case (src, dst) => () =>
+      dfs.mkdirs(dst.getParent)
+      require(org.apache.hadoop.fs.FileUtil.copy(
+        fs, src, dfs, dst, false, conf),
+        s"export failed copying $src to $dst")
+      fs.getFileStatus(src).getLen
+    }).sum
     // layout + governance sidecars travel
     Seq(Z.BucketsName, graft.sinks.LakeConstraints.SidecarName)
       .foreach { name =>
@@ -593,7 +584,7 @@ object Snapshots {
       }
     Z.repairDirManifests(spark,
       snap.files.map(sf => new Path(destPath, sf.rel).getParent).distinct)
-    ExportReport(snap.files.size, bytes.get(), snap.dv.size)
+    ExportReport(snap.files.size, bytes, snap.dv.size)
   }
 
   final case class RestoreReport(filesKept: Int, filesRestored: Int,
@@ -735,9 +726,7 @@ object Snapshots {
 
     // stage resurrected files: copy trash → txn dir at the original rel
     // (copy, not move — other snapshots keep resolving the trash bytes).
-    // Copies are independent driver-side I/O over distinct targets —
-    // batched through a bounded pool like the footer sweeps
-    // ([[LakeDelete.footerRowsAll]]) instead of N serialized round-trips
+    // Copies are independent driver-side I/O over distinct targets
     val toStage = missing.map(sf => (sf.rel, sf.len, sf.mtime)) ++ dvMissing
     def stageOne(rel: String, len: Long, mtime: Long): Unit = {
       val src = resolve(fs, rootPath, tag, rel, len, mtime).getPath
@@ -746,30 +735,8 @@ object Snapshots {
       require(org.apache.hadoop.fs.FileUtil.copy(fs, src, fs, dst,
         false, true, conf), s"restore failed copying $src to $dst")
     }
-    if (toStage.sizeIs <= 1)
-      toStage.foreach { case (rel, len, mtime) => stageOne(rel, len, mtime) }
-    else {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      val pool = java.util.concurrent.Executors
-        .newFixedThreadPool(math.min(8, toStage.size))
-      try {
-        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-        Await.result(
-          Future.sequence(toStage.map { case (rel, len, mtime) =>
-            Future(stageOne(rel, len, mtime)) }),
-          graft.sinks.Sinks.DriverPoolTimeout)
-        ()
-      } catch {
-        case t: Throwable =>
-          // a failed stage must not race withConflictRetry's cleanup():
-          // in-flight copies could recreate partial files under the txn
-          // dir AFTER the recursive delete — drain the pool before the
-          // exception propagates (ADVICE r16)
-          pool.shutdownNow()
-          pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)
-          throw t
-      } finally { pool.shutdown() }
-    }
+    graft.DriverPool.run(8)(toStage.map { case (rel, len, mtime) =>
+      () => stageOne(rel, len, mtime) })
 
     LakeDelete.stagedHook.get()()
     LakeDelete.commitStaged(spark, fs, rootPath, txnRel,

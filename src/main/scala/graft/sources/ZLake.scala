@@ -550,35 +550,18 @@ object ZLake {
     // and the query-time rewrite bails for files it cannot prove all-null.
     // the stats pass is a CLUSTER job, the envelope harvest DRIVER-side
     // footer I/O over the same (already-written) files — independent, so
-    // they overlap (§2.6): the footer sweep hides entirely behind the
-    // stats job's runtime instead of serializing after it (the sweep is
-    // the expensive half on object stores)
-    // blocking{}: envelopesAll holds a global-pool thread through its own
-    // internal Await — mark it so the global pool can compensate instead
-    // of starving other users for the sweep's duration (ADVICE r16)
-    val envsF = scala.concurrent.Future(
-      scala.concurrent.blocking { envelopesAll(files, conf) })(
-      scala.concurrent.ExecutionContext.global)
-    // a writer that already computed the per-file stats in its own layout
-    // pass (zWriteWith's fused histogram+stats job) hands them in and the
-    // output files are never re-read — the stats job runs only for callers
-    // without that fusion (bucketedLakeWrite, foreign-file manifests)
-    val statsByFile =
-      try precomputedStats.getOrElse(statsPass(
+    // the footer sweep hides behind the stats job's runtime instead of
+    // serializing after it (the sweep is the expensive half on object
+    // stores). A writer that already computed the per-file stats in its
+    // own layout pass (zWriteWith's fused histogram+stats job) hands them
+    // in and the output files are never re-read — the stats job runs only
+    // for callers without that fusion (bucketedLakeWrite, foreign-file
+    // manifests)
+    val (envs, statsByFile) = graft.DriverPool.pair(
+      () => envelopesAll(files, conf),
+      () => precomputedStats.getOrElse(statsPass(
         spark.read.parquet(path).drop(partitionColsOf(files): _*), schema,
-        sketchCols, sketchM, bloomCols, bloomBits, bloomHashes, sumCols))
-      catch {
-        case t: Throwable =>
-          // drain the footer sweep before the stats failure propagates:
-          // its background I/O should stop with the operation, and its
-          // own error (if any) must not be silently dropped (ADVICE r16)
-          try scala.concurrent.Await.ready(envsF,
-            graft.sinks.Sinks.DriverPoolTimeout)
-          catch { case _: Throwable => () }
-          throw t
-      }
-    val envs = scala.concurrent.Await.result(envsF,
-      graft.sinks.Sinks.DriverPoolTimeout)
+        sketchCols, sketchM, bloomCols, bloomBits, bloomHashes, sumCols)))
     files.groupBy(_._1.getPath.getParent).foreach { case (dir, inDir) =>
       val entries = inDir.map { case (st, parts) =>
         val env = envs(st.getPath)
@@ -591,31 +574,16 @@ object ZLake {
     }
   }
 
-  /** [[envelopeOf]] for a batch of files, footers opened CONCURRENTLY
-    * from a bounded driver pool: the manifest write's per-file envelope
-    * harvest is driver-side I/O (one footer open per file, ~5-20 ms
-    * local, worse on object stores) and was swept sequentially —
-    * serializing N round-trips between the write job and the stats job.
-    * Keyed by path; fail-loud like the sequential write path was. */
+  /** [[envelopeOf]] for a batch of files, footers opened concurrently:
+    * the manifest write's per-file envelope harvest is driver-side I/O
+    * (one footer open per file, ~5-20 ms local, worse on object stores),
+    * and each open reads one file. Keyed by path; fail-loud like the
+    * sequential write path was. */
   private def envelopesAll(
       files: Seq[(FileStatus, Seq[(String, String)])],
-      conf: org.apache.hadoop.conf.Configuration): Map[Path, FileEnvelope] = {
-    if (files.sizeIs <= 1)
-      files.map { case (st, parts) =>
-        st.getPath -> envelopeOf(st, parts, conf) }.toMap
-    else {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      val pool = java.util.concurrent.Executors
-        .newFixedThreadPool(math.min(8, files.size))
-      try {
-        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-        Await.result(
-          Future.sequence(files.map { case (st, parts) =>
-            Future(st.getPath -> envelopeOf(st, parts, conf)) }),
-          graft.sinks.Sinks.DriverPoolTimeout).toMap
-      } finally { pool.shutdown() }
-    }
-  }
+      conf: org.apache.hadoop.conf.Configuration): Map[Path, FileEnvelope] =
+    graft.DriverPool.run(8)(files.map { case (st, parts) =>
+      () => st.getPath -> envelopeOf(st, parts, conf) }).toMap
 
   /** ONE distributed pass over `df` computing per-source-file manifest
     * stats (HLL registers, blooms, exact decimal sums), keyed by the file's
@@ -749,63 +717,32 @@ object ZLake {
         }
       }
     }
-    // every pending dir's FRESH footer envelopes harvest on a driver-side
-    // future while the stats jobs run on the cluster — independent inputs
-    // (the files are already written), so the footer sweep hides behind
-    // the stats job instead of serializing after it inside the per-dir
-    // loop below (§2.6)
-    val freshEnvsF = scala.concurrent.Future(
-      scala.concurrent.blocking { envelopesAll(
-        pend.toSeq.flatMap(_.fresh).map(st => (st, Nil)), conf) })(
-      scala.concurrent.ExecutionContext.global)
     // one stats job per distinct layout, across every pending dir's fresh
     // files (explicit merged schema: an evolved file missing a stats
     // column reads NULL, contributing nothing — as the per-dir pass did);
-    // distinct layouts are INDEPENDENT jobs over disjoint file sets —
-    // submitted concurrently (call-time pool so the caller's job
-    // group/description are inherited, the inParallel pattern)
+    // distinct layouts are INDEPENDENT jobs over disjoint file sets
     val layoutGroups = pend.toSeq.filter(p =>
         p.fresh.nonEmpty && !p.layout.isEmpty)
       .groupBy(_.layout).toSeq
-    val statsByLayout =
-      try {
-        def statsOf(lay: Layout, ps: Seq[Pend]) = {
-          val paths = ps.flatMap(_.fresh).map(_.getPath.toString)
-          val schema = ps.map(_.man.schema).reduce { (a, b) =>
-            StructType(a.fields ++
-              b.fields.filterNot(f => a.fieldNames.contains(f.name)))
-          }
-          lay -> statsPass(spark.read.schema(schema).parquet(paths: _*),
-            schema, lay.sketchCols, lay.sketchM, lay.bloomCols, lay.bloomBits,
-            lay.bloomHashes, lay.sumCols)
-        }
-        if (layoutGroups.sizeIs <= 1)
-          layoutGroups.map { case (lay, ps) => statsOf(lay, ps) }.toMap
-        else {
-          import scala.concurrent.{Await, ExecutionContext, Future}
-          val pool = java.util.concurrent.Executors
-            .newFixedThreadPool(math.min(4, layoutGroups.size))
-          try {
-            implicit val ec: ExecutionContext =
-              ExecutionContext.fromExecutor(pool)
-            Await.result(
-              Future.sequence(layoutGroups.map { case (lay, ps) =>
-                Future(statsOf(lay, ps)) }),
-              graft.sinks.Sinks.DriverPoolTimeout).toMap
-          } finally { pool.shutdown() }
-        }
-      } catch {
-        case t: Throwable =>
-          // drain the concurrent footer sweep before the stats failure
-          // propagates — no orphaned background I/O, no swallowed error
-          // from the sweep itself (ADVICE r16)
-          try scala.concurrent.Await.ready(freshEnvsF,
-            graft.sinks.Sinks.DriverPoolTimeout)
-          catch { case _: Throwable => () }
-          throw t
+    def statsOf(lay: Layout, ps: Seq[Pend]) = {
+      val paths = ps.flatMap(_.fresh).map(_.getPath.toString)
+      val schema = ps.map(_.man.schema).reduce { (a, b) =>
+        StructType(a.fields ++
+          b.fields.filterNot(f => a.fieldNames.contains(f.name)))
       }
-    val freshEnvsAll = scala.concurrent.Await.result(freshEnvsF,
-      graft.sinks.Sinks.DriverPoolTimeout)
+      lay -> statsPass(spark.read.schema(schema).parquet(paths: _*),
+        schema, lay.sketchCols, lay.sketchM, lay.bloomCols, lay.bloomBits,
+        lay.bloomHashes, lay.sumCols)
+    }
+    // every pending dir's FRESH footer envelopes harvest driver-side while
+    // the stats jobs run on the cluster — independent inputs (the files
+    // are already written), so the footer sweep hides behind the stats
+    // jobs instead of serializing after them inside the per-dir loop below
+    val (freshEnvsAll, statsByLayout) = graft.DriverPool.pair(
+      () => envelopesAll(pend.toSeq.flatMap(_.fresh).map(st => (st, Nil)),
+        conf),
+      () => graft.DriverPool.run(4)(layoutGroups.map { case (lay, ps) =>
+        () => statsOf(lay, ps) }).toMap)
     pend.foreach { p =>
       val fs = p.dir.getFileSystem(conf)
       val stats = statsByLayout.getOrElse(p.layout,

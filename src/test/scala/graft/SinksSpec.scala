@@ -41,29 +41,6 @@ class SinksSpec extends AnyFunSuite with SparkSpec {
     assert(back.agg(sum("resolver")).head().getLong(0) == 16L)
   }
 
-  test("inParallel runs every body exactly once and rethrows a failure") {
-    // r16: the §2.6 overlap helper behind lakeWrite/lakeAppend and the
-    // bench fixtures — pin the contract the callers rely on: all bodies
-    // run (once each), and one body's failure surfaces after the batch
-    val ran = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    graft.sinks.Sinks.inParallel(3)((0 until 7).map(i => () => {
-      assert(ran.add(i), s"body $i ran twice"); ()
-    }))
-    assert(ran.size == 7)
-    val boom = intercept[Exception] {
-      graft.sinks.Sinks.inParallel(2)(Seq(
-        () => (), () => throw new IllegalStateException("body failed")))
-    }
-    def causes(t: Throwable): Seq[String] =
-      if (t == null) Nil else t.getMessage +: causes(t.getCause)
-    assert(causes(boom).exists(m => m != null && m.contains("body failed")))
-    // degenerate shapes: single body and zero bodies run inline
-    val one = new java.util.concurrent.atomic.AtomicInteger(0)
-    graft.sinks.Sinks.inParallel(4)(Seq(() => { one.incrementAndGet(); () }))
-    graft.sinks.Sinks.inParallel(4)(Nil)
-    assert(one.get() == 1)
-  }
-
   test("fused z-write stats equal the separate stats job byte-for-byte") {
     // r17: zorderedWrite computes manifest sketches/blooms/sums as
     // per-z-bucket partials in the histogram job (3 full reads → 2) and

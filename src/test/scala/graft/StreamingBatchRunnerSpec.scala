@@ -63,15 +63,17 @@ class StreamingBatchRunnerSpec extends AnyFunSuite with SparkSpec {
     assert(results.contains("top_detail") && results.contains("top_users"))
   }
 
-  test("kill-restart over two windows lands all six sink tables exactly once") {
-    // The full production composition: file source → foreachBatch →
-    // BatchRunner.run (window derived from the batch's own timestamps) →
-    // Sinks.lakeWrite. The query is KILLED after window 2's sinks are
-    // written but before its epoch commits; on restart the epoch replays
-    // and the window-keyed dynamic partition overwrite converges — every
-    // table ends with exactly one copy of each window, byte-identical to
-    // a direct batch run of the same lines.
+  /** The full production composition: file source → foreachBatch →
+    * BatchRunner.run (window derived from the batch's own timestamps) →
+    * Sinks.lakeWrite. The query is KILLED during window 2's epoch — after
+    * its sinks are written (`crashIn = None`) or by `crashIn`'s own write
+    * failing while its siblings are mid-write — and on restart the epoch
+    * replays and the window-keyed dynamic partition overwrite converges:
+    * every table ends with exactly one copy of each window, row-for-row
+    * a direct batch run of the same lines. */
+  private def killRestart(crashIn: Option[String]): Unit = {
     import graft.sinks.Sinks
+    import StreamingBatchRunnerSpec.failing
     val inDir = java.nio.file.Files.createTempDirectory("graft-kr-in").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft-kr-ck").toString
     val root = java.nio.file.Files.createTempDirectory("graft-kr-lake").toString
@@ -80,10 +82,21 @@ class StreamingBatchRunnerSpec extends AnyFunSuite with SparkSpec {
       s"""{"Domain":"$dom","Timestamp":$ts,"ServerIP":"218.108.248.200","ClientIP":"30.250.11.7","QR":true,"Type":"A","ResponseCode":$code,"Answers":[{"Type":"A","Value":"115.238.23.2"}]}"""
     val w1Lines = Seq(line(windowStart + 100, "www.taobao.com", 0),
       line(windowStart + 200, "a.example.com", 3))
-    val w2Lines = Seq(line(w2 + 100, "b.example.com", 0))
+    // the whitelisted domain gives top_detail a window-2 row to fail on
+    val w2Lines = Seq(line(w2 + 100, "b.example.com", 0),
+      line(w2 + 200, "www.taobao.com", 0))
     def writeFile(name: String, lines: Seq[String]): Unit =
       java.nio.file.Files.write(java.nio.file.Paths.get(inDir, name),
         lines.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    // every row of the crashing table's write fails while `failing` is set
+    // (after a pause, so the sibling writes are under way)
+    val failWrite = udf { (_: java.sql.Timestamp) =>
+      if (failing.get()) {
+        Thread.sleep(200)
+        throw new IllegalStateException("injected sink-write failure")
+      }
+      true
+    }.asNondeterministic()
 
     val failOnce = new java.util.concurrent.atomic.AtomicBoolean(true)
     def startQuery() = StreamRunner.reportEvery(
@@ -94,8 +107,16 @@ class StreamingBatchRunnerSpec extends AnyFunSuite with SparkSpec {
       val ws = minTs / 300000L * 300000L
       val rs = BatchRunner.run(spark, batch, dims, ws, trendThreshold = 0L,
         topUserMinResolver = 0L)
-      try Sinks.lakeWrite(rs.all, root) finally rs.unpersist()
-      if (ws == w2 && failOnce.getAndSet(false))
+      val crash = ws == w2 && failOnce.getAndSet(false)
+      val tables = crashIn match {
+        case Some(t) if crash =>
+          failing.set(true)
+          rs.all.updated(t, rs.all(t).filter(failWrite(col("accesstime"))))
+        case _ => rs.all
+      }
+      try Sinks.lakeWrite(tables, root)
+      finally { failing.set(false); rs.unpersist() }
+      if (crash)
         throw new RuntimeException("crash after sink write, before commit")
     }.start()
 
@@ -106,6 +127,13 @@ class StreamingBatchRunnerSpec extends AnyFunSuite with SparkSpec {
     try { q1.processAllAvailable(); q1.stop() }
     catch { case _: Throwable => () } // the injected crash kills the query
     assert(!q1.isActive && !failOnce.get(), "crash must have fired")
+    def messages(t: Throwable): Seq[String] = if (t == null) Nil
+      else String.valueOf(t.getMessage) +: messages(t.getCause)
+    val crashMessage = if (crashIn.isEmpty) "crash after sink write"
+      else "injected sink-write failure"
+    assert(q1.exception.exists(e =>
+      messages(e).exists(_.contains(crashMessage))),
+      s"the query must have died of the injected crash: ${q1.exception}")
 
     val q2 = startQuery() // same checkpoint: w2's epoch replays, w1's doesn't
     try q2.processAllAvailable() finally q2.stop()
@@ -128,4 +156,21 @@ class StreamingBatchRunnerSpec extends AnyFunSuite with SparkSpec {
     assert(spark.read.parquet(s"$root/clear").select("win").distinct()
       .as[String].collect().toSet == Set("20210325_0010", "20210325_0015"))
   }
+
+  test("kill-restart over two windows lands all six sink tables exactly once") {
+    killRestart(crashIn = None)
+  }
+
+  Seq("clear", "trend", "top_detail", "ratios", "per_code_top", "top_users")
+    .foreach { table =>
+      test(s"kill-restart: the $table write fails mid-epoch") {
+        killRestart(crashIn = Some(table))
+      }
+    }
+}
+
+object StreamingBatchRunnerSpec {
+  /** Read inside tasks (local mode: the same JVM), so it is a static flag
+    * rather than a value a closure would capture by copy. */
+  val failing = new java.util.concurrent.atomic.AtomicBoolean(false)
 }
