@@ -496,7 +496,7 @@ object QueriesDns {
         }.toDF("min_long_ip", "max_long_ip", "continent", "country", "province", "city",
           "district", "operator", "admin_code", "en_name", "iso_code", "lon", "lat")
         val fact = T(s, dir, "events").select((col("user_id") % 300).as("pt"))
-        Dims.enrichGeoFull(s, fact, geo, col("pt"))
+        Dims.enrichGeo(s, fact, geo, col("pt"))
           .withColumn("geo_region", Dims.geoRegionStruct)
           .select(col("pt"), col("geo_region.*"))
           .groupBy(

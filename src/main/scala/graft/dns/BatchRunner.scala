@@ -6,9 +6,9 @@ import org.apache.spark.storage.StorageLevel
 
 /** The reference's per-window `call()` (DnsRptCH.scala:981-1161) as one pure
   * function: raw lines + dimension tables in, the six sink-table DataFrames
-  * out. Batch, streaming (`foreachBatch`) and backfill all call this — the
-  * reference's three divergent drivers (DnsRptCH / DnsRptOffline / UserRpt)
-  * collapse into one code path.
+  * out. Batch and streaming (`foreachBatch`) call this, and a backfill is
+  * this same function over a bounded input — the reference's three divergent
+  * drivers (DnsRptCH / DnsRptOffline / UserRpt) collapse into one code path.
   *
   * The parsed fact set is persisted MEMORY_AND_DISK once and reused by every
   * report (reference parity: DnsRptCH.scala:1070); callers release it with
@@ -58,7 +58,7 @@ object BatchRunner {
     // Every enrichment below is shuffle-free on the fact side: interval-index
     // probes + broadcast hash joins only (plan-asserted in BatchRunnerSpec).
     val enriched = Dims.enrichAuthDomain(
-      Dims.enrichInNetIndexed(spark,
+      Dims.enrichInNet(spark,
         Dims.enrichClientName(cleaned, dims.clientRules),
         dims.mediaRules, dims.businessRules),
       dims.authDomains)

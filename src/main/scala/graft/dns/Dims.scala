@@ -3,17 +3,17 @@ package graft.dns
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.{Functions => F}
-import graft.operators.{IntervalIndex, RangeJoin}
+import graft.operators.IntervalIndex
 
 /** Dimension enrichment layer (SURVEY §2.4, J1-J7).
   *
   * The reference collects each MySQL/Redis dimension to the driver and
   * linear-scans per record (DnsRptCH.scala:796-855, 927-930). Spark-native:
   * every dimension is a DataFrame (parquet/JDBC behind the same interface),
-  * small dims are broadcast, and interval dims go through either a broadcast
-  * range join (rule count ≤ ~10³) or the O(log n) [[IntervalIndex]] (the
-  * scale path, mirroring the reference's own binary-searched geo DB,
-  * IpSearch.java:78-127).
+  * small equi-keyed dims are broadcast, and every IP-range dim (J1, J2, J3,
+  * J5) goes through one path: a bounded driver-side collect into the O(log n)
+  * [[IntervalIndex]], probed per fact row (mirroring the reference's own
+  * binary-searched geo DB, IpSearch.java:78-127).
   */
 object Dims {
 
@@ -22,7 +22,7 @@ object Dims {
     * driver-side into the disjoint [[IntervalIndex]] — no window, no shuffle
     * of the fact side (the r1 windowed variant exchanged+sorted the whole
     * fact table on a unique per-row key; see VERDICT r1 "What's wrong" #2).
-    * [[RangeJoin.pointInInterval]] remains for dims that genuinely need
+    * [[graft.operators.RangeJoin.pointInInterval]] remains for dims that need
     * all-matches semantics. */
   def enrichClientName(fact: DataFrame, clientRules: DataFrame): DataFrame = {
     val dim = clientRules.select(col("min_long_ip"), col("max_long_ip"),
@@ -51,42 +51,21 @@ object Dims {
         "resourceProps" -> coalesce(col("resource_props"), lit("未知"))))
       .drop("__aipl", "resource_name", "resource_type", "resource_props")
 
-  /** J3, fallback path — NOT the default: prefer [[enrichInNetIndexed]],
-    * which probes one broadcast index per row with no join operator and a
-    * single fact scan. This variant exists ONLY for rule sets too large to
-    * collect to the driver ([[IntervalIndex.maxCollectedRules]]): it never
-    * materializes the dim driver-side, at the cost of a broadcast
-    * nested-loop semi+anti pair that scans the fact twice. Every default
-    * pipeline path (BatchRunner, reports) uses the indexed variant;
-    * InNetAndPathsSpec keeps this one equivalence-tested.
+  /** J3: aip ∈ (media ∪ business ranges) ⇒ inNet = resolver else 0. One
+    * broadcast index probe per row, no join operator and a single fact scan;
+    * the union reaches the driver through [[IntervalIndex.collectIndex]]'s
+    * bounded collect.
     *
-    * Semantics (both variants): aip ∈ (media ∪ business ranges) ⇒ inNet =
-    * resolver else 0. The reference's nested-loop precedence quirk (big
-    * table empty ⇒ small never consulted, DnsRptCH.scala:222-235) reduces
-    * to a union-membership test for all non-degenerate inputs; we implement
-    * the sane union semantics and document the divergence. */
-  def enrichInNet(fact: DataFrame, mediaRules: DataFrame,
+    * The reference's nested-loop precedence quirk (big table empty ⇒ small
+    * never consulted, DnsRptCH.scala:222-235) reduces to a union-membership
+    * test for all non-degenerate inputs; we implement the sane union
+    * semantics and document the divergence. */
+  def enrichInNet(spark: SparkSession, fact: DataFrame, mediaRules: DataFrame,
                   businessRules: DataFrame): DataFrame = {
-    val union = mediaRules.select(col("min_long_ip"), col("max_long_ip"))
-      .unionByName(businessRules.select(col("min_long_ip"), col("max_long_ip")))
-    val probed = fact.withColumn("__aipl", F.ip_to_long(col("aip")))
-    val cond = col("__aipl") >= col("min_long_ip") && col("__aipl") <= col("max_long_ip")
-    val matched = probed.join(broadcast(union), cond, "left_semi")
-      .withColumn("inNet", col("resolver"))
-    val unmatched = probed.join(broadcast(union), cond, "left_anti")
-      .withColumn("inNet", lit(0L))
-    matched.unionByName(unmatched).drop("__aipl")
-  }
-
-  /** J3, scale path: same semantics with a single broadcast predicate —
-    * one membership check per row, no join operator at all. */
-  def enrichInNetIndexed(spark: SparkSession, fact: DataFrame,
-                         mediaRules: DataFrame, businessRules: DataFrame): DataFrame = {
-    val rules = mediaRules.select("min_long_ip", "max_long_ip")
-      .unionByName(businessRules.select("min_long_ip", "max_long_ip"))
-      .collect().zipWithIndex
-      .map { case (r, i) => (r.getLong(0), r.getLong(1), 0L, i) }.toSeq
-    val idx = IntervalIndex.build(rules, lastWins = true)
+    val (idx, _) = IntervalIndex.collectIndex(
+      mediaRules.select("min_long_ip", "max_long_ip")
+        .unionByName(businessRules.select("min_long_ip", "max_long_ip")),
+      "min_long_ip", "max_long_ip", "min_long_ip", lastWins = true)
     val hit = IntervalIndex.lookupColumn(spark, idx)(F.ip_to_long(col("aip")))
     fact.withColumn("inNet", when(hit >= 0, col("resolver")).otherwise(0L))
   }
@@ -106,29 +85,20 @@ object Dims {
         "websiteType" -> coalesce(col("websiteType"), lit("未知")),
         "soft" -> coalesce(col("soft"), lit("未知"))))
 
-  /** J5/F7/P9: aip → geo attributes via the broadcast O(log n) interval
-    * index — the Spark equivalent of the reference's binary-searched binary
-    * geo DB (IpSearch.java:41-127). Unmatched → "未知". */
-  def enrichGeo(spark: SparkSession, fact: DataFrame, geoDim: DataFrame): DataFrame =
-    IntervalIndex.enrichAuto(spark, fact, F.ip_to_long(col("aip")), geoDim,
-        "min_long_ip", "max_long_ip", "min_long_ip", lastWins = false)
-      .withColumns(scala.collection.immutable.ListMap(
-        "operator" -> coalesce(col("operator"), lit("未知")),
-        "province" -> coalesce(col("province"), lit("未知"))))
-
-  /** F7 full surface: the 11-attribute geo record of the reference's
+  /** J5/F7/P9: `point` → the geo record of the reference's
     * `IpSearch.getRegionByIp` (IpSearch.java:188-209 — 大洲/continent,
     * 国家/country, 省份/province, 城市/city, 区县/district, 运营/operator,
-    * 区划/admin_code, 英文/en_name, 简码/iso_code, 经度/lon, 纬度/lat).
-    * Attaches every attribute column present on `geoDim`; unmatched fact rows
-    * keep nulls (reference: empty map). Same shuffle-free index probe as
-    * [[enrichGeo]]. */
-  def enrichGeoFull(spark: SparkSession, fact: DataFrame, geoDim: DataFrame,
-                    point: Column): DataFrame =
+    * 区划/admin_code, 英文/en_name, 简码/iso_code, 经度/lon, 纬度/lat) via the
+    * broadcast O(log n) interval index, the Spark equivalent of the
+    * reference's binary-searched geo DB (IpSearch.java:41-127). Attaches
+    * every attribute column present on `geoDim`; unmatched fact rows keep
+    * nulls (reference: empty map). */
+  def enrichGeo(spark: SparkSession, fact: DataFrame, geoDim: DataFrame,
+                point: Column): DataFrame =
     IntervalIndex.enrichAuto(spark, fact, point, geoDim,
       "min_long_ip", "max_long_ip", "min_long_ip", lastWins = false)
 
-  /** The canonical geo attribute order of [[enrichGeoFull]], as one struct
+  /** The canonical geo attribute order of [[enrichGeo]], as one struct
     * column (the Spark shape of the reference's attribute Map). */
   val geoAttrs: Seq[String] = Seq("continent", "country", "province", "city",
     "district", "operator", "admin_code", "en_name", "iso_code", "lon", "lat")

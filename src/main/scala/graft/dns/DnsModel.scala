@@ -27,16 +27,6 @@ final case class DnsRecord(
     resolver: Long,         // resolution count weight (1 per record)
     clientName: Int)        // client-type id from IP-range dim, default 5
 
-/** One answer in the raw JSON `Answers` array. */
-final case class DnsAnswer(Type: String, Value: String)
-
-/** Geo attributes from the interval geo DB (reference IpSearch.java:188-209
-  * returns 11 `|`-separated attrs; we model the ones reports consume plus
-  * coordinates). */
-final case class GeoInfo(
-    continent: String, country: String, province: String, city: String,
-    county: String, operator: String, adcode: String, lon: Double, lat: Double)
-
 object DnsModel {
 
   /** Schema of one raw JSON log line (reference field extraction,
@@ -53,47 +43,4 @@ object DnsModel {
     StructField("Answers", ArrayType(StructType(Seq(
       StructField("Type", StringType),
       StructField("Value", StringType)))))))
-
-  /** Client-IP rule dimension (reference `dns_client_detail`,
-    * DnsRptCH.scala:830-841): [minIp,maxIp] → clientTypeId. */
-  val clientRuleSchema: StructType = StructType(Seq(
-    StructField("min_long_ip", LongType, nullable = false),
-    StructField("max_long_ip", LongType, nullable = false),
-    StructField("client_type_id", IntegerType, nullable = false)))
-
-  /** Business-resource rule dimension (reference `dns_ip_segment_detail`,
-    * DnsRptCH.scala:796-809). */
-  val businessRuleSchema: StructType = StructType(Seq(
-    StructField("min_long_ip", LongType, nullable = false),
-    StructField("max_long_ip", LongType, nullable = false),
-    StructField("resource_name", StringType),
-    StructField("resource_type", StringType),
-    StructField("resource_props", StringType)))
-
-  /** In-net media ranges (reference `dns_media`, DnsRptCH.scala:814-825). */
-  val mediaRuleSchema: StructType = StructType(Seq(
-    StructField("min_long_ip", LongType, nullable = false),
-    StructField("max_long_ip", LongType, nullable = false),
-    StructField("media_type", StringType)))
-
-  /** Authoritative-domain company metadata (reference Redis hash
-    * `dns:dns-authDomain` → authDomainMsg, DnsRptCH.scala:146-200). */
-  val authDomainSchema: StructType = StructType(Seq(
-    StructField("authorityDomain", StringType, nullable = false),
-    StructField("companyName", StringType),
-    StructField("companyType", StringType),
-    StructField("websiteName", StringType),
-    StructField("websiteType", StringType),
-    StructField("soft", StringType)))
-
-  /** Geo interval dimension (replaces the binary qqzeng-ip-utf8.dat,
-    * IpSearch.java:41-105): [minIp,maxIp] → geo attributes. */
-  val geoRuleSchema: StructType = StructType(Seq(
-    StructField("min_long_ip", LongType, nullable = false),
-    StructField("max_long_ip", LongType, nullable = false),
-    StructField("continent", StringType), StructField("country", StringType),
-    StructField("province", StringType), StructField("city", StringType),
-    StructField("county", StringType), StructField("operator", StringType),
-    StructField("adcode", StringType),
-    StructField("lon", DoubleType), StructField("lat", DoubleType)))
 }

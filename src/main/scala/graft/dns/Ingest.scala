@@ -61,19 +61,15 @@ object Ingest {
     * error=1 iff rcode!=0 or no answers or aip=="0.0.0.0"
     * (DnsRptCH.scala:914-917, 964).
     *
-    * The random pick is a reproducibility bug, not a feature — we default to
-    * the FIRST A answer (deterministic; tests and the SQL oracle can
-    * reproduce it) and keep the random variant behind `randomPick` for
-    * bug-compat experiments.
+    * The random pick is a reproducibility bug, not a feature — we take the
+    * FIRST A answer (deterministic; tests and the SQL oracle can reproduce
+    * it).
     */
-  def withAnswerDerivation(df: DataFrame, randomPick: Boolean = false): DataFrame = {
+  def withAnswerDerivation(df: DataFrame): DataFrame = {
     val aRecords = filter(col("Answers"), a => a.getField("Type") === "A")
-    val pick =
-      if (randomPick)
-        element_at(aRecords, (rand() * size(aRecords)).cast("int") + 1)
-      else element_at(aRecords, 1)
     df.withColumn("aip",
-        when(col("Type") === "A" && size(aRecords) > 0, pick.getField("Value"))
+        when(col("Type") === "A" && size(aRecords) > 0,
+          element_at(aRecords, 1).getField("Value"))
           .otherwise(lit("0.0.0.0")))
       .withColumn("responseType",
         when(col("Type") === "A" && size(col("Answers")) > 0,

@@ -5,7 +5,10 @@ import org.apache.spark.sql.functions._
 import graft.functions.{Functions => F}
 import graft.operators.TopK
 
-/** The report suite (SURVEY §2.5 aggregations A1-A16 and §2.6 top-K T1-T6).
+/** The report suite (SURVEY §2.5 aggregations and §2.6 top-K): the reports
+  * behind graft's six sink tables and the user report. The reference's A3,
+  * A8-A12 and T4 reports are not among those tables; q40/q41/q49 gate only
+  * their SQL shape.
   *
   * Every report is a pure `DataFrame → DataFrame` so batch, streaming
   * (`foreachBatch`) and tests share one code path. The reference computes
@@ -49,12 +52,6 @@ object Reports {
   def requestTypeRatio(df: DataFrame): DataFrame =
     allAndPerClient(df, Seq(col("requestType")))(Seq(count(lit(1)).as("sampleNum")))
 
-  /** A3: response-type ratio (all + per-client). The reference salts the key
-    * by rand(0,100) then re-reduces (DnsRptCH.scala:747-768) — Catalyst's
-    * partial aggregation makes that redundant. */
-  def responseTypeRatio(df: DataFrame): DataFrame =
-    allAndPerClient(df, Seq(col("responseType")))(Seq(count(lit(1)).as("sampleNum")))
-
   /** A4: response-code ratio (all + per-client). DnsRptCH.scala:608-625. */
   def responseCodeRatio(df: DataFrame): DataFrame =
     allAndPerClient(df, Seq(col("responseCode")))(Seq(count(lit(1)).as("sampleNum")))
@@ -79,21 +76,6 @@ object Reports {
     df.groupBy(col("clientName"), col("clientIp"), col("domain"), col("aip"))
       .agg(sum(col("resolver")).as("resolver"), sum(col("error")).as("error"))
       .filter(col("clientName") === 1 && col("resolver") > minResolver)
-
-  /** A8: business rollup (all + per-client). DnsRptCH.scala:421-440. */
-  def businessRollup(df: DataFrame): DataFrame =
-    allAndPerClient(df,
-        Seq(col("resourceName"), col("resourceType"), col("resourceProps")))(
-      Seq(sum(col("resolver")).as("resolver")))
-
-  /** A9-A11: single-dimension counts (dnsIp / province / operator),
-    * all + per-client. DnsRptCH.scala:446-516. */
-  def dimensionCount(df: DataFrame, dim: String): DataFrame =
-    allAndPerClient(df, Seq(col(dim)))(Seq(count(lit(1)).as("sampleNum")))
-
-  /** A12: (clientIp, domain) counts. DnsRptCH.scala:112-122. */
-  def clientDomainCount(df: DataFrame): DataFrame =
-    df.groupBy(col("clientIp"), col("domain")).agg(count(lit(1)).as("cnt"))
 
   /** T1: global top-K detail with whitelist boost (DnsRptCH.scala:558-601).
     * Boost = +boostAmt resolver for whitelisted domains BEFORE the
@@ -140,7 +122,7 @@ object Reports {
     val stripped = top
       .withColumn("domain", F.strip_protocol(col("domain")))
       .withColumn("authorityDomain", F.authority_domain(col("domain")))
-    val withInNet = Dims.enrichInNetIndexed(spark, stripped, mediaRules, businessRules)
+    val withInNet = Dims.enrichInNet(spark, stripped, mediaRules, businessRules)
     val withBiz = Dims.enrichBusiness(withInNet, businessRules)
     val withAuth = withBiz.join(broadcast(authDim), Seq("authorityDomain"), "left")
       // single withColumns per group (each withColumn re-analyzes the
@@ -149,7 +131,7 @@ object Reports {
         "companyType" -> coalesce(col("companyType"), lit("未知")),
         "websiteType" -> coalesce(col("websiteType"), lit("未知"))))
     val geoAttrCols = geoDim.columns.filterNot(Set("min_long_ip", "max_long_ip"))
-    Dims.enrichGeoFull(spark, withAuth, geoDim, F.ip_to_long(col("aip")))
+    Dims.enrichGeo(spark, withAuth, geoDim, F.ip_to_long(col("aip")))
       .withColumns(scala.collection.immutable.ListMap(
         "abroadNum" ->
           when(col("country").isNotNull && col("country") =!= "中国",
@@ -188,17 +170,6 @@ object Reports {
       Seq(count(lit(1)).as("cnt")))
     TopK.perGroup(counted, k, Seq(col("clientName"), col("responseCode")),
       Seq(col("cnt").desc, col(dim).asc))
-  }
-
-  /** T4: per-code top-K AUTHORITY domains — rolls [[perCodeTopK]] output up
-    * by authority_domain then ranks again. DnsRptCH.scala:656-667. */
-  def perCodeTopAuthority(df: DataFrame, k: Int = 5000): DataFrame = {
-    val counted = allAndPerClient(
-        df.withColumn("authorityDomain", F.authority_domain(col("domain"))),
-        Seq(col("responseCode"), col("authorityDomain")))(
-      Seq(count(lit(1)).as("cnt")))
-    TopK.perGroup(counted, k, Seq(col("clientName"), col("responseCode")),
-      Seq(col("cnt").desc, col("authorityDomain").asc))
   }
 
   /** A14/T6: per-user top-N domains as a RANK-ORDERED array-of-struct

@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 
 /** Broadcast sorted-interval index with O(log n) point lookup.
   *
-  * This is the scale path for the reference's IP-range enrichments (SURVEY
-  * J1/J2/J3/J5): a BroadcastNestedLoopJoin on `point BETWEEN lo AND hi` costs
+  * Every IP-range enrichment in [[graft.dns.Dims]] (SURVEY J1/J2/J3/J5) goes
+  * through it: a BroadcastNestedLoopJoin on `point BETWEEN lo AND hi` costs
   * O(rules) comparisons per fact row — fine at 10 rules, fatal at 10⁵ rules ×
   * 100 TB of facts. The reference itself recognises this for its geo database
   * (binary search over a prefix-bucketed interval file, IpSearch.java:78-127);
@@ -88,54 +88,24 @@ object IntervalIndex {
     * driver — when a caller hands a fact-sized table to the dim parameter. */
   val maxCollectedRules: Int = 2000000
 
-  /** Collect `dim` with a hard row cap: `limit(max+1).collect()` is one
-    * bounded pass (never materializes more than max+1 rows driver-side), and
-    * exceeding the cap raises a descriptive error naming the fallback. */
-  private def guardedCollect(dim: DataFrame, maxRules: Int): Array[org.apache.spark.sql.Row] = {
-    val rows = dim.limit(maxRules + 1).collect()
+  /** The bounded driver-side collect behind [[enrichAuto]] and
+    * `Dims.enrichInNet`: `coalesce(1).limit(max+1).collect()` reads the dim
+    * in a single job (a bare `limit` over a multi-file dim scans one
+    * partition, then re-runs for the rest) and never holds more than max+1
+    * rows. Rule ids are the collected row positions; the rows come back so a
+    * caller can attach attributes by the same ids. Exceeding the cap or a
+    * null lo/hi/priority bound fails with a descriptive error instead of an
+    * OOM or an opaque row-access error. */
+  private[graft] def collectIndex(dim: DataFrame, loCol: String, hiCol: String,
+                                  priorityCol: String, lastWins: Boolean,
+                                  maxRules: Int = maxCollectedRules)
+      : (IntervalIndex, Array[org.apache.spark.sql.Row]) = {
+    val rows = dim.coalesce(1).limit(maxRules + 1).collect()
     require(rows.length <= maxRules,
-      s"IntervalIndex: dimension has more than $maxRules rows — this operator " +
-        "collects the dim to the driver and is meant for rule tables, not facts. " +
-        "Use RangeJoin.pointInInterval (distributed range join) for large dims.")
-    rows
-  }
-
-  /** End-to-end enrichment: compute rule id for `point`, then broadcast-hash
-    * join the rule attribute table on its `idCol`. Left-outer: unmatched fact
-    * rows keep nulls for dim attributes (caller applies `coalesce` defaults). */
-  def enrich(spark: SparkSession, fact: DataFrame, point: Column,
-             dim: DataFrame, loCol: String, hiCol: String, idCol: String,
-             priorityCol: String, lastWins: Boolean,
-             maxRules: Int = maxCollectedRules): DataFrame = {
-    val rules = guardedCollect(
-        dim.select(col(loCol).cast("long"), col(hiCol).cast("long"),
-          col(priorityCol).cast("long"), col(idCol).cast("int")), maxRules)
-      .map { r =>
-        require(!r.isNullAt(0) && !r.isNullAt(1) && !r.isNullAt(2) && !r.isNullAt(3),
-          s"IntervalIndex: dim row has a null $loCol/$hiCol/$priorityCol/$idCol " +
-            s"— filter null-bound rules before building the index ($r)")
-        (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3))
-      }.toSeq
-    val idx = build(rules, lastWins)
-    val dimSmall = dim.drop(loCol, hiCol, priorityCol)
-    fact.withColumn("__rule_id", lookupColumn(spark, idx)(point))
-      .join(broadcast(dimSmall), col("__rule_id") === dimSmall(idCol), "left")
-      .drop("__rule_id")
-  }
-
-  /** Like [[enrich]] but synthesizes rule ids from the collected row order —
-    * for dims without a unique id column. The dim is collected ONCE so the
-    * index and the attribute table cannot drift when the dim plan's row order
-    * is nondeterministic. This is the default J1/J2 path: no window, no
-    * shuffle, no NLJ on the fact side — the fact keeps its partitioning and
-    * pays one O(log rules) probe per row plus a broadcast hash join against
-    * the (tiny) attribute table. */
-  def enrichAuto(spark: SparkSession, fact: DataFrame, point: Column,
-                 dim: DataFrame, loCol: String, hiCol: String,
-                 priorityCol: String, lastWins: Boolean,
-                 maxRules: Int = maxCollectedRules): DataFrame = {
-    import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
-    val rows = guardedCollect(dim, maxRules)
+      s"IntervalIndex: dimension has more than $maxRules rows (maxCollectedRules) " +
+        "— this operator collects the dim to the driver and is meant for rule " +
+        "tables, not facts. Filter or aggregate the dim down to a rule table " +
+        "before enriching with it.")
     val li = dim.schema.fieldIndex(loCol)
     val hiI = dim.schema.fieldIndex(hiCol)
     val pi = dim.schema.fieldIndex(priorityCol)
@@ -149,7 +119,24 @@ object IntervalIndex {
     val rules = rows.toSeq.zipWithIndex.map { case (r, i) =>
       (lng(r, li), lng(r, hiI), lng(r, pi), i)
     }
-    val idx = build(rules, lastWins)
+    (build(rules, lastWins), rows)
+  }
+
+  /** End-to-end enrichment: compute the winning rule id for `point`, then
+    * broadcast-hash join the collected rule rows on that id. Rule ids are
+    * synthesized from the collected row order, so dims need no unique id
+    * column, and the dim is collected ONCE so the index and the attribute
+    * table cannot drift when the dim plan's row order is nondeterministic.
+    * No window, no shuffle, no NLJ on the fact side: the fact keeps its
+    * partitioning and pays one O(log rules) probe per row. Left-outer:
+    * unmatched fact rows keep nulls for dim attributes (callers apply
+    * `coalesce` defaults). */
+  def enrichAuto(spark: SparkSession, fact: DataFrame, point: Column,
+                 dim: DataFrame, loCol: String, hiCol: String,
+                 priorityCol: String, lastWins: Boolean,
+                 maxRules: Int = maxCollectedRules): DataFrame = {
+    import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+    val (idx, rows) = collectIndex(dim, loCol, hiCol, priorityCol, lastWins, maxRules)
     val attrSchema = StructType(dim.schema.fields :+
       StructField("__rule_id", IntegerType, nullable = false))
     val attrRows = rows.zipWithIndex.map { case (r, i) =>

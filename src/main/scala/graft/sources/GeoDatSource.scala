@@ -17,7 +17,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * {{{ spark.read.format("graft-geo").load("/path/qqzeng-ip-utf8.dat") }}}
   *
   * → `(start_ip, end_ip, continent, …, lat)` rows, ready for
-  * [[graft.dns.Dims.enrichGeoFull]] or the BETWEEN-join strategy. The
+  * [[graft.dns.Dims.enrichGeo]] or the BETWEEN-join strategy. The
   * reference instead loads this file as an opaque per-executor singleton
   * (IpSearch.java:20-28) — invisible to the engine, unqueryable, re-read by
   * every JVM. As a table the dim participates in pruning, pushdown and

@@ -10,11 +10,12 @@ import org.apache.spark.sql.Row
   * The reference abuses a DStream on an empty HDFS dir as a 300-second clock
   * (DnsRptCH.scala:1213-1219) and re-reads files named for the lagging 5-min
   * window. Spark-native: one Structured Streaming file source discovers
-  * files itself, a watermark bounds lateness, and the SAME batch report
-  * functions run inside `foreachBatch` — one code path for streaming,
-  * backfill (DnsRptOffline parity) and tests. Checkpointing upgrades the
-  * reference's at-most-once (skipped batches, swallowed failures,
-  * DnsRptCH.scala:1146-1161) to exactly-once file tracking for free.
+  * files itself and the SAME batch function, [[graft.dns.BatchRunner.run]],
+  * runs inside `foreachBatch`. A backfill (DnsRptOffline parity) is
+  * `BatchRunner.run` over a bounded input, so streaming, backfill and tests
+  * share one code path. Checkpointing upgrades the reference's at-most-once
+  * (skipped batches, swallowed failures, DnsRptCH.scala:1146-1161) to
+  * exactly-once file tracking for free.
   */
 object StreamRunner {
 
@@ -24,15 +25,6 @@ object StreamRunner {
     spark.readStream
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .text(path).toDF("value")
-
-  /** 5-minute tumbling event-time window counts with 5-minute lateness —
-    * the reference's window/lag geometry (DnsRptCH.scala:988-994, 888). */
-  def windowedCounts(facts: DataFrame,
-                     windowDur: String = "5 minutes",
-                     watermarkDelay: String = "5 minutes"): DataFrame =
-    facts.withWatermark("ts", watermarkDelay)
-      .groupBy(window(col("ts"), windowDur), col("clientName"))
-      .agg(count(lit(1)).as("sampleNum"), sum(col("error")).as("errorNum"))
 
   /** Periodic lake maintenance wired into the streaming loop — the piece a
     * real streaming lake needs so it does not fragment until someone
@@ -189,10 +181,4 @@ object StreamRunner {
     * BEFORE the epoch commits — crash injection for replay tests. */
   private[graft] val upsertTestHook =
     new java.util.concurrent.atomic.AtomicReference[() => Unit](() => ())
-
-  /** Backfill = the same report over a bounded time range, one 5-min window
-    * per group (DnsRptOffline.scala:69-73 parity without the driver loop):
-    * window bucketing IS the loop, distributed. */
-  def backfill(facts: DataFrame, report: DataFrame => DataFrame): DataFrame =
-    report(facts)
 }

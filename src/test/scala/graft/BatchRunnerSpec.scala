@@ -128,7 +128,7 @@ class BatchRunnerSpec extends AnyFunSuite with SparkSpec {
     // the r1 windowed J1 exchanged+sorted the whole fact table on a per-row
     // key; the IntervalIndex default must not shuffle the fact side at all
     val enriched = Dims.enrichAuthDomain(
-      Dims.enrichInNetIndexed(spark,
+      Dims.enrichInNet(spark,
         Dims.enrichClientName(fact, dims.clientRules),
         dims.mediaRules, dims.businessRules),
       dims.authDomains)

@@ -82,7 +82,8 @@ class OperatorsSpec extends AnyFunSuite with SparkSpec {
       graft.operators.IntervalIndex.enrichAuto(spark, fact, col("pt"), big,
         "lo", "hi", "lo", lastWins = false, maxRules = 10)
     }
-    assert(eBig.getMessage.contains("RangeJoin.pointInInterval"))
+    assert(eBig.getMessage.contains("more than 10 rows") &&
+      eBig.getMessage.contains("aggregate the dim down to a rule table"))
     // a null lo/hi bound must raise a descriptive error, not an opaque NPE
     val nullDim = Seq((Some(1L), None: Option[Long], "x"))
       .toDF("lo", "hi", "tag")
@@ -91,6 +92,13 @@ class OperatorsSpec extends AnyFunSuite with SparkSpec {
         "lo", "hi", "lo", lastWins = false)
     }
     assert(eNull.getMessage.contains("null"))
+    // the J3 in-net path reaches the driver through the same guarded collect
+    val nullRanges = nullDim.selectExpr("lo AS min_long_ip", "hi AS max_long_ip")
+    val eInNet = intercept[IllegalArgumentException] {
+      graft.dns.Dims.enrichInNet(spark, Seq(("10.0.0.1", 1L)).toDF("aip", "resolver"),
+        nullRanges, nullRanges)
+    }
+    assert(eInNet.getMessage.contains("null"))
   }
 
   test("cms_sketch: estimates never undercount and are partitioning-invariant") {

@@ -33,9 +33,7 @@ class SinksSpec extends AnyFunSuite with SparkSpec {
     Sinks.jdbcAppend(rows, url, "dns_flow_top", batchSize = 1)
     // second append must add, not replace (ClickUtils.scala:24-27 semantics)
     Sinks.jdbcAppend(rows, url, "dns_flow_top")
-    // read back through the S4/S14 source path (Sources.jdbc)
-    val back = graft.sources.Sources.jdbc(spark, url, "dns_flow_top",
-      new java.util.Properties())
+    val back = spark.read.jdbc(url, "dns_flow_top", new java.util.Properties())
     assert(back.count() == 4L)
     import org.apache.spark.sql.functions.sum
     assert(back.agg(sum("resolver")).head().getLong(0) == 16L)

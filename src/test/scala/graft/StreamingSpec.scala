@@ -15,25 +15,6 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     clientIp = "2.2.2.2", ts = new Timestamp(tsSec * 1000), aip = "3.3.3.3",
     responseType = "A", error = err, resolver = 1L, clientName = client)
 
-  test("5-min tumbling window counts with watermark (complete batch)") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[DnsRecord]
-    val base = 1616631000L // window-aligned? 1616631000 % 300 = 0
-    mem.addData(rec(base + 10, 1, 0), rec(base + 20, 1, 1),
-      rec(base + 400, 2, 0)) // second window
-    val q = StreamRunner.windowedCounts(mem.toDF())
-      .writeStream.outputMode("complete").format("memory")
-      .queryName("win_counts").start()
-    try {
-      q.processAllAvailable()
-      val rows = spark.table("win_counts")
-        .select(col("window.start").cast("long"), col("clientName"),
-          col("sampleNum"), col("errorNum"))
-        .as[(Long, Int, Long, Long)].collect().sortBy(r => (r._1, r._2)).toSeq
-      assert(rows == Seq((base, 1, 2L, 1L), (base + 300, 2, 1L, 0L)))
-    } finally q.stop()
-  }
-
   test("foreachBatch report reuses the batch code path and skips empty batches") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[DnsRecord]
