@@ -65,15 +65,30 @@ object Sinks {
     * appending a duplicate. Different windows' partitions are untouched.
     * Exercised under an injected crash in StreamingBatchRunnerSpec.
     *
+    * Both branches leave every `win=` directory they commit
+    * manifest-covered ([[graft.sources.ZLake.ManifestName]]: per-file
+    * envelopes plus the file schema), so [[graft.sources.ZLake.read]] plans
+    * with zero footer opens and no schema-inference job. The plain branch
+    * collects the windows it wrote through an observation on the write's
+    * own pass (no extra job), then writes one stats-less manifest per
+    * window. A replay replaces a window's manifest together with its
+    * partition. Until then, a crash between a window's data commit and its
+    * manifest write leaves it planning through its footers, as do rows
+    * with a null stamp (Spark's default partition gets no manifest). Lakes
+    * written before windows carried manifests are not migrated: their old
+    * windows plan through footers until
+    * [[graft.sources.ZLake.consolidateManifests]] (or
+    * [[graft.streaming.StreamRunner.LakeMaintenance]]) covers them.
+    *
     * `zorderBy = Some((colA, colB))` z-orders WITHIN each `win=` partition:
     * every window's directory gets [[zorderedWrite]]'s deterministic
     * clustered layout plus its stats manifest, so the STREAMING lake gains
     * the same planning-time file skipping the batch z-lake proves (q96) —
     * partition pruning on `win` composes with per-file envelope pruning on
-    * the clustered columns, and reads plan with zero footer opens. Each
-    * window's directory is replaced whole (same idempotency as dynamic
-    * overwrite: a replayed epoch rewrites the identical files). The caller
-    * feeds window-complete batches, as with the plain path. */
+    * the clustered columns. Each window's directory is replaced whole (same
+    * idempotency as dynamic overwrite: a replayed epoch rewrites the
+    * identical files). The caller feeds window-complete batches, as with
+    * the plain path. */
   def lakeWrite(tables: Map[String, DataFrame], root: String,
                 stampCol: String = "accesstime",
                 zorderBy: Option[(String, String)] = None,
@@ -85,15 +100,24 @@ object Sinks {
     // tables are disjoint sink directories; total in-flight jobs stay
     // bounded (outer 2 x inner 4)
     DriverPool.run(2)(tables.toSeq.sortBy(_._1).map { case (name, df) => () =>
-      import org.apache.spark.sql.functions.{col, date_format}
+      import org.apache.spark.sql.functions.{col, collect_set, date_format}
       val stamped = df.withColumn("win",
         date_format(col(stampCol), WinFormat))
       zorderBy match {
         case None =>
-          stamped.write.mode("overwrite")
+          // fresh per call: table bodies run concurrently
+          val written = org.apache.spark.sql.Observation()
+          stamped.observe(written, collect_set(col("win")).as("wins"))
+            .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("win")
             .parquet(s"$root/$name")
+          val fileSchema = stamped.drop("win").schema
+          written.get("wins").asInstanceOf[scala.collection.Seq[String]]
+            .sorted.foreach { w =>
+              graft.sources.ZLake.writeManifest(df.sparkSession,
+                s"$root/$name/win=$w", Some(fileSchema))
+            }
         case Some((a, b)) =>
           // one pass finds the batch's windows, one clustered write each;
           // the input is cached so the per-window filters don't recompute

@@ -585,6 +585,11 @@ object ZLake {
     graft.DriverPool.run(8)(files.map { case (st, parts) =>
       () => st.getPath -> envelopeOf(st, parts, conf) }).toMap
 
+  /** Test seam: distributed stats jobs actually run (SinksSpec pins that
+    * the fused z-write path never re-reads its output through here). */
+  private[graft] val statsJobs =
+    new java.util.concurrent.atomic.AtomicLong(0L)
+
   /** ONE distributed pass over `df` computing per-source-file manifest
     * stats (HLL registers, blooms, exact decimal sums), keyed by the file's
     * URI path. Shared by [[writeManifest]] (all files of a fresh write) and
@@ -592,13 +597,11 @@ object ZLake {
     * arrays carry their probe arity as element 0; sums go through
     * decimal(38, s) — exact for integral/decimal columns, overflow → NULL
     * → entry omitted (the query-time rewrite then bails unless the file is
-    * provably all-null). */
-  /** Test seam: distributed stats jobs actually run (SinksSpec pins that
-    * the fused z-write path never re-reads its output through here). */
-  private[graft] val statsJobs =
-    new java.util.concurrent.atomic.AtomicLong(0L)
-
-  private def statsPass(df: DataFrame, schema: StructType,
+    * provably all-null). `df` is by-name and built only when a stats
+    * column is requested: building a `spark.read.parquet` input lists the
+    * files and runs a schema-inference job, which a stats-less manifest
+    * write does not need. */
+  private def statsPass(df: => DataFrame, schema: StructType,
       sketchCols: Seq[String], sketchM: Int,
       bloomCols: Seq[String], bloomBits: Int, bloomHashes: Int,
       sumCols: Seq[String]): Map[String, (Map[String, Array[Long]],
@@ -1385,15 +1388,17 @@ object ZLake {
         if (h.fes.isEmpty) dirPartitionCols(spark, path) else Nil)
   }
 
-  /** Parquet read through the stats-pruning index: identical rows to
-    * `spark.read.parquet(path)` (plus string-typed partition columns for a
-    * Hive-layout lake), but predicates prune partitions AND files at
-    * planning time. On a manifest-covered lake the whole plan touches ZERO
-    * parquet footers (schema included — it rides the manifest). */
-  /** The lake as a DataFrame — with any merge-on-read deletion vectors
-    * ([[graft.sinks.DeletionVectors]]) applied (an anti-join that costs
-    * nothing when the lake carries none, which is the steady state:
-    * vectors exist only between a `deleteMoR` and its `compact`). */
+  /** The lake as a DataFrame: a parquet read through the stats-pruning
+    * index, with identical rows to `spark.read.parquet(path)` (plus
+    * string-typed partition columns for a Hive-layout lake), but predicates
+    * prune partitions AND files at planning time. On a manifest-covered
+    * lake, planning touches ZERO parquet footers and starts no Spark job
+    * (the schema rides the manifest); each file no manifest covers costs
+    * one footer open, and the schema then comes from a schema-inference
+    * job over the first file ([[relationWith]]). Any merge-on-read deletion
+    * vectors ([[graft.sinks.DeletionVectors]]) are applied (an anti-join
+    * that costs nothing when the lake carries none, which is the steady
+    * state: vectors exist only between a `deleteMoR` and its `compact`). */
   def read(spark: SparkSession, path: String): DataFrame =
     graft.sinks.DeletionVectors.applyTo(spark, path,
       readWith(spark, path, index(spark, path)))

@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import LakeWriteManifestSpec.{manifestFiles, parquetFiles, winDirs}
 import graft.dns.BatchRunner
+import graft.sources.ZLake
 import graft.streaming.StreamRunner
 
 /** End-to-end streaming production path: file-source raw JSON lines →
@@ -70,8 +72,10 @@ class StreamingBatchRunnerSpec extends AnyFunSuite with SparkSpec {
     * failing while its siblings are mid-write — and on restart the epoch
     * replays and the window-keyed dynamic partition overwrite converges:
     * every table ends with exactly one copy of each window, row-for-row
-    * a direct batch run of the same lines. */
-  private def killRestart(crashIn: Option[String]): Unit = {
+    * a direct batch run of the same lines, and every window directory
+    * carries a manifest covering exactly its files, so ZLake.read plans
+    * the recovered lake from manifests alone. Returns the lake root. */
+  private def killRestart(crashIn: Option[String]): String = {
     import graft.sinks.Sinks
     import StreamingBatchRunnerSpec.failing
     val inDir = java.nio.file.Files.createTempDirectory("graft-kr-in").toString
@@ -155,6 +159,22 @@ class StreamingBatchRunnerSpec extends AnyFunSuite with SparkSpec {
     // and both window partitions are present (w1 untouched by the replay)
     assert(spark.read.parquet(s"$root/clear").select("win").distinct()
       .as[String].collect().toSet == Set("20210325_0010", "20210325_0015"))
+    // every committed window is manifest-covered, and the manifest-planned
+    // read keeps batch parity without opening a footer
+    expected.foreach { case (table, want) =>
+      val dirs = winDirs(s"$root/$table")
+      assert(dirs.nonEmpty, s"$table: no window directories")
+      dirs.foreach { d =>
+        assert(manifestFiles(d) == parquetFiles(d),
+          s"$table: $d is not covered by its manifest")
+      }
+      val opens = ZLake.footerOpens.get()
+      val got = ZLake.read(spark, s"$root/$table")
+      assert(got.count() == want, s"$table: ZLake.read breaks batch parity")
+      assert(ZLake.footerOpens.get() == opens,
+        s"$table: ZLake.read opened footers over a covered lake")
+    }
+    root
   }
 
   test("kill-restart over two windows lands all six sink tables exactly once") {
@@ -167,6 +187,26 @@ class StreamingBatchRunnerSpec extends AnyFunSuite with SparkSpec {
         killRestart(crashIn = Some(table))
       }
     }
+
+  test("kill-restart: a window whose manifest write never ran plans through its footers") {
+    // the state a crash between a window's data commit and its manifest
+    // write leaves behind
+    val root = killRestart(crashIn = None)
+    val table = s"$root/clear"
+    val dir = java.nio.file.Paths.get(table, "win=20210325_0015")
+    java.nio.file.Files.delete(dir.resolve(ZLake.ManifestName))
+    val files = parquetFiles(dir).size
+    assert(files > 0)
+    val opens = ZLake.footerOpens.get()
+    val df = ZLake.read(spark, table)
+    df.queryExecution.executedPlan
+    assert(ZLake.footerOpens.get() - opens == files,
+      "exactly the uncovered window's footers must open")
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.select(d.columns.sorted.map(col): _*).collect().map(_.mkString("|"))
+        .toSeq.sorted
+    assert(rows(df) == rows(spark.read.parquet(table)))
+  }
 }
 
 object StreamingBatchRunnerSpec {
