@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.ZLake
+
 /** LAYERED index generations — the machinery behind SELECTIVE compaction
   * of the persisted IVF / BM25 indexes (VERDICT r12 #4).
   *
@@ -136,9 +138,8 @@ private[graft] object IndexLayers {
         if (st.isDirectory && n.startsWith(s"$partition=")) {
           val v = n.substring(partition.length + 1)
           if (!shadowed.contains(v)) {
-            val files = fs.listStatus(st.getPath)
-              .count(f => !f.isDirectory && f.getPath.getName.endsWith(".parquet"))
-            counts(v) = counts.getOrElse(v, 0) + files
+            counts(v) = counts.getOrElse(v, 0) +
+              ZLake.dataFilesIn(fs, st.getPath).size
           }
         }
       }
@@ -149,9 +150,11 @@ private[graft] object IndexLayers {
 
   /** Identity fingerprint over the WHOLE chain — the compaction
     * read-set under layering (an append to ANY generation must
-    * invalidate an in-flight rewrite). */
+    * invalidate an in-flight rewrite). Torn listings yield a never-equal
+    * token ([[ZLake.fingerprintWith]]), so a swap can only publish over a
+    * provably unchanged read state. */
   def fingerprintChain(fs: FileSystem, layers: Seq[Layer]): String =
-    layers.map(l => IndexOcc.fingerprint(fs, new Path(l.dir))).mkString("|")
+    layers.map(l => ZLake.fingerprintWith(fs, new Path(l.dir))).mkString("|")
 
   /** The chain's RESOLVED data-file identities, root-relative — what a
     * generation snapshot pins (restore copies these, flattening the
@@ -171,19 +174,15 @@ private[graft] object IndexLayers {
       // only `$partition=` dirs carry data: a layer dir may also be the
       // index ROOT (the BM25 pre-compaction layout), whose other entries
       // (version dirs, sidecars, snapshot dirs) are not postings
-      def files(p: Path): Unit =
-        fs.listStatus(p).foreach { st =>
-          val n = st.getPath.getName
-          if (st.isDirectory) files(st.getPath)
-          else if (!n.startsWith("_") && !n.startsWith(".") &&
-            n.endsWith(".parquet"))
-            out += ((rel(st.getPath), st.getLen, st.getModificationTime))
-        }
       if (fs.exists(dir)) fs.listStatus(dir).foreach { st =>
         val n = st.getPath.getName
         if (st.isDirectory && n.startsWith(s"$partition=") &&
-          !shadowed.contains(n.substring(partition.length + 1)))
-          files(st.getPath)
+          !shadowed.contains(n.substring(partition.length + 1))) {
+          val pdir = rel(st.getPath)
+          out ++= ZLake.dataFileIdentities(fs, st.getPath).map {
+            case (r, len, mt) => (s"$pdir/$r", len, mt)
+          }
+        }
       }
       shadowed = shadowed ++ l.replaces.getOrElse(Set.empty)
     }

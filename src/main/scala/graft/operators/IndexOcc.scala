@@ -4,6 +4,8 @@ import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 
+import graft.sources.ZLake
+
 /** OCC plumbing shared by the DERIVED indexes (the BM25 postings lake and
   * the IVF assignment lake — [[Retrieval]] / [[Similarity]]).
   *
@@ -47,51 +49,27 @@ private[graft] object IndexOcc {
     s".$kind-${java.util.UUID.randomUUID()}"
 
   /** Move every data file of a staged partitioned write into `active`,
-    * preserving `key=value` partition dirs, under names no concurrent
-    * append can collide with. Caller holds the index writer lock. */
-  def adoptStaged(fs: FileSystem, stage: Path, active: Path): Unit = {
-    def walk(dir: Path, rel: List[String]): Unit =
-      fs.listStatus(dir).foreach { st =>
-        val n = st.getPath.getName
-        if (st.isDirectory) {
-          if (!n.startsWith("_") && !n.startsWith(".")) walk(st.getPath, rel :+ n)
-        } else if (n.endsWith(".parquet")) {
-          val tgtDir = rel.foldLeft(active)(new Path(_, _))
-          fs.mkdirs(tgtDir)
-          val tgt = new Path(tgtDir,
-            s"a${java.util.UUID.randomUUID().toString.take(8)}-$n")
-          if (!fs.rename(st.getPath, tgt))
-            throw new java.io.IOException(
-              s"failed to adopt staged file ${st.getPath} into $tgtDir")
-        }
-      }
-    walk(stage, Nil)
-  }
-
-  /** [[adoptStaged]] with a CALLER-CHOSEN name prefix — the streaming
-    * ingest path tags every adopted file `ingest<batchId>-…` so a
-    * crashed batch's partial adoption is identifiable: the replay (and
-    * the compactions) purge `ingest<B>-*` files with B above the
-    * committed fence before re-adopting, which is what makes the fenced
-    * ingest exactly-once without a journal. */
-  def adoptStagedAs(fs: FileSystem, stage: Path, active: Path,
-                    prefix: String): Unit = {
-    def walk(dir: Path, rel: List[String]): Unit =
-      fs.listStatus(dir).foreach { st =>
-        val n = st.getPath.getName
-        if (st.isDirectory) {
-          if (!n.startsWith("_") && !n.startsWith(".")) walk(st.getPath, rel :+ n)
-        } else if (n.endsWith(".parquet")) {
-          val tgtDir = rel.foldLeft(active)(new Path(_, _))
-          fs.mkdirs(tgtDir)
-          val tgt = new Path(tgtDir, s"$prefix-$n")
-          if (!fs.rename(st.getPath, tgt))
-            throw new java.io.IOException(
-              s"failed to adopt staged file ${st.getPath} into $tgtDir")
-        }
-      }
-    walk(stage, Nil)
-  }
+    * preserving its `key=value` partition dirs, renamed `<prefix>-<name>`.
+    * `prefix` is evaluated per file: the default tags each file with a
+    * fresh `a<uuid8>`, a name no concurrent append can collide with. The
+    * streaming ingest passes `ingest<batchId>` so a crashed batch's
+    * partial adoption is identifiable: the replay (and the compactions)
+    * purge `ingest<B>-*` files with B above the committed fence before
+    * re-adopting, which is what makes the fenced ingest exactly-once
+    * without a journal. Caller holds the index writer lock. */
+  def adoptStaged(fs: FileSystem, stage: Path, active: Path,
+                  prefix: => String =
+                    s"a${java.util.UUID.randomUUID().toString.take(8)}")
+      : Unit =
+    ZLake.listDataFiles(fs, stage).foreach { case (st, _) =>
+      val dirRel = ZLake.relPath(stage, st.getPath.getParent)
+      val tgtDir = if (dirRel.isEmpty) active else new Path(active, dirRel)
+      fs.mkdirs(tgtDir)
+      val tgt = new Path(tgtDir, s"$prefix-${st.getPath.getName}")
+      if (!fs.rename(st.getPath, tgt))
+        throw new java.io.IOException(
+          s"failed to adopt staged file ${st.getPath} into $tgtDir")
+    }
 
   private val IngestTag = "ingest(\\d+)-".r
 
@@ -116,13 +94,6 @@ private[graft] object IndexOcc {
       }.sum
     dirs.map(walk).sum
   }
-
-  /** Identity fingerprint of the ACTIVE index directory — the compaction
-    * read-set. Torn listings yield a never-equal token
-    * ([[graft.sources.ZLake.fingerprintWith]]), so a swap can only
-    * publish over a provably unchanged read state. */
-  def fingerprint(fs: FileSystem, dir: Path): String =
-    graft.sources.ZLake.fingerprintWith(fs, dir)
 
   /** Sweep crashed staging dirs (`.append-*` / `.compacting-*` /
     * `.restoring-*` — the latter from a generation restore that died

@@ -83,12 +83,6 @@ object IndexSnapshots {
                                  l: Layout): Seq[(String, Long, Long)] =
     IndexLayers.resolvedFiles(fs, root, chainOf(fs, root, l), l.partition)
 
-  /** `(rel, len, mtime)` of every data file under `dir` (rel to `dir`). */
-  private def identities(fs: FileSystem, dir: Path): Seq[(String, Long, Long)] =
-    Z.listDataFiles(fs, dir).map { case (st, _) =>
-      (Z.relPath(dir, st.getPath), st.getLen, st.getModificationTime)
-    }
-
   private def snapPath(root: Path, tag: String): Path = {
     require(tag.nonEmpty && !tag.contains('/') && !tag.startsWith("."),
       s"bad snapshot tag '$tag'")
@@ -129,9 +123,10 @@ object IndexSnapshots {
       val compNode = node.putObject("companions")
       l.companionDirs.foreach { d =>
         val arr = compNode.putArray(d)
-        identities(fs, new Path(root, d)).foreach { case (rel, len, mt) =>
-          val o = arr.addObject()
-          o.put("rel", rel); o.put("len", len); o.put("mtime", mt); ()
+        Z.dataFileIdentities(fs, new Path(root, d)).foreach {
+          case (rel, len, mt) =>
+            val o = arr.addObject()
+            o.put("rel", rel); o.put("len", len); o.put("mtime", mt); ()
         }
       }
       fs.mkdirs(new Path(root, SnapDirName))
@@ -252,7 +247,7 @@ object IndexSnapshots {
       val pin = readPin(fs, root, tag)
       // companions must be bit-identical: centroids define the cell space
       pin.companions.foreach { case (d, pinned) =>
-        val cur = identities(fs, new Path(root, d)).sortBy(_._1)
+        val cur = Z.dataFileIdentities(fs, new Path(root, d))
         require(cur == pinned.sortBy(_._1),
           s"companion dir '$d' of $indexRoot changed since pin '$tag' " +
             "(full rebuild?) — the pinned generation cannot be restored")
@@ -334,7 +329,7 @@ object IndexSnapshots {
       // published under pinned codes (ADVICE r13)
       val pin = readPin(fs, root, staged.tag)
       pin.companions.foreach { case (d, pinned) =>
-        val cur = identities(fs, new Path(root, d)).sortBy(_._1)
+        val cur = Z.dataFileIdentities(fs, new Path(root, d))
         require(cur == pinned.sortBy(_._1),
           s"companion dir '$d' of $indexRoot changed between staging and " +
             s"publish of pin '${staged.tag}' — aborting the restore publish")
@@ -397,7 +392,7 @@ object IndexSnapshots {
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     val pin = readPin(fs, root, tag)
     pin.companions.foreach { case (d, pinned) =>
-      val cur = identities(fs, new Path(root, d)).sortBy(_._1)
+      val cur = Z.dataFileIdentities(fs, new Path(root, d))
       require(cur == pinned.sortBy(_._1),
         s"companion dir '$d' of $indexRoot changed since pin '$tag'")
     }

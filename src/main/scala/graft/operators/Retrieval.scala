@@ -559,7 +559,7 @@ object Retrieval {
         IndexOcc.purgeUncommittedIngest(fs,
           postingsLayers(spark, path)
             .map(l => new org.apache.hadoop.fs.Path(l.dir)), fence)
-        IndexOcc.adoptStagedAs(fs, stage,
+        IndexOcc.adoptStaged(fs, stage,
           new org.apache.hadoop.fs.Path(postingsDir(spark, path)),
           s"ingest$batchId")
         val (n1, t1, nb) = readStats(spark, path)

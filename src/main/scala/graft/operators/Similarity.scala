@@ -1491,7 +1491,7 @@ object Similarity {
         IndexOcc.purgeUncommittedIngest(fs,
           assignLayers(spark, path)
             .map(l => new org.apache.hadoop.fs.Path(l.dir)), fence)
-        IndexOcc.adoptStagedAs(fs, stage,
+        IndexOcc.adoptStaged(fs, stage,
           new org.apache.hadoop.fs.Path(assignDir(spark, path)),
           s"ingest$batchId")
         writeIvfFence(spark, path, batchId)

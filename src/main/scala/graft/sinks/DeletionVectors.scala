@@ -66,8 +66,7 @@ object DeletionVectors {
     * DV-incompatible path calls.) */
   def present(fs: FileSystem, root: Path): Boolean = {
     val d = new Path(root, DvDirName)
-    try fs.exists(d) && fs.listStatus(d).exists(st =>
-      st.getPath.getName.endsWith(".parquet"))
+    try fs.exists(d) && ZLake.dataFilesIn(fs, d).nonEmpty
     catch { case _: java.io.FileNotFoundException => false }
   }
 
@@ -100,8 +99,27 @@ object DeletionVectors {
   private[graft] def storeFiles(fs: FileSystem, root: Path): Seq[Path] = {
     val d = new Path(root, DvDirName)
     if (!fs.exists(d)) Nil
-    else fs.listStatus(d).toSeq.map(_.getPath)
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
+    else ZLake.dataFilesIn(fs, d).map(_.getPath)
+  }
+
+  /** Write `vectors` as ONE store file staged under `txnDir/_graft_dv/`;
+    * returns its root-relative path for the journal's add lane. */
+  private[graft] def stageStore(spark: SparkSession, fs: FileSystem,
+                                txnDir: Path,
+                                vectors: Seq[(String, Array[Long])]): String = {
+    import spark.implicits._
+    val staged = new Path(txnDir, DvDirName)
+    val storeName = s"store-${java.util.UUID.randomUUID()}.parquet"
+    val tmpOut = new Path(staged, ".out")
+    vectors.toDF("file", "positions").coalesce(1)
+      .write.mode("overwrite").parquet(tmpOut.toString)
+    val part = ZLake.dataFilesIn(fs, tmpOut).headOption
+      .getOrElse(throw new IllegalStateException("empty DV store write"))
+    fs.mkdirs(staged)
+    require(fs.rename(part.getPath, new Path(staged, storeName)),
+      s"could not stage DV store $storeName")
+    fs.delete(tmpOut, true)
+    s"$DvDirName/$storeName"
   }
 
   /** [[relPathCol]] with a retired file's trash prefix stripped: a
@@ -258,19 +276,7 @@ object DeletionVectors {
     }.sum
 
     // stage the consolidated store, commit via the shared journal
-    import spark.implicits._
-    val staged = new Path(txnDir, DvDirName)
-    val storeName = s"store-${java.util.UUID.randomUUID()}.parquet"
-    val tmpOut = new Path(staged, ".out")
-    merged.toDF("file", "positions").coalesce(1)
-      .write.mode("overwrite").parquet(tmpOut.toString)
-    val part = fs.listStatus(tmpOut).map(_.getPath)
-      .find(_.getName.endsWith(".parquet"))
-      .getOrElse(throw new IllegalStateException("empty DV store write"))
-    fs.mkdirs(staged)
-    require(fs.rename(part, new Path(staged, storeName)),
-      s"could not stage DV store $storeName")
-    fs.delete(tmpOut, true)
+    val storeRel = stageStore(spark, fs, txnDir, merged)
 
     val rootUri = rootPath.toUri.getPath.stripSuffix("/")
     val dropRels = oldStore.map(p =>
@@ -280,7 +286,7 @@ object DeletionVectors {
     // bytes) plus the store files this commit replaces
     val dvFes = oldStore.map(p => fs.getFileStatus(p))
     LakeDelete.commitStaged(spark, fs, rootPath, txnRel, dropRels,
-      Seq(s"$DvDirName/$storeName"), None,
+      Seq(storeRel), None,
       () => LakeDelete.changedIdentities(fs, positive) ++
         dvFes.flatMap { st =>
           val cur = try Some(fs.getFileStatus(st.getPath))
@@ -354,26 +360,7 @@ object DeletionVectors {
         case NonFatal(e) if LakeDelete.isConcurrentFileLoss(e) =>
           return Left(Seq(e.getMessage))
       }
-      def walk(d: Path, dirRel: String): Seq[(String, Path)] =
-        fs.listStatus(d).toSeq.flatMap { st =>
-          val name = st.getPath.getName
-          if (st.isDirectory && name.contains("="))
-            walk(st.getPath, if (dirRel.isEmpty) name else s"$dirRel/$name")
-          else if (!st.isDirectory && name.endsWith(".parquet") &&
-            !name.startsWith("_") && !name.startsWith("."))
-            Seq((dirRel, st.getPath))
-          else Nil
-        }
-      val runId = java.util.UUID.randomUUID()
-      adds = walk(outDir, "").sortBy(_._2.getName).zipWithIndex.map {
-        case ((dirRel, p), i) =>
-          val name = s"dvcompact-$runId-$i.parquet"
-          val relp = if (dirRel.isEmpty) name else s"$dirRel/$name"
-          val dst = new Path(txnDir, relp)
-          fs.mkdirs(dst.getParent)
-          require(fs.rename(p, dst), s"could not stage $dst")
-          relp
-      }
+      adds = LakeDelete.stageRenamed(fs, outDir, txnDir, "dvcompact")
     }
 
     val dvStatuses = store.map(fs.getFileStatus)

@@ -257,24 +257,28 @@ object LakeDelete {
       else Some(p.toString)
     }
 
-  /** Every data file's `(rel, len, mtime)` — the FULL-set check
-    * [[rewriteLake]] needs (it must also see additions, which a read-set
-    * check cannot). */
-  private[graft] def listDataIdentities(fs: FileSystem,
-                                 root: Path): Set[(String, Long, Long)] = {
-    val rootUri = root.toUri.getPath.stripSuffix("/")
-    def rel(p: Path): String =
-      p.toUri.getPath.stripPrefix(rootUri).stripPrefix("/")
-    def walk(d: Path): Seq[(String, Long, Long)] =
-      fs.listStatus(d).toSeq.flatMap { st =>
-        val n = st.getPath.getName
-        if (n.startsWith("_") || n.startsWith(".")) Nil
-        else if (st.isDirectory) walk(st.getPath)
-        else if (n.endsWith(".parquet"))
-          Seq((rel(st.getPath), st.getLen, st.getModificationTime))
-        else Nil
+  /** Rename every data file of a staged write under `out` to
+    * `<kind>-<runId>-<i>.parquet` (numbered in file-name order) inside
+    * its own partition directory under `stageRoot`; returns the staged
+    * relative paths. */
+  private[graft] def stageRenamed(fs: FileSystem, out: Path, stageRoot: Path,
+                                  kind: String): Seq[String] = {
+    val runId = java.util.UUID.randomUUID()
+    ZLake.listDataFiles(fs, out).map(_._1.getPath).sortBy(_.getName)
+      .zipWithIndex.map { case (p, i) =>
+        val relp = stagedRel(out, p, s"$kind-$runId-$i.parquet")
+        val dst = new Path(stageRoot, relp)
+        fs.mkdirs(dst.getParent)
+        require(fs.rename(p, dst), s"could not stage $dst")
+        relp
       }
-    walk(root).toSet
+  }
+
+  /** `name` in the partition directory `p` sits in, relative to `out`
+    * (taken from the path: listed partition keys are lowercased). */
+  private def stagedRel(out: Path, p: Path, name: String): String = {
+    val dirRel = ZLake.relPath(out, p.getParent)
+    if (dirRel.isEmpty) name else s"$dirRel/$name"
   }
 
   /** Garbage-collect txn dirs abandoned by crashed PRE-commit writers
@@ -667,26 +671,7 @@ object LakeDelete {
       case NonFatal(e) if isConcurrentFileLoss(e) =>
         return Left(Seq(e.getMessage))
     }
-    def walk(d: Path, dirRel: String): Seq[(String, Path)] =
-      fs.listStatus(d).toSeq.flatMap { st =>
-        val name = st.getPath.getName
-        if (st.isDirectory && name.contains("="))
-          walk(st.getPath, if (dirRel.isEmpty) name else s"$dirRel/$name")
-        else if (!st.isDirectory && name.endsWith(".parquet") &&
-          !name.startsWith("_") && !name.startsWith("."))
-          Seq((dirRel, st.getPath))
-        else Nil
-      }
-    val runId = java.util.UUID.randomUUID()
-    val adds = walk(outDir, "").sortBy(_._2.getName).zipWithIndex.map {
-      case ((dirRel, p), i) =>
-        val name = s"update-$runId-$i.parquet"
-        val relp = if (dirRel.isEmpty) name else s"$dirRel/$name"
-        val dst = new Path(stageRoot, relp)
-        fs.mkdirs(dst.getParent)
-        require(fs.rename(p, dst), s"could not stage $dst")
-        relp
-    }
+    val adds = stageRenamed(fs, outDir, stageRoot, "update")
     stagedHook.get()() // race injection: staged, commit lock not yet taken
     commitStaged(spark, fs, rootPath, txnRel,
       live.map(fe => rel(fe.status.getPath)), adds, None,
@@ -756,17 +741,7 @@ object LakeDelete {
       case NonFatal(e) if isConcurrentFileLoss(e) =>
         return Left(Seq(e.getMessage))
     }
-    val parts = fs.listStatus(tmp).map(_.getPath)
-      .filter(p => p.getName.endsWith(".parquet") &&
-        !p.getName.startsWith("_") && !p.getName.startsWith("."))
-      .sortBy(_.getName)
-    val runId = java.util.UUID.randomUUID()
-    val adds = parts.zipWithIndex.map { case (p, i) =>
-      val relp = s"compact-$runId-$i.parquet"
-      require(fs.rename(p, new Path(txnDir, relp)),
-        s"could not stage $relp")
-      relp
-    }.toSeq
+    val adds = stageRenamed(fs, tmp, txnDir, "compact")
     fs.delete(tmp, true)
 
     val rootUri = rootPath.toUri.getPath.stripSuffix("/")
@@ -776,8 +751,8 @@ object LakeDelete {
     stagedHook.get()()
     commitStaged(spark, fs, rootPath, txnRel, dropRels, adds, None,
       () => {
-        val now = listDataIdentities(fs, rootPath)
-          .map { case (r, l, m) => (new Path(r).getName, l, m) }
+        val now = ZLake.dataFileIdentities(fs, rootPath)
+          .map { case (r, l, m) => (new Path(r).getName, l, m) }.toSet
         if (now == before) Nil
         else ((now diff before) ++ (before diff now)).map(_._1).take(5).toSeq
       }).map { _ =>
@@ -1125,22 +1100,13 @@ object LakeDelete {
     val w = shaped.write.mode("overwrite")
     (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w)
       .parquet(addTmp.toString)
-    def walkAdds(d: Path, dirRel: String): Seq[(String, Path)] =
-      fs.listStatus(d).toSeq.flatMap { st =>
-        val name = st.getPath.getName
-        if (st.isDirectory && name.contains("="))
-          walkAdds(st.getPath, if (dirRel.isEmpty) name else s"$dirRel/$name")
-        else if (!st.isDirectory && name.endsWith(".parquet") &&
-          !name.startsWith("_") && !name.startsWith("."))
-          Seq((dirRel, st.getPath))
-        else Nil
-      }
     var adds = Vector.empty[String]
     var inserted = 0L
     val partNum = "^part-(\\d+)-".r
-    val walked = walkAdds(addTmp, "").sortBy(_._2.getName)
-    val rowsOf = footerRowsAll(fs, conf, walked.map(_._2))
-    walked.foreach { case (dirRel, p) =>
+    val walked = ZLake.listDataFiles(fs, addTmp).map(_._1.getPath)
+      .sortBy(_.getName)
+    val rowsOf = footerRowsAll(fs, conf, walked)
+    walked.foreach { p =>
       val n = rowsOf(p)
       if (n > 0L) {
         // on a bucketed lake the staged name carries the bucket id in
@@ -1148,8 +1114,8 @@ object LakeDelete {
         val tag = bucket.flatMap(_ =>
           partNum.findFirstMatchIn(p.getName).map(m =>
             f"_${m.group(1).toInt}%05d")).getOrElse("")
-        val name = s"upsert-${java.util.UUID.randomUUID()}$tag.parquet"
-        val relp = if (dirRel.isEmpty) name else s"$dirRel/$name"
+        val relp = stagedRel(addTmp, p,
+          s"upsert-${java.util.UUID.randomUUID()}$tag.parquet")
         val dst = new Path(stageRoot, relp)
         fs.mkdirs(dst.getParent)
         require(fs.rename(p, dst), s"could not stage $dst")
@@ -1309,20 +1275,9 @@ object LakeDelete {
         case NonFatal(e) if isConcurrentFileLoss(e) =>
           return Left(Seq(e.getMessage))
       }
-      def walk(d: Path, dirRel: String): Seq[(String, Path)] =
-        fs.listStatus(d).toSeq.flatMap { st =>
-          val name = st.getPath.getName
-          if (st.isDirectory && name.contains("="))
-            walk(st.getPath, if (dirRel.isEmpty) name else s"$dirRel/$name")
-          else if (!st.isDirectory && name.endsWith(".parquet") &&
-            !name.startsWith("_") && !name.startsWith("."))
-            Seq((dirRel, st.getPath))
-          else Nil
-        }
-      val outs = walk(outDir, "")
-      stagedByDir = outs.groupBy(_._1).map { case (d, fs0) =>
-        d -> fs0.map(_._2).sortBy(_.getName)
-      }
+      stagedByDir = ZLake.listDataFiles(fs, outDir).map(_._1.getPath)
+        .groupBy(p => ZLake.relPath(outDir, p.getParent))
+        .map { case (d, ps) => d -> ps.sortBy(_.getName) }
       val stagedRows = footerRowsAll(fs, conf,
         stagedByDir.values.flatten.toSeq)
       keptByDir = stagedByDir.map { case (d, ps) =>

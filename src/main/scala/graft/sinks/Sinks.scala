@@ -295,10 +295,8 @@ object Sinks {
             .write.mode("overwrite").parquet(outDir.toString)
           val partNum = "^part-(\\d+)-".r
           val runId = java.util.UUID.randomUUID()
-          val outFiles = fs.listStatus(outDir).toSeq.map(_.getPath)
-            .filter(p => p.getName.endsWith(".parquet") &&
-              !p.getName.startsWith("_") && !p.getName.startsWith("."))
-            .sortBy(_.getName)
+          val outFiles =
+            graft.sources.ZLake.dataFilesIn(fs, outDir).map(_.getPath)
           val outRows = LakeDelete.footerRowsAll(fs, conf, outFiles)
           val adds = outFiles.flatMap { p =>
               // every repartition task writes a file, including the
@@ -328,24 +326,8 @@ object Sinks {
           }.sum
           val storeAdds =
             if (oldStores.isEmpty || keptVectors.isEmpty) Nil
-            else {
-              import spark.implicits._
-              val staged = new Path(txnDir, DeletionVectors.DvDirName)
-              val storeName =
-                s"store-${java.util.UUID.randomUUID()}.parquet"
-              val tmpOut = new Path(staged, ".out")
-              keptVectors.toSeq.sortBy(_._1).toDF("file", "positions")
-                .coalesce(1).write.mode("overwrite").parquet(tmpOut.toString)
-              val part = fs.listStatus(tmpOut).map(_.getPath)
-                .find(_.getName.endsWith(".parquet"))
-                .getOrElse(throw new IllegalStateException(
-                  "empty DV store write"))
-              fs.mkdirs(staged)
-              require(fs.rename(part, new Path(staged, storeName)),
-                s"could not stage DV store $storeName")
-              fs.delete(tmpOut, true)
-              Seq(s"${DeletionVectors.DvDirName}/$storeName")
-            }
+            else Seq(DeletionVectors.stageStore(spark, fs, txnDir,
+              keptVectors.toSeq.sortBy(_._1)))
           val rootUri = rootPath.toUri.getPath.stripSuffix("/")
           def rel(p: Path): String =
             p.toUri.getPath.stripPrefix(rootUri).stripPrefix("/")
@@ -385,15 +367,12 @@ object Sinks {
                            root: org.apache.hadoop.fs.Path): Unit = {
     import org.apache.hadoop.fs.Path
     val partNum = "^part-(\\d+)-".r
-    fs.listStatus(root).foreach { st =>
+    graft.sources.ZLake.dataFilesIn(fs, root).foreach { st =>
       val name = st.getPath.getName
-      if (!st.isDirectory && name.endsWith(".parquet") &&
-          !name.startsWith("_") && !name.startsWith(".")) {
-        partNum.findFirstMatchIn(name).foreach { m =>
-          val tagged = name.replaceFirst("\\.", f"_${m.group(1).toInt}%05d.")
-          require(fs.rename(st.getPath, new Path(root, tagged)),
-            s"could not bucket-tag $name")
-        }
+      partNum.findFirstMatchIn(name).foreach { m =>
+        val tagged = name.replaceFirst("\\.", f"_${m.group(1).toInt}%05d.")
+        require(fs.rename(st.getPath, new Path(root, tagged)),
+          s"could not bucket-tag $name")
       }
     }
   }
@@ -525,50 +504,22 @@ object Sinks {
     val spark = df.sparkSession
     val withZ = df.withColumn("__z", z)
     val sortCols = col("__z") +: df.columns.map(col).toSeq
-    val hasStats =
-      sketchCols.nonEmpty || bloomCols.nonEmpty || sumCols.nonEmpty
     val shift = math.max(0, zDomainBits - 16)
     // null z (null cluster columns) sorts below every real prefix
     def zb = coalesce(shiftright(col("__z"), shift), lit(Long.MinValue))
-    if (!hasStats) {
-      val hist = withZ.groupBy(zb.as("zb"))
-        .agg(count(lit(1)).as("__n")).orderBy("zb")
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
-      val total = hist.map(_._2).sum
-      val routed =
-        if (total == 0 || numFiles <= 1) withZ.coalesce(1)
-        else routeByCuts(withZ, zb, zCutsOf(hist, numFiles))
-      routed.sortWithinPartitions(sortCols: _*).drop("__z")
-        .write.mode("overwrite").options(writerOptions).parquet(path)
-      graft.sources.ZLake.writeManifest(spark, path, Some(df.schema))
-      return
-    }
     // worst-case driver bytes for the fused collect are STATIC: ≤ 2^16
     // buckets × (per-bucket stat payload). Pathological stats configs
     // (many wide sketch columns) fall back to the separate stats job
     // rather than risk the driver; every lane in this repo is ≤ a few MB.
     val perBucketBytes = 16L + sketchCols.size.toLong * sketchM * 8L +
       bloomCols.size.toLong * (bloomBits / 8L) + sumCols.size.toLong * 64L
-    if ((1L << 16) * perBucketBytes > 256L * 1024 * 1024) {
-      val hist = withZ.groupBy(zb.as("zb"))
-        .agg(count(lit(1)).as("__n")).orderBy("zb")
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
-      val total = hist.map(_._2).sum
-      val routed =
-        if (total == 0 || numFiles <= 1) withZ.coalesce(1)
-        else routeByCuts(withZ, zb, zCutsOf(hist, numFiles))
-      routed.sortWithinPartitions(sortCols: _*).drop("__z")
-        .write.mode("overwrite").options(writerOptions).parquet(path)
-      graft.sources.ZLake.writeManifest(spark, path, Some(df.schema),
-        sketchCols, sketchM, bloomCols, bloomBits, bloomHashes, sumCols)
-      return
-    }
+    val fused = (1L << 16) * perBucketBytes <= 256L * 1024 * 1024
     def sumScale(c: String): Int =
       df.schema.fields.find(_.name.equalsIgnoreCase(c)).map(_.dataType) match {
         case Some(d: org.apache.spark.sql.types.DecimalType) => d.scale
         case _ => 0
       }
-    val statAggs =
+    val statAggs = if (!fused) Nil else
       sketchCols.map(c => graft.functions.KernelAggs
         .hll_registers(col(c).cast("string"), sketchM).as(s"__hll_$c")) ++
       bloomCols.map(c => graft.functions.KernelAggs
@@ -577,7 +528,8 @@ object Sinks {
       sumCols.map(c => sum(col(c).cast(s"decimal(38,${sumScale(c)})"))
         .as(s"__sum_$c"))
     // read #1 — ONE job and ONE collect serve both the histogram (cuts)
-    // and the per-bucket stat partials (merged per file on the driver)
+    // and, when fused, the per-bucket stat partials (merged per file on
+    // the driver)
     val rows = withZ.groupBy(zb.as("zb"))
       .agg(count(lit(1)).as("__n"), statAggs: _*)
       .orderBy("zb").collect()
@@ -593,74 +545,75 @@ object Sinks {
       .write.mode("overwrite").options(writerOptions).parquet(path)
     // per-FILE stats = exact merge of the bucket partials by file id (fid
     // = number of cuts strictly below the bucket — the routing's own rule)
-    val nFiles = cuts.length + 1
-    val hllAcc = Array.fill(nFiles)(
-      sketchCols.map(_ => new Array[Long](sketchM)))
-    val bloomAcc = Array.fill(nFiles)(
-      bloomCols.map(_ => new Array[Long](bloomBits / 64)))
-    val sumAcc = Array.fill(nFiles)(
-      scala.collection.mutable.ArrayBuffer.fill[Option[BigDecimal]](
-        sumCols.size)(None))
-    rows.foreach { r =>
-      val fid = if (single) 0 else cuts.count(_ < r.getLong(0))
-      sketchCols.indices.foreach { i =>
-        val v = r.getSeq[Long](i + 2)
-        val acc = hllAcc(fid)(i)
-        var j = 0
-        while (j < acc.length) {
-          if (v(j) > acc(j)) acc(j) = v(j); j += 1
+    val precomputed = if (!fused) None else Some {
+      val nFiles = cuts.length + 1
+      val hllAcc = Array.fill(nFiles)(
+        sketchCols.map(_ => new Array[Long](sketchM)))
+      val bloomAcc = Array.fill(nFiles)(
+        bloomCols.map(_ => new Array[Long](bloomBits / 64)))
+      val sumAcc = Array.fill(nFiles)(
+        scala.collection.mutable.ArrayBuffer.fill[Option[BigDecimal]](
+          sumCols.size)(None))
+      rows.foreach { r =>
+        val fid = if (single) 0 else cuts.count(_ < r.getLong(0))
+        sketchCols.indices.foreach { i =>
+          val v = r.getSeq[Long](i + 2)
+          val acc = hllAcc(fid)(i)
+          var j = 0
+          while (j < acc.length) {
+            if (v(j) > acc(j)) acc(j) = v(j); j += 1
+          }
+        }
+        bloomCols.indices.foreach { i =>
+          val v = r.getSeq[Long](i + 2 + sketchCols.size)
+          val acc = bloomAcc(fid)(i)
+          var j = 0
+          while (j < acc.length) { acc(j) |= v(j); j += 1 }
+        }
+        sumCols.indices.foreach { i =>
+          Option(r.getDecimal(i + 2 + sketchCols.size + bloomCols.size))
+            .foreach { d =>
+              val cur = sumAcc(fid)(i)
+              sumAcc(fid)(i) =
+                Some(cur.fold(BigDecimal(d))(_ + BigDecimal(d)))
+            }
         }
       }
-      bloomCols.indices.foreach { i =>
-        val v = r.getSeq[Long](i + 2 + sketchCols.size)
-        val acc = bloomAcc(fid)(i)
-        var j = 0
-        while (j < acc.length) { acc(j) |= v(j); j += 1 }
-      }
-      sumCols.indices.foreach { i =>
-        Option(r.getDecimal(i + 2 + sketchCols.size + bloomCols.size))
-          .foreach { d =>
-            val cur = sumAcc(fid)(i)
-            sumAcc(fid)(i) = Some(cur.fold(BigDecimal(d))(_ + BigDecimal(d)))
-          }
-      }
-    }
-    val statsByFid: Map[Int, graft.sources.ZLake.FileStats] =
-      if (rows.isEmpty) Map.empty // empty write: no stats entries, as the
-                                  // stats job over zero rows yields
-      else (0 until nFiles).map { f =>
-        val regs = sketchCols.zipWithIndex.map { case (c, i) =>
-          c.toLowerCase -> hllAcc(f)(i)
+      val statsByFid: Map[Int, graft.sources.ZLake.FileStats] =
+        // empty write: no stats entries, as the stats job over zero rows
+        // yields
+        if (rows.isEmpty) Map.empty
+        else (0 until nFiles).map { f =>
+          val regs = sketchCols.zipWithIndex.map { case (c, i) =>
+            c.toLowerCase -> hllAcc(f)(i)
+          }.toMap
+          val blooms = bloomCols.zipWithIndex.map { case (c, i) =>
+            c.toLowerCase -> (bloomHashes.toLong +: bloomAcc(f)(i))
+          }.toMap
+          val sums = sumCols.zipWithIndex.flatMap { case (c, i) =>
+            // mimic Spark's sum-overflow → NULL: a merged sum past
+            // decimal(38, s) is omitted, as the per-file stats job would
+            sumAcc(f)(i)
+              .filter(v => v.precision - v.scale <= 38 - sumScale(c))
+              .map(v => c.toLowerCase -> v)
+          }.toMap
+          f -> ((regs, blooms, sums))
         }.toMap
-        val blooms = bloomCols.zipWithIndex.map { case (c, i) =>
-          c.toLowerCase -> (bloomHashes.toLong +: bloomAcc(f)(i))
-        }.toMap
-        val sums = sumCols.zipWithIndex.flatMap { case (c, i) =>
-          // mimic Spark's sum-overflow → NULL: a merged sum past
-          // decimal(38, s) is omitted, as the per-file stats job would
-          sumAcc(f)(i)
-            .filter(v => v.precision - v.scale <= 38 - sumScale(c))
-            .map(v => c.toLowerCase -> v)
-        }.toMap
-        f -> ((regs, blooms, sums))
-      }.toMap
-    // fid ↔ written file: a repartition(n, col) task's partition number IS
-    // its part-NNNNN file number (and every fid's range holds rows, so the
-    // file exists); keyed by URI path exactly like the stats job was
-    val conf = spark.sessionState.newHadoopConf()
-    val rootP = new org.apache.hadoop.fs.Path(path)
-    val fs = rootP.getFileSystem(conf)
-    val partNum = "^part-(\\d+)-".r
-    val statsByPath = fs.listStatus(rootP).toSeq.map(_.getPath)
-      .filter(p => p.getName.endsWith(".parquet") &&
-        !p.getName.startsWith("_") && !p.getName.startsWith("."))
-      .flatMap { p =>
+      // fid ↔ written file: a repartition(n, col) task's partition number
+      // IS its part-NNNNN file number (and every fid's range holds rows, so
+      // the file exists); keyed by URI path exactly like the stats job was
+      val conf = spark.sessionState.newHadoopConf()
+      val rootP = new org.apache.hadoop.fs.Path(path)
+      val fs = rootP.getFileSystem(conf)
+      val partNum = "^part-(\\d+)-".r
+      graft.sources.ZLake.dataFilesIn(fs, rootP).map(_.getPath).flatMap { p =>
         partNum.findFirstMatchIn(p.getName).map(_.group(1).toInt)
           .flatMap(statsByFid.get).map(p.toUri.getPath -> _)
       }.toMap
+    }
     graft.sources.ZLake.writeManifest(spark, path, Some(df.schema),
       sketchCols, sketchM, bloomCols, bloomBits, bloomHashes, sumCols,
-      precomputedStats = Some(statsByPath))
+      precomputedStats = precomputed)
   }
 
   /** Cut AFTER the bucket whose cumulative count first reaches the k-th
@@ -762,10 +715,8 @@ object Sinks {
     // same lock, as the journaled mutations
     LakeDelete.withWriterLock(fs, rootPath) {
     val tmpRoot = new Path(rootPath, "_compacting")
-    def parquets(dir: Path): Seq[Path] =
-      fs.listStatus(dir).toSeq.map(_.getPath)
-        .filter(p => p.getName.endsWith(".parquet") &&
-          !p.getName.startsWith("_") && !p.getName.startsWith("."))
+    def parquets(dir: Path): Seq[org.apache.hadoop.fs.FileStatus] =
+      graft.sources.ZLake.dataFilesIn(fs, dir)
     def hasManifest(dir: Path): Boolean =
       fs.exists(new Path(dir, graft.sources.ZLake.ManifestName))
     // `onlyBefore`: compact only partitions whose VALUE sorts strictly
@@ -824,8 +775,7 @@ object Sinks {
         } else {
           // swap landed: finish the interrupted retire of the originals
           parquets(st.getPath).foreach(p => graft.sources.Snapshots.retireAs(
-            fs, rootPath, fs.getFileStatus(p), s"$winName/${p.getName}",
-            snapRefs))
+            fs, rootPath, p, s"$winName/${p.getPath.getName}", snapRefs))
           fs.delete(st.getPath, true); ()
         }
       }
@@ -848,14 +798,19 @@ object Sinks {
         before > filesPerPartition || !hasManifest(dir)
       }
     }
-    DriverPool.run(4)(toStage.map { dir => () =>
+    // Stats columns pass through so compaction does not strip the
+    // manifest sketches/blooms/sums a stats-carrying lake was written with
+    // (the zero-scan queries would silently degrade to scans after the
+    // maintenance cycle)
+    def stage(dir: Path): Unit = {
       val tmp = new Path(tmpRoot, dir.getName)
       if (fs.exists(tmp)) { fs.delete(tmp, true); () }
       zorderedWrite(spark.read.parquet(dir.toString), colA, colB,
         tmp.toString, filesPerPartition, bits,
         sketchCols = sketchCols, bloomCols = bloomCols,
         sumCols = sumCols)
-    })
+    }
+    DriverPool.run(4)(toStage.map(dir => () => stage(dir)))
 
     dirsNow.flatMap { dir =>
       val before = parquets(dir).size
@@ -866,20 +821,9 @@ object Sinks {
       else {
         val tmp = new Path(tmpRoot, dir.getName)
         // staged above; a window that became eligible between the
-        // passes stages here
-        if (!(fs.exists(tmp) && hasManifest(tmp))) {
-          if (fs.exists(tmp)) { fs.delete(tmp, true); () }
-          // both zorderedWrite actions (histogram + write) finish before
-          // the swap below touches the source files. Stats columns pass
-          // through so compaction does not strip the manifest
-          // sketches/blooms/sums a stats-carrying lake was written with
-          // (the zero-scan queries would silently degrade to scans after
-          // the maintenance cycle)
-          zorderedWrite(spark.read.parquet(dir.toString), colA, colB,
-            tmp.toString, filesPerPartition, bits,
-            sketchCols = sketchCols, bloomCols = bloomCols,
-            sumCols = sumCols)
-        }
+        // passes stages here. Both zorderedWrite actions (histogram +
+        // write) finish before the swap below touches the source files
+        if (!(fs.exists(tmp) && hasManifest(tmp))) stage(dir)
         // SWAP by rename-aside, never delete-in-place: the originals move
         // whole to `_compacting/<win>.old` (one rename — the window is
         // never half-gutted), the replacement renames in, and only THEN
@@ -896,8 +840,7 @@ object Sinks {
           s"compaction failed to swap $tmp into $dir — " +
             "the window lives under _compacting until compactLake reruns")
         parquets(old).foreach(p => graft.sources.Snapshots.retireAs(
-          fs, rootPath, fs.getFileStatus(p),
-          s"${dir.getName}/${p.getName}", snapRefs))
+          fs, rootPath, p, s"${dir.getName}/${p.getPath.getName}", snapRefs))
         fs.delete(old, true)
         Some(CompactReport(dir.toString, before, parquets(dir).size,
           recovered = false))

@@ -702,7 +702,7 @@ object Snapshots {
     val pinnedIds = snap.files.map(sf => (sf.rel, sf.len, sf.mtime)).toSet
 
     // triage: the FULL live identity set (also the optimistic read-set)
-    val before = LakeDelete.listDataIdentities(fs, rootPath)
+    val before = Z.dataFileIdentities(fs, rootPath).toSet
     val keptIds = before.intersect(pinnedIds)
     val dropRels = (before -- pinnedIds).toSeq.map(_._1).sorted
     val missing = snap.files.filterNot(sf =>
@@ -746,7 +746,7 @@ object Snapshots {
         // full-set check: an APPEND between triage and commit must
         // conflict too — the restored state must be exactly the pin
         val dataMoved =
-          if (LakeDelete.listDataIdentities(fs, rootPath) != before)
+          if (Z.dataFileIdentities(fs, rootPath).toSet != before)
             Seq(s"data file set changed under RESTORE at $root")
           else Nil
         val dvMoved =

@@ -81,21 +81,54 @@ object ZLake {
                                 sums: Map[String, BigDecimal] = Map.empty)
 
   /** Recursively list data files under `root`, carrying the `col=value`
-    * segments each file sits beneath. */
+    * segments each file sits beneath (keys lowercased), sorted by path.
+    *
+    * THE data-file rule, spelled here and nowhere else: a data file is a
+    * `*.parquet` file whose name and every directory name below `root`
+    * start with neither '_' nor '.'; a `k=v` directory is a partition.
+    * '_'/'.' prefixes are metadata by Hadoop convention (Spark's own
+    * InMemoryFileIndex skips them), so checksums, `_SUCCESS`, manifests,
+    * the journal and every staging dir (`_compacting/`, `.append-…`,
+    * `_txn/`) are invisible to readers and mutations alike. Every other
+    * file-set consumer goes through this listing, [[dataFilesIn]] (one
+    * directory) or [[dataFileIdentities]] (conflict checks). */
   private[graft] def listDataFiles(fs: org.apache.hadoop.fs.FileSystem, root: Path)
       : Seq[(FileStatus, Seq[(String, String)])] =
     listDataFilesDetectTorn(fs, root)._1
+
+  /** The data files directly in `dir` (no descent), sorted by name. A
+    * missing `dir` throws, like [[listDataFiles]]' root. */
+  private[graft] def dataFilesIn(fs: org.apache.hadoop.fs.FileSystem,
+                                 dir: Path): Seq[FileStatus] =
+    listDataFilesDetectTorn(fs, dir, recursive = false)._1.map(_._1)
+
+  /** Every data file's `(root-relative path, len, mtime)`, sorted by path —
+    * the identity set optimistic conflict checks and pins compare. A torn
+    * listing throws `FileNotFoundException` instead of returning a set a
+    * concurrent rewrite shrank. */
+  private[graft] def dataFileIdentities(
+      fs: org.apache.hadoop.fs.FileSystem,
+      root: Path): Seq[(String, Long, Long)] = {
+    val (files, torn) = listDataFilesDetectTorn(fs, root)
+    if (torn) throw new java.io.FileNotFoundException(
+      s"a directory under $root vanished mid-listing")
+    files.map { case (st, _) =>
+      (relPath(root, st.getPath), st.getLen, st.getModificationTime)
+    }
+  }
 
   /** [[listDataFiles]] plus a TORN flag: true when a subdir observed in
     * its parent's listing vanished before its own listStatus ran (a
     * concurrent rewrite swapped it mid-walk). Read paths treat a vanished
     * subtree as empty — per-file (rel, len, mtime) identities, not this
     * listing snapshot, are what correctness reconciles against — but
-    * IDENTITY consumers ([[stateFingerprint]]) must not: a torn listing
-    * can momentarily equal an older pinned fingerprint and wave a stale
-    * materialized view or ANN index through its freshness guard. */
+    * IDENTITY consumers ([[stateFingerprint]], [[dataFileIdentities]])
+    * must not: a torn listing can momentarily equal an older pinned
+    * fingerprint and wave a stale materialized view or ANN index through
+    * its freshness guard. `recursive = false` lists `root` alone. */
   private[graft] def listDataFilesDetectTorn(
-      fs: org.apache.hadoop.fs.FileSystem, root: Path)
+      fs: org.apache.hadoop.fs.FileSystem, root: Path,
+      recursive: Boolean = true)
       : (Seq[(FileStatus, Seq[(String, String)])], Boolean) = {
     var torn = false
     def walk(dir: Path, parts: Seq[(String, String)])
@@ -109,11 +142,8 @@ object ZLake {
         }
       listed.flatMap { st =>
         val name = st.getPath.getName
-        // '_'/'.' prefixes are metadata by Hadoop convention (Spark's own
-        // InMemoryFileIndex skips them) — and [[graft.sinks.Sinks
-        // .compactLake]] relies on it: an in-flight compaction writes
-        // under `_compacting/`, invisible to every reader until the swap
         if (name.startsWith("_") || name.startsWith(".")) Nil
+        else if (st.isDirectory && !recursive) Nil
         else if (st.isDirectory) {
           val part = name.split("=", 2) match {
             case Array(k, v) => Seq(k.toLowerCase -> v)
@@ -679,12 +709,7 @@ object ZLake {
     dirs.distinct.foreach { dir =>
       val fs = dir.getFileSystem(conf)
       if (fs.exists(dir)) {
-        val files = fs.listStatus(dir).toSeq
-          .filter(st => !st.isDirectory &&
-            st.getPath.getName.endsWith(".parquet") &&
-            !st.getPath.getName.startsWith("_") &&
-            !st.getPath.getName.startsWith("."))
-          .sortBy(_.getPath.getName)
+        val files = dataFilesIn(fs, dir)
         if (files.isEmpty) {
           // a dir a mutation fully emptied KEEPS its manifest with an
           // empty file map: the schema must survive "DELETE everything"

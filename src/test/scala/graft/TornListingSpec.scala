@@ -12,9 +12,10 @@ import graft.sources.ZLake
   * listing vanishes before its own listStatus runs (concurrent rewrite
   * swap). Read paths tolerate it as an empty subtree; IDENTITY consumers
   * must not — a torn listing can equal an older pinned fingerprint and
-  * wave a stale MV/ANN index through its freshness guard. Pins all three
-  * branches: subdir-vanish tolerance + torn flag, root fail-loud, and the
-  * fingerprint's never-equal torn token. */
+  * wave a stale MV/ANN index through its freshness guard. Pins all four
+  * branches: subdir-vanish tolerance + torn flag, root fail-loud, the
+  * fingerprint's never-equal torn token and the identity listing's
+  * throw. */
 class TornListingSpec extends AnyFunSuite {
 
   /** Local FS whose listStatus throws FileNotFoundException for any
@@ -70,6 +71,13 @@ class TornListingSpec extends AnyFunSuite {
     assert(a.startsWith("torn:"))
     assert(b.startsWith("torn:"))
     assert(a !== b) // unique token: equality — the only op consumers do — never holds
+  }
+
+  test("the identity listing throws on a torn walk instead of shrinking") {
+    val root = mkLake()
+    intercept[java.io.FileNotFoundException] {
+      ZLake.dataFileIdentities(new VanishingFs("win=1"), new Path(root))
+    }
   }
 
   test("fingerprint of a stable lake is deterministic and torn-free") {
