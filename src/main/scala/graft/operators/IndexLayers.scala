@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sinks.LakeDelete
 import graft.sources.ZLake
 
 /** LAYERED index generations — the machinery behind SELECTIVE compaction
@@ -58,28 +59,18 @@ private[graft] object IndexLayers {
     node.put("partition", partition)
     val arr = node.putArray("replaces")
     replaces.sorted.foreach(arr.add)
-    val tmp = new Path(dir, s".$MetaName.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(om.writeValueAsBytes(node)) finally out.close()
-    require(fs.rename(tmp, new Path(dir, MetaName)),
-      s"could not publish $MetaName in $dir")
+    LakeDelete.publishSidecar(fs, new Path(dir, MetaName),
+      om.writeValueAsString(node))
   }
 
   /** (base dir name, replaced values) if `dir` is a layer; None = full. */
-  def read(fs: FileSystem, dir: Path): Option[(String, Set[String])] = {
-    val p = new Path(dir, MetaName)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val txt = try new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-      val om = new com.fasterxml.jackson.databind.ObjectMapper()
-      val node = om.readTree(txt)
+  def read(fs: FileSystem, dir: Path): Option[(String, Set[String])] =
+    LakeDelete.readSidecar(fs, new Path(dir, MetaName)).map { txt =>
+      val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(txt)
       import scala.jdk.CollectionConverters._
-      Some((node.get("base").asText,
-        node.path("replaces").elements().asScala.map(_.asText).toSet))
+      (node.get("base").asText,
+        node.path("replaces").elements().asScala.map(_.asText).toSet)
     }
-  }
 
   /** The generation chain, newest first, starting at the active dir.
     * `resolve` maps a base NAME from a manifest to its absolute dir
@@ -161,11 +152,10 @@ private[graft] object IndexLayers {
     * chain). Shadowed partitions and `_layer.json` manifests excluded. */
   def resolvedFiles(fs: FileSystem, root: Path, layers: Seq[Layer],
                     partition: String): Seq[(String, Long, Long)] = {
-    val rootUri = root.toUri.getPath
     def rel(p: Path): String = {
-      val s = p.toUri.getPath
-      require(s.startsWith(rootUri), s"$p outside $root")
-      s.stripPrefix(rootUri).stripPrefix("/")
+      require(p.toUri.getPath.startsWith(root.toUri.getPath),
+        s"$p outside $root")
+      ZLake.relPath(root, p)
     }
     val out = Vector.newBuilder[(String, Long, Long)]
     var shadowed = Set.empty[String]

@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
+import graft.operators.IndexOcc.Layout
+import graft.sinks.LakeDelete
 import graft.sources.{ZLake => Z}
 
 /** GENERATION snapshots for the derived indexes (BM25 postings lake, IVF
@@ -30,58 +32,12 @@ object IndexSnapshots {
 
   val SnapDirName = "_graft_index_snapshots"
 
-  /** What makes each index kind tick; sniffed from the layout. */
-  private final case class Layout(ptrName: String, versionPrefix: String,
-                                  defaultActive: String,
-                                  statsFile: Option[String],
-                                  companionDirs: Seq[String],
-                                  partition: String)
-  private val Bm25Layout = Layout("_bm25_postings", "_postings-v", "",
-    Some("_bm25_stats.json"), Nil, "bucket")
-  private val IvfLayout = Layout("_assign", "assign-v", "assign",
-    None, Seq("centroids"), "cell")
-  // IVF,SQ8: the trained bounds are part of the generation's meaning —
-  // restoring pinned codes against rebuilt bounds would silently decode
-  // every distance wrong, so the bounds sidecar is a pinned companion
-  // exactly like the centroids that define the cell space
-  private val IvfSq8Layout = Layout("_assign", "assign-v", "assign",
-    None, Seq("centroids", "sq8_bounds"), "cell")
-
-  private def layoutOf(fs: FileSystem, root: Path): Layout =
-    if (fs.exists(new Path(root, "_bm25_stats.json"))) Bm25Layout
-    else if (fs.exists(new Path(root, "centroids"))) {
-      if (fs.exists(new Path(root, "sq8_bounds"))) IvfSq8Layout
-      else IvfLayout
-    }
-    else throw new IllegalArgumentException(
-      s"$root is not a recognized derived index (no _bm25_stats.json, " +
-        "no centroids/)")
-
-  private def pointerName(fs: FileSystem, root: Path, l: Layout): String = {
-    val ptr = new Path(root, l.ptrName)
-    if (!fs.exists(ptr)) l.defaultActive
-    else {
-      val in = fs.open(ptr)
-      try new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8).trim
-      finally in.close()
-    }
-  }
-
-  private def activeDir(root: Path, name: String): Path =
-    if (name.isEmpty) root else new Path(root, name)
-
-  /** The live generation chain ([[IndexLayers]]), newest first. */
-  private def chainOf(fs: FileSystem, root: Path,
-                      l: Layout): Seq[IndexLayers.Layer] =
-    IndexLayers.chain(fs, activeDir(root, pointerName(fs, root, l)).toString,
-      base => activeDir(root, base).toString)
-
   /** The chain's RESOLVED data-file identities, ROOT-relative — what a
     * pin records; spans layers, excludes shadowed partitions. */
   private def resolvedIdentities(fs: FileSystem, root: Path,
                                  l: Layout): Seq[(String, Long, Long)] =
-    IndexLayers.resolvedFiles(fs, root, chainOf(fs, root, l), l.partition)
+    IndexLayers.resolvedFiles(fs, root, IndexOcc.chain(fs, root, l),
+      l.partition)
 
   private def snapPath(root: Path, tag: String): Path = {
     require(tag.nonEmpty && !tag.contains('/') && !tag.startsWith("."),
@@ -93,11 +49,11 @@ object IndexSnapshots {
   def snapshot(spark: SparkSession, indexRoot: String, tag: String): Unit = {
     val root = new Path(indexRoot)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val l = layoutOf(fs, root)
-    graft.sinks.LakeDelete.withWriterLock(fs, root) {
+    val l = IndexOcc.layoutOf(fs, root)
+    LakeDelete.withWriterLock(fs, root) {
       val dst = snapPath(root, tag)
       require(!fs.exists(dst), s"index snapshot '$tag' exists at $indexRoot")
-      val ptr = pointerName(fs, root, l)
+      val ptr = IndexOcc.activeName(fs, root, l)
       val om = new com.fasterxml.jackson.databind.ObjectMapper()
       val node = om.createObjectNode()
       // format 2 = file rels are ROOT-relative (chain-resolved, r13);
@@ -113,13 +69,8 @@ object IndexSnapshots {
         val o = filesNode.putObject(rel)
         o.put("len", len); o.put("mtime", mt); ()
       }
-      l.statsFile.foreach { sf =>
-        val p = new Path(root, sf)
-        val in = fs.open(p)
-        val bytes = try in.readAllBytes() finally in.close()
-        node.put("stats", new String(bytes,
-          java.nio.charset.StandardCharsets.UTF_8)); ()
-      }
+      l.statsFile.flatMap(sf => LakeDelete.readSidecar(fs, new Path(root, sf)))
+        .foreach(node.put("stats", _))
       val compNode = node.putObject("companions")
       l.companionDirs.foreach { d =>
         val arr = compNode.putArray(d)
@@ -130,10 +81,7 @@ object IndexSnapshots {
         }
       }
       fs.mkdirs(new Path(root, SnapDirName))
-      val tmp = new Path(new Path(root, SnapDirName), s".$tag.json.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(om.writeValueAsBytes(node)) finally out.close()
-      require(fs.rename(tmp, dst), s"could not publish index snapshot $dst")
+      LakeDelete.publishSidecar(fs, dst, om.writeValueAsString(node))
     }
   }
 
@@ -143,13 +91,10 @@ object IndexSnapshots {
                                companions: Map[String, Seq[(String, Long, Long)]])
 
   private def readPin(fs: FileSystem, root: Path, tag: String): Pin = {
-    val p = snapPath(root, tag)
-    require(fs.exists(p), s"no index snapshot '$tag' at $root")
-    val in = fs.open(p)
-    val txt = try new String(in.readAllBytes(),
-      java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = om.readTree(txt)
+    val txt = LakeDelete.readSidecar(fs, snapPath(root, tag))
+    require(txt.isDefined, s"no index snapshot '$tag' at $root")
+    val node = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(txt.get)
     import scala.jdk.CollectionConverters._
     val pointer = node.get("pointer").asText
     val fmt = node.path("version").asInt(1)
@@ -175,10 +120,7 @@ object IndexSnapshots {
       val len = e.getValue.get("len").asLong
       val mt = e.getValue.get("mtime").asLong
       def matchesPin(rel: String): Boolean =
-        try {
-          val st = fs.getFileStatus(new Path(root, rel))
-          st.getLen == len && st.getModificationTime == mt
-        } catch { case _: java.io.FileNotFoundException => false }
+        Z.unchangedStatus(fs, new Path(root, rel), len, mt).isDefined
       val verRelative = key.takeWhile(_ != '/').contains('=')
       val rel =
         if (fmt >= 2 || pointer.isEmpty || !verRelative) key
@@ -242,8 +184,8 @@ object IndexSnapshots {
     val root = new Path(indexRoot)
     val conf = spark.sessionState.newHadoopConf()
     val fs = root.getFileSystem(conf)
-    val l = layoutOf(fs, root)
-    graft.sinks.LakeDelete.withWriterLock(fs, root) {
+    val l = IndexOcc.layoutOf(fs, root)
+    LakeDelete.withWriterLock(fs, root) {
       val pin = readPin(fs, root, tag)
       // companions must be bit-identical: centroids define the cell space
       pin.companions.foreach { case (d, pinned) =>
@@ -254,28 +196,20 @@ object IndexSnapshots {
       }
       // every pinned identity must still resolve (rels are ROOT-relative,
       // spanning however many layers the pinned generation had)
-      val missing = pin.files.filterNot { case (rel, len, mt) =>
-        try {
-          val st = fs.getFileStatus(new Path(root, rel))
-          st.getLen == len && st.getModificationTime == mt
-        } catch { case _: java.io.FileNotFoundException => false }
+      val missing = pin.files.filter { case (rel, len, mt) =>
+        Z.unchangedStatus(fs, new Path(root, rel), len, mt).isEmpty
       }
       require(missing.isEmpty,
         s"index snapshot '$tag' at $indexRoot is unrestorable: " +
           s"${missing.size} pinned file(s) gone or changed, first: " +
           s"${missing.head._1} (vacuumed without pin awareness?)")
       // fast path: the live state IS the pin
-      val curPtr = pointerName(fs, root, l)
+      val curPtr = IndexOcc.activeName(fs, root, l)
       val curFiles = resolvedIdentities(fs, root, l)
       val alreadyPinned = curPtr == pin.pointer &&
         curFiles == pin.files &&
-        pin.stats.forall { s =>
-          val p = new Path(root, l.statsFile.get)
-          val in = fs.open(p)
-          val cur = try new String(in.readAllBytes(),
-            java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-          cur == s
-        }
+        pin.stats.forall(s => LakeDelete.readSidecar(fs,
+          new Path(root, l.statsFile.get)).contains(s))
       if (alreadyPinned) StagedRestore(tag, null, 0, None, curPtr)
       else {
         val basePtr = curPtr
@@ -284,8 +218,7 @@ object IndexSnapshots {
         // dir: other pins and in-flight readers reference it). The staged
         // dir is a FULL generation — restoring a layered pin flattens its
         // chain (no _layer.json is written at publish)
-        val staging =
-          new Path(root, s".restoring-${java.util.UUID.randomUUID()}")
+        val staging = new Path(root, IndexOcc.stageName("restoring"))
         pin.files.foreach { case (rel, _, _) =>
           val src = new Path(root, rel)
           // drop the version-dir component: "assign-v2/cell=3/f.parquet"
@@ -320,8 +253,8 @@ object IndexSnapshots {
     val root = new Path(indexRoot)
     val conf = spark.sessionState.newHadoopConf()
     val fs = root.getFileSystem(conf)
-    val l = layoutOf(fs, root)
-    graft.sinks.LakeDelete.withWriterLock(fs, root) {
+    val l = IndexOcc.layoutOf(fs, root)
+    LakeDelete.withWriterLock(fs, root) {
       // revalidate what stageRestore checked — the stage→publish window
       // is LONG in group restores (every table restore runs in between):
       // a concurrent append must not be silently discarded by the pointer
@@ -334,40 +267,14 @@ object IndexSnapshots {
           s"companion dir '$d' of $indexRoot changed between staging and " +
             s"publish of pin '${staged.tag}' — aborting the restore publish")
       }
-      require(pointerName(fs, root, l) == staged.basePointer &&
+      require(IndexOcc.activeName(fs, root, l) == staged.basePointer &&
           resolvedIdentities(fs, root, l) == staged.baseFiles,
         s"$indexRoot advanced between staging and publish of pin " +
           s"'${staged.tag}' (concurrent append/compaction?) — aborting " +
           "the restore publish; re-run the restore")
-      val maxV = fs.listStatus(root).toSeq.collect {
-        case st if st.isDirectory &&
-          st.getPath.getName.startsWith(l.versionPrefix) =>
-          st.getPath.getName.stripPrefix(l.versionPrefix)
-            .takeWhile(_.isDigit) match {
-            case "" => 0
-            case d => d.toInt
-          }
-      }.foldLeft(0)(math.max)
-      val nextName = s"${l.versionPrefix}${maxV + 1}"
-      val target = new Path(root, nextName)
-      if (fs.exists(target)) fs.delete(target, true) // crashed predecessor
-      require(fs.rename(staged.staging, target),
-        s"index restore failed publishing $target")
-      val tmp = new Path(root, s".${l.ptrName}.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(
-        nextName.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      graft.sinks.LakeDelete.atomicOverwrite(fs, tmp,
-        new Path(root, l.ptrName))
-      staged.stats.foreach { s =>
-        val sf = l.statsFile.get
-        val stmp = new Path(root, s".$sf.tmp")
-        val sout = fs.create(stmp, true)
-        try sout.write(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        finally sout.close()
-        graft.sinks.LakeDelete.atomicOverwrite(fs, stmp, new Path(root, sf))
-      }
+      val nextName = IndexOcc.publishGeneration(fs, root, l, staged.staging)
+      staged.stats.foreach(s => LakeDelete.publishSidecar(fs,
+        new Path(root, l.statsFile.get), s))
       IndexRestoreReport(staged.nFiles, nextName)
     }
   }
@@ -397,13 +304,8 @@ object IndexSnapshots {
         s"companion dir '$d' of $indexRoot changed since pin '$tag'")
     }
     pin.files.foreach { case (rel, len, mt) =>
-      val ok =
-        try {
-          val st = fs.getFileStatus(new Path(root, rel))
-          st.getLen == len && st.getModificationTime == mt
-        } catch { case _: java.io.FileNotFoundException => false }
-      require(ok, s"pinned index file $rel of '$tag' at $indexRoot is " +
-        "gone or changed")
+      require(Z.unchangedStatus(fs, new Path(root, rel), len, mt).isDefined,
+        s"pinned index file $rel of '$tag' at $indexRoot is gone or changed")
     }
   }
 

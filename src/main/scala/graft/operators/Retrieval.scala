@@ -182,38 +182,16 @@ object Retrieval {
   // ---- persisted inverted index --------------------------------------
 
   private val StatsFile = "_bm25_stats.json"
-  private val PostingsPtr = "_bm25_postings"
-
-  /** The ACTIVE postings directory: the version the `_bm25_postings`
-    * pointer names, or the index root itself (the original layout) when
-    * no pointer exists. Every reader and appender resolves through this,
-    * so a [[compactBm25Index]] pointer swap retargets them atomically —
-    * versioned dirs are `_`-prefixed, invisible to a root-layout reader
-    * while being built (the Iceberg version-hint pattern, same as the
-    * IVF index's `_assign`). */
-  private def postingsDir(spark: SparkSession, path: String): String = {
-    val p = new org.apache.hadoop.fs.Path(path, PostingsPtr)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) path
-    else {
-      val in = fs.open(p)
-      val name = try new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8).trim
-      finally in.close()
-      s"$path/$name"
-    }
-  }
 
   /** The postings GENERATION CHAIN, newest first ([[IndexLayers]]): the
-    * active dir plus any base generations a selective compaction layered
-    * over (base "" = the root layout). */
+    * active dir the `_bm25_postings` pointer names — or the index root
+    * itself (the original layout) when no pointer exists — plus any base
+    * generations a selective compaction layered over (base "" = the root
+    * layout). Versioned dirs are `_`-prefixed, invisible to a root-layout
+    * reader while being built ([[IndexOcc]]). */
   private def postingsLayers(spark: SparkSession,
-                             path: String): Seq[IndexLayers.Layer] = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    IndexLayers.chain(fs, postingsDir(spark, path),
-      base => if (base.isEmpty) path else s"$path/$base")
-  }
+                             path: String): Seq[IndexLayers.Layer] =
+    IndexOcc.chain(spark, path, IndexOcc.Bm25Layout)
 
   /** Every probe's view of the postings: the shadow-filtered union of
     * the generation chain — a plain partitioned read (identical bucket
@@ -225,137 +203,33 @@ object Retrieval {
     * [[appendBm25Index]] batch adds small files to each touched bucket
     * directory — the small-files tax every probe pays grows with append
     * count — but rewriting ALL postings per maintenance cycle is a
-    * full-index rewrite to fix a handful of hot buckets. Compaction now
+    * full-index rewrite to fix a handful of hot buckets. Compaction
     * rewrites ONLY buckets whose visible file count exceeds
     * `targetFilesPerBucket` into a versioned dir that LAYERS over the
     * current generation ([[IndexLayers]]); untouched buckets' files are
     * never rewritten or copied. The chain flattens (full rewrite, no
     * manifest) at [[IndexLayers.MaxLayers]]. Publication is one atomic
-    * pointer overwrite: readers see the old postings or the new, never a
-    * mix; a crash leaves the old index live. Retired generations are
-    * removed by [[vacuumBm25Index]] once in-flight readers drain.
-    * Returns (visibleFilesBefore, visibleFilesAfter).
-    *
-    * CONCURRENCY (r12, [[IndexOcc]]): the rewrite stages OUTSIDE the
-    * writer lock into an invisible `.compacting-*` dir; the lock guards
-    * only validate → rename → pointer swap, where validate re-checks the
-    * read-set (pointer still names the generation that was read, and the
-    * CHAIN's file-identity fingerprint is unchanged). An append landing
-    * mid-rewrite makes the validate fail and the compaction RESTAGE from
-    * current state (bounded retries) — the r11 silently-lost-append
-    * window is closed. Readers still need no coordination. */
+    * pointer overwrite after an optimistic read-set validation
+    * ([[IndexOcc.compact]]): readers see the old postings or the new,
+    * never a mix; a racing append makes it restage; a crash leaves the
+    * old index live. Retired generations are removed by
+    * [[vacuumBm25Index]] once in-flight readers drain.
+    * Returns (visibleFilesBefore, visibleFilesAfter). */
   def compactBm25Index(spark: SparkSession, path: String,
                        targetFilesPerBucket: Int = 1): (Int, Int) = {
     require(targetFilesPerBucket >= 1,
       s"targetFilesPerBucket must be >= 1, got $targetFilesPerBucket")
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    var attempt = 0
-    while (attempt < IndexOcc.maxCompactionRetries) {
-      // a crashed fenced ingest's uncommitted files must never be baked
-      // into a rewritten generation — purge them before reading
-      graft.sinks.LakeDelete.withWriterLock(fs, root) {
-        IndexOcc.purgeUncommittedIngest(fs,
-          postingsLayers(spark, path)
-            .map(l => new org.apache.hadoop.fs.Path(l.dir)),
-          readIngestFence(spark, path).getOrElse(-1L))
-      }
-      val layers = postingsLayers(spark, path)
-      val cur = layers.head.dir
-      val fp = IndexLayers.fingerprintChain(fs, layers)
-      val counts = IndexLayers.fileCounts(fs, layers, "bucket")
-      val before = counts.values.sum
-      val eligible =
-        counts.filter(_._2 > targetFilesPerBucket).keys.toVector.sorted
-      val flatten = layers.size >= IndexLayers.MaxLayers ||
-        (eligible.size == counts.size && counts.nonEmpty)
-      if (eligible.isEmpty && !flatten && layers.size == 1)
-        return (before, before) // compact already
-      val staging =
-        new org.apache.hadoop.fs.Path(root, IndexOcc.stageName("compacting"))
-      val selective = !flatten && eligible.nonEmpty
-      val src = readPostings(spark, path)
-      val toWrite =
-        if (selective)
-          src.filter(col("bucket").isin(eligible.map(v => Int.box(v.toInt)): _*))
-        else src
-      toWrite.repartition(col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket")
-        .parquet(staging.toString)
-      // base name as the POINTER spells it ("" = the root layout)
-      val curBase =
-        if (cur == path) "" else cur.substring(cur.lastIndexOf('/') + 1)
-      if (selective)
-        IndexLayers.write(fs, staging, curBase, "bucket", eligible)
-      IndexOcc.stagedHook.get()()
-      val published = graft.sinks.LakeDelete.withWriterLock(fs, root) {
-        val layersNow = postingsLayers(spark, path)
-        val stillCur = layersNow.head.dir == cur &&
-          IndexLayers.fingerprintChain(fs, layersNow) == fp
-        if (!stillCur) { fs.delete(staging, true); None }
-        else {
-          val nextName =
-            if (!curBase.startsWith("_postings-v")) "_postings-v1"
-            else "_postings-v" + (curBase.stripPrefix("_postings-v").toInt + 1)
-          val target = new org.apache.hadoop.fs.Path(root, nextName)
-          // a crashed predecessor's unpublished leftovers — safe to clear,
-          // the name is claimed under the lock
-          if (fs.exists(target)) fs.delete(target, true)
-          if (!fs.rename(staging, target))
-            throw new java.io.IOException(
-              s"failed to publish compacted postings at $target")
-          val tmp = new org.apache.hadoop.fs.Path(root, s".$PostingsPtr.tmp")
-          val out = fs.create(tmp, true)
-          try out.write(
-            nextName.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          finally out.close()
-          graft.sinks.LakeDelete.atomicOverwrite(fs, tmp,
-            new org.apache.hadoop.fs.Path(root, PostingsPtr))
-          Some(nextName)
-        }
-      }
-      published match {
-        case Some(_) =>
-          val after = IndexLayers.fileCounts(fs,
-            postingsLayers(spark, path), "bucket").values.sum
-          return (before, after)
-        case None =>
-          IndexOcc.compactionConflicts.incrementAndGet()
-          attempt += 1
-      }
-    }
-    throw new java.util.ConcurrentModificationException(
-      s"compacting $path lost to concurrent index mutations " +
-        s"${IndexOcc.maxCompactionRetries} times — giving up (the staged " +
-        "rewrites were discarded; the live index is untouched)")
+    IndexOcc.compact(spark, path, IndexOcc.Bm25Layout, targetFilesPerBucket,
+      readIngestFence(spark, path).getOrElse(-1L))
   }
 
   /** Delete retired postings (old `_postings-v*` dirs, and the original
-    * root-layout `bucket=*` dirs once a versioned dir is active) — run
-    * after in-flight readers of the pre-compaction index have drained.
-    * Versions pinned by an [[IndexSnapshots]] generation snapshot are
-    * KEPT (deleting them would make the pin unrestorable). */
-  def vacuumBm25Index(spark: SparkSession, path: String): Int = {
-    // the LIVE GENERATION CHAIN stays ("" = the root layout's own
-    // bucket dirs, still serving as a base layer); retired versions and
-    // — once no live or pinned layer reads through them — the original
-    // root-layout bucket dirs are removed
-    val live = postingsLayers(spark, path).map { l =>
-      if (l.dir == path) ""
-      else l.dir.substring(l.dir.lastIndexOf('/') + 1)
-    }.toSet
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val pinned = IndexSnapshots.pinnedPointers(fs, root)
-    val keepRoot = live.contains("") || pinned.contains("")
-    fs.listStatus(root).toSeq.filter { st =>
-      val n = st.getPath.getName
-      st.isDirectory && !live.contains(n) && !pinned.contains(n) &&
-        (n.startsWith("_postings-v") ||
-          (n.startsWith("bucket=") && !keepRoot))
-    }.map { st => fs.delete(st.getPath, true); 1 }.sum +
-      IndexOcc.sweepStaleStages(fs, root) // crashed append/compaction stages
-  }
+    * root-layout `bucket=*` dirs once no live or pinned layer reads them)
+    * — run after in-flight readers of the pre-compaction index have
+    * drained. Versions pinned by an [[IndexSnapshots]] generation
+    * snapshot are KEPT (deleting them would make the pin unrestorable). */
+  def vacuumBm25Index(spark: SparkSession, path: String): Int =
+    IndexOcc.vacuum(spark, path, IndexOcc.Bm25Layout)
 
   private def bucketOf(term: Column, nBuckets: Int): Column =
     pmod(F.hash60(term), lit(nBuckets.toLong)).cast("int")
@@ -391,9 +265,8 @@ object Retrieval {
     writeStats(spark, path, row.getLong(0), row.getLong(1), nBuckets, fence)
     // a rebuild resets any compaction pointer — readers must resolve to
     // the freshly written root layout, not a retired version
-    val ptr = new org.apache.hadoop.fs.Path(path, PostingsPtr)
-    val fs = ptr.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(ptr, false)
+    val ptr = new org.apache.hadoop.fs.Path(path, IndexOcc.Bm25Layout.ptrName)
+    IndexOcc.fsOf(spark, ptr).delete(ptr, false)
     ()
   }
 
@@ -424,41 +297,32 @@ object Retrieval {
   private def writeStats(spark: SparkSession, path: String, nDocs: Long,
                          totalTokens: Long, nBuckets: Int,
                          fence: Option[Long] = None): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(path, s".$StatsFile.tmp")
-    val out = fs.create(tmp, true)
+    val p = new org.apache.hadoop.fs.Path(path, StatsFile)
     val fencePart = fence.map(b => s""","ingest_batch":$b""").getOrElse("")
-    try out.write(
-      (s"""{"n_docs":$nDocs,"total_tokens":$totalTokens,""" +
-        s""""n_buckets":$nBuckets$fencePart}""").getBytes("UTF-8"))
-    finally out.close()
-    graft.sinks.LakeDelete.atomicOverwrite(fs, tmp,
-      new org.apache.hadoop.fs.Path(path, StatsFile))
+    graft.sinks.LakeDelete.publishSidecar(IndexOcc.fsOf(spark, p), p,
+      s"""{"n_docs":$nDocs,"total_tokens":$totalTokens,""" +
+        s""""n_buckets":$nBuckets$fencePart}""")
+  }
+
+  /** The stats sidecar's JSON, None when no index exists at `path`. */
+  private def statsNode(spark: SparkSession, path: String)
+      : Option[com.fasterxml.jackson.databind.JsonNode] = {
+    val p = new org.apache.hadoop.fs.Path(path, StatsFile)
+    graft.sinks.LakeDelete.readSidecar(IndexOcc.fsOf(spark, p), p).map(
+      new com.fasterxml.jackson.databind.ObjectMapper().readTree(_))
   }
 
   /** The committed streaming-ingest fence, or None if never ingested. */
   private[graft] def readIngestFence(spark: SparkSession,
-                                     path: String): Option[Long] = {
-    val p = new org.apache.hadoop.fs.Path(path, StatsFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    Option(om.readTree(txt).get("ingest_batch")).map(_.asLong)
-  }
+                                     path: String): Option[Long] =
+    statsNode(spark, path).flatMap(n =>
+      Option(n.get("ingest_batch")).map(_.asLong))
 
   private def readStats(spark: SparkSession,
                         path: String): (Long, Long, Int) = {
-    val p = new org.apache.hadoop.fs.Path(path, StatsFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = om.readTree(txt)
+    val node = statsNode(spark, path).getOrElse(
+      throw new java.io.FileNotFoundException(s"no BM25 index at $path " +
+        s"($StatsFile missing)"))
     (node.get("n_docs").asLong, node.get("total_tokens").asLong,
       node.get("n_buckets").asInt)
   }
@@ -468,28 +332,14 @@ object Retrieval {
     * pick between [[writeBm25Index]] and [[appendBm25Index]]. */
   def indexExists(spark: SparkSession, path: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(path, StatsFile)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+    IndexOcc.fsOf(spark, p).exists(p)
   }
 
-  /** Append a NEW batch of documents to the index: postings land in their
-    * term buckets (same hash, same layout), the stats sidecar advances by
-    * one atomic overwrite. Doc ids must be new — a re-appended doc would
-    * double its tf rows. df stays consistent for free: it is derived from
-    * the postings at query time, never stored.
-    *
-    * CONCURRENCY (r12, [[IndexOcc]]): the postings stage outside the
-    * writer lock; the lock guards only the adopt-into-active-dir moves
-    * and the stats advance, with the active directory RE-RESOLVED under
-    * the lock — a concurrent compaction's pointer swap can no longer
-    * strand this batch in a retired directory. */
-  def appendBm25Index(docs: DataFrame, id: Column, text: Column,
-                      path: String): Unit = {
-    val spark = docs.sparkSession
-    val (_, _, nBuckets) = readStats(spark, path)
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stage =
-      new org.apache.hadoop.fs.Path(root, IndexOcc.stageName("append"))
+  /** Stage a batch's postings into `stage` under the index's bucket
+    * count; returns the batch's (docs, tokens) for the stats advance. */
+  private def stagePostings(docs: DataFrame, id: Column, text: Column,
+                            nBuckets: Int,
+                            stage: org.apache.hadoop.fs.Path): (Long, Long) = {
     postingsOf(docs, id, text)
       .withColumn("bucket", bucketOf(col("term"), nBuckets))
       .repartition(col("bucket"))
@@ -497,17 +347,31 @@ object Retrieval {
       .parquet(stage.toString)
     val row = docs.agg(count(lit(1)),
       coalesce(sum(size(TF.tokens(text))), lit(0L)).cast("long")).head()
-    IndexOcc.stagedHook.get()()
-    graft.sinks.LakeDelete.withWriterLock(fs, root) {
-      IndexOcc.adoptStaged(fs, stage,
-        new org.apache.hadoop.fs.Path(postingsDir(spark, path)))
-      // stats re-read under the lock: a concurrent append's advance survives
-      val (n1, t1, nb) = readStats(spark, path)
-      writeStats(spark, path, n1 + row.getLong(0), t1 + row.getLong(1), nb,
-        readIngestFence(spark, path))
-    }
-    fs.delete(stage, true)
-    ()
+    (row.getLong(0), row.getLong(1))
+  }
+
+  /** Advance the stats sidecar by a batch's (docs, tokens), re-read under
+    * the writer lock so a concurrent append's advance survives. */
+  private def advanceStats(spark: SparkSession, path: String,
+                           batch: (Long, Long), fence: Option[Long]): Unit = {
+    val (n1, t1, nb) = readStats(spark, path)
+    writeStats(spark, path, n1 + batch._1, t1 + batch._2, nb, fence)
+  }
+
+  /** Append a NEW batch of documents to the index: postings land in their
+    * term buckets (same hash, same layout), the stats sidecar advances by
+    * one atomic overwrite. Doc ids must be new — a re-appended doc would
+    * double its tf rows. df stays consistent for free: it is derived from
+    * the postings at query time, never stored. The postings stage
+    * outside the writer lock and adopt into the active dir re-resolved
+    * under it ([[IndexOcc.append]]); the stats advance runs under it. */
+  def appendBm25Index(docs: DataFrame, id: Column, text: Column,
+                      path: String): Unit = {
+    val spark = docs.sparkSession
+    val (_, _, nBuckets) = readStats(spark, path)
+    IndexOcc.append(spark, path, IndexOcc.Bm25Layout)(
+      stagePostings(docs, id, text, nBuckets, _))(
+      advanceStats(spark, path, _, readIngestFence(spark, path)))
   }
 
   /** FENCED, EXACTLY-ONCE batch ingest — the `foreachBatch` body of a
@@ -515,15 +379,12 @@ object Retrieval {
     *
     *  - batch 0 BOOTSTRAPS the index (full build — idempotent, mode
     *    overwrite) and commits the fence with the stats;
-    *  - a batch at-or-below the committed fence returns false and does
-    *    NOTHING (the Structured Streaming replay path after a restart);
-    *  - otherwise the postings stage outside the writer lock, and under
-    *    it: any UNCOMMITTED `ingest<B>-*` residue (a crashed attempt's
-    *    partial adoption) is purged, the batch adopts with
+    *  - otherwise [[IndexOcc.ingest]], the fence riding inside the stats
+    *    sidecar: a batch at-or-below it returns false and does NOTHING
+    *    (the Structured Streaming replay path after a restart); a new
+    *    batch's uncommitted residue is purged, it adopts with
     *    `ingest<batchId>-` names, and stats + fence publish in ONE
-    *    atomic overwrite — the commit point. A crash anywhere before
-    *    that overwrite leaves the fence unmoved, so the replay purges
-    *    and re-adopts; after it, the replay no-ops. Probes may see an
+    *    atomic overwrite — the commit point. Probes may see an
     *    uncommitted fraction only between a crash and its replay, and
     *    compaction purges uncommitted files before rewriting, so they
     *    can never be baked into a generation. */
@@ -538,38 +399,10 @@ object Retrieval {
       writeBm25IndexFenced(batch, id, text, path, nBuckets, Some(batchId))
       return true
     }
-    if (readIngestFence(spark, path).exists(_ >= batchId)) return false
-    val (_, _, nb0) = readStats(spark, path)
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stage =
-      new org.apache.hadoop.fs.Path(root, IndexOcc.stageName("append"))
-    postingsOf(batch, id, text)
-      .withColumn("bucket", bucketOf(col("term"), nb0))
-      .repartition(col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(stage.toString)
-    val row = batch.agg(count(lit(1)),
-      coalesce(sum(size(TF.tokens(text))), lit(0L)).cast("long")).head()
-    IndexOcc.stagedHook.get()()
-    val adopted = graft.sinks.LakeDelete.withWriterLock(fs, root) {
-      val fence = readIngestFence(spark, path).getOrElse(-1L)
-      if (fence >= batchId) { fs.delete(stage, true); false }
-      else {
-        IndexOcc.purgeUncommittedIngest(fs,
-          postingsLayers(spark, path)
-            .map(l => new org.apache.hadoop.fs.Path(l.dir)), fence)
-        IndexOcc.adoptStaged(fs, stage,
-          new org.apache.hadoop.fs.Path(postingsDir(spark, path)),
-          s"ingest$batchId")
-        val (n1, t1, nb) = readStats(spark, path)
-        writeStats(spark, path, n1 + row.getLong(0), t1 + row.getLong(1),
-          nb, Some(batchId))
-        true
-      }
-    }
-    fs.delete(stage, true)
-    adopted
+    IndexOcc.ingest(spark, path, IndexOcc.Bm25Layout, batchId)(
+      readIngestFence(spark, path))(
+      stagePostings(batch, id, text, readStats(spark, path)._3, _))(
+      advanceStats(spark, path, _, Some(batchId)))
   }
 
   /** Maintain the index from a STREAM: checkpointed `foreachBatch` over

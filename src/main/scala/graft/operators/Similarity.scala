@@ -704,11 +704,6 @@ object Similarity {
     c.withColumn("cell", assignCell(spark, refined)(col("cv")))
       .write.mode("overwrite").partitionBy("cell")
       .parquet(s"$path/assign")
-    // a rebuild resets any compaction pointer — readers must resolve to
-    // the freshly written directory, not a retired version
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(new org.apache.hadoop.fs.Path(root, "_assign"), false)
     writeMetric(spark, path, "cosine")
   }
 
@@ -757,34 +752,29 @@ object Similarity {
     fn(qvec)
   }
 
-  /** Metric sidecar: `_metric` names the distance the index was built
-    * under ("cosine" / "l2" / "ip"); absence = cosine (the pre-r12
+  /** Metric sidecar, written as the last step of every build: `_metric`
+    * names the distance the index was built under ("cosine" / "l2" /
+    * "ip" / "l2-sq8" / "cosine-sq8"); absence = cosine (the pre-r12
     * layout). [[graft.plans.AnnRewrite]] reads it at registration so the
     * declarative rewrite only answers queries in the INDEX'S metric —
     * pgvector's per-operator-class index binding. */
   private def writeMetric(spark: org.apache.spark.sql.SparkSession,
                           path: String, metric: String): Unit = {
     val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val tmp = new org.apache.hadoop.fs.Path(root, "._metric.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(metric.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    graft.sinks.LakeDelete.atomicOverwrite(fs, tmp,
-      new org.apache.hadoop.fs.Path(root, "_metric"))
+    val fs = IndexOcc.fsOf(spark, root)
+    // a (re)build resets any compaction pointer — readers must resolve to
+    // the freshly written `assign`, not a retired version
+    fs.delete(new org.apache.hadoop.fs.Path(root, IndexOcc.IvfLayout.ptrName),
+      false)
+    graft.sinks.LakeDelete.publishSidecar(fs,
+      new org.apache.hadoop.fs.Path(root, "_metric"), metric)
   }
 
   private[graft] def indexMetric(spark: org.apache.spark.sql.SparkSession,
                                  path: String): String = {
     val p = new org.apache.hadoop.fs.Path(path, "_metric")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) "cosine"
-    else {
-      val in = fs.open(p)
-      try new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8).trim
-      finally in.close()
-    }
+    graft.sinks.LakeDelete.readSidecar(IndexOcc.fsOf(spark, p), p)
+      .map(_.trim).getOrElse("cosine")
   }
 
   /** Persist an IVF index under the L2 metric: the quantized SEEDS are
@@ -846,9 +836,6 @@ object Similarity {
       .drop("cv")
       .write.mode("overwrite").partitionBy("cell")
       .parquet(s"$path/assign")
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(new org.apache.hadoop.fs.Path(root, "_assign"), false)
     writeMetric(spark, path, "l2-sq8")
   }
 
@@ -884,9 +871,6 @@ object Similarity {
       .drop("cv")
       .write.mode("overwrite").partitionBy("cell")
       .parquet(s"$path/assign")
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(new org.apache.hadoop.fs.Path(root, "_assign"), false)
     writeMetric(spark, path, "cosine-sq8")
   }
 
@@ -1017,9 +1001,6 @@ object Similarity {
       .withColumn("cell", assign(col("cv")))
       .write.mode("overwrite").partitionBy("cell")
       .parquet(s"$path/assign")
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(new org.apache.hadoop.fs.Path(root, "_assign"), false)
     writeMetric(spark, path, metric)
   }
 
@@ -1178,31 +1159,17 @@ object Similarity {
   /** The index's ACTIVE assignment directory: named by the `_assign`
     * pointer file when present (written atomically by
     * [[compactIvfIndex]] — the Iceberg version-hint pattern), the
-    * original `assign` otherwise. Every reader and [[appendIvfIndex]]
-    * resolve through this. */
+    * original `assign` otherwise ([[IndexOcc]]). */
   private[graft] def assignDir(spark: org.apache.spark.sql.SparkSession,
-                               path: String): String = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val ptr = new org.apache.hadoop.fs.Path(root, "_assign")
-    val name =
-      if (fs.exists(ptr)) {
-        val in = fs.open(ptr)
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
-      } else "assign"
-    s"$path/$name"
-  }
+                               path: String): String =
+    IndexOcc.activeDir(spark, path, IndexOcc.IvfLayout).toString
 
   /** The assignment GENERATION CHAIN, newest first ([[IndexLayers]]):
     * the active dir plus any base generations a selective compaction
     * layered over. One-element for a fresh or fully-compacted index. */
   private[graft] def assignLayers(spark: org.apache.spark.sql.SparkSession,
-                                  path: String): Seq[IndexLayers.Layer] = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    IndexLayers.chain(fs, assignDir(spark, path), base => s"$path/$base")
-  }
+                                  path: String): Seq[IndexLayers.Layer] =
+    IndexOcc.chain(spark, path, IndexOcc.IvfLayout)
 
   /** Every probe's view of the assignment lake: the shadow-filtered
     * union of the generation chain. Collapses to a plain partitioned
@@ -1217,7 +1184,7 @@ object Similarity {
     * directories, and at 100 TB the small-files tax on probe reads grows
     * without bound — but rewriting the WHOLE assignment per maintenance
     * cycle is its own scale bug (a full-index rewrite to fix a handful of
-    * hot cells). Compaction now rewrites ONLY cells whose visible file
+    * hot cells). Compaction rewrites ONLY cells whose visible file
     * count exceeds `targetFilesPerCell` into a new versioned dir that
     * LAYERS over the current generation ([[IndexLayers]] — a
     * `_layer.json` names the base and the replaced cells); untouched
@@ -1225,245 +1192,78 @@ object Similarity {
     * serving them from their original generation, byte-identical. The
     * chain flattens (full rewrite, no manifest) when it reaches
     * [[IndexLayers.MaxLayers]], bounding per-probe listings. Publication
-    * is still one ATOMIC pointer overwrite: readers see the old or the
-    * new generation, never a mix; a crash mid-compaction leaves the old
-    * index fully live. Retired directories stay on disk for in-flight
-    * readers until [[vacuumIvfIndex]]. Row content is unchanged, so
-    * probe results are bit-identical (AnnRewriteSpec, CompactionSpec). */
+    * is one ATOMIC pointer overwrite ([[IndexOcc.compact]]): readers see
+    * the old or the new generation, never a mix; a crash mid-compaction
+    * leaves the old index fully live. Retired directories stay on disk
+    * for in-flight readers until [[vacuumIvfIndex]]. Row content is
+    * unchanged, so probe results are bit-identical (AnnRewriteSpec,
+    * CompactionSpec). */
   def compactIvfIndex(spark: org.apache.spark.sql.SparkSession,
                       path: String, targetFilesPerCell: Int = 1): Unit = {
     require(targetFilesPerCell >= 1,
       s"targetFilesPerCell must be >= 1, got $targetFilesPerCell")
-    // CONCURRENCY (r12, [[IndexOcc]]): rewrite stages outside the writer
-    // lock into an invisible `.compacting-*` dir; the lock guards only
-    // validate (pointer + CHAIN fingerprint unchanged) → rename →
-    // atomic pointer swap. An append landing mid-rewrite restages the
-    // compaction instead of being silently stranded in a retired dir.
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    var attempt = 0
-    while (attempt < IndexOcc.maxCompactionRetries) {
-      // a crashed fenced ingest's uncommitted files must never be baked
-      // into a rewritten generation — purge them before reading
-      graft.sinks.LakeDelete.withWriterLock(fs, root) {
-        IndexOcc.purgeUncommittedIngest(fs,
-          assignLayers(spark, path)
-            .map(l => new org.apache.hadoop.fs.Path(l.dir)),
-          readIvfFence(spark, path).getOrElse(-1L))
-      }
-      val layers = assignLayers(spark, path)
-      val cur = layers.head.dir
-      val fp = IndexLayers.fingerprintChain(fs, layers)
-      val counts = IndexLayers.fileCounts(fs, layers, "cell")
-      val eligible = counts.filter(_._2 > targetFilesPerCell).keys.toVector.sorted
-      val flatten = layers.size >= IndexLayers.MaxLayers ||
-        (eligible.size == counts.size && counts.nonEmpty)
-      if (eligible.isEmpty && !flatten && layers.size == 1) return // compact already
-      val staging =
-        new org.apache.hadoop.fs.Path(root, IndexOcc.stageName("compacting"))
-      val src = readAssign(spark, path)
-      val selective = !flatten && eligible.nonEmpty
-      val toWrite =
-        if (selective)
-          src.filter(col("cell").isin(eligible.map(v => Int.box(v.toInt)): _*))
-        else src
-      toWrite.repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(staging.toString)
-      val curName = cur.substring(cur.lastIndexOf('/') + 1)
-      if (selective)
-        IndexLayers.write(fs, staging, curName, "cell", eligible)
-      IndexOcc.stagedHook.get()()
-      val published = graft.sinks.LakeDelete.withWriterLock(fs, root) {
-        val layersNow = assignLayers(spark, path)
-        val stillCur = layersNow.head.dir == cur &&
-          IndexLayers.fingerprintChain(fs, layersNow) == fp
-        if (!stillCur) { fs.delete(staging, true); false }
-        else {
-          val nextName =
-            if (curName == "assign") "assign-v1"
-            else "assign-v" + (curName.stripPrefix("assign-v").toInt + 1)
-          val target = new org.apache.hadoop.fs.Path(root, nextName)
-          if (fs.exists(target)) fs.delete(target, true) // crashed predecessor
-          if (!fs.rename(staging, target))
-            throw new java.io.IOException(
-              s"failed to publish compacted assignment at $target")
-          val tmp = new org.apache.hadoop.fs.Path(root, s"_assign.tmp-$nextName")
-          val out = fs.create(tmp, true)
-          try out.write(
-            nextName.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          finally out.close()
-          graft.sinks.LakeDelete.atomicOverwrite(fs, tmp,
-            new org.apache.hadoop.fs.Path(root, "_assign"))
-          true
-        }
-      }
-      if (published) return
-      IndexOcc.compactionConflicts.incrementAndGet()
-      attempt += 1
-    }
-    throw new java.util.ConcurrentModificationException(
-      s"compacting $path lost to concurrent index mutations " +
-        s"${IndexOcc.maxCompactionRetries} times — giving up (staged " +
-        "rewrites discarded; the live index is untouched)")
+    IndexOcc.compact(spark, path, IndexOcc.IvfLayout, targetFilesPerCell,
+      readIvfFence(spark, path).getOrElse(-1L))
+    ()
   }
 
-  /** Delete retired assignment directories (everything `assign*` outside
-    * the LIVE GENERATION CHAIN) — run once in-flight readers of the
+  /** Delete retired assignment directories (`assign` and `assign-v*`
+    * outside the LIVE GENERATION CHAIN) — run once in-flight readers of the
     * pre-compaction index have drained. Versions pinned by an
     * [[IndexSnapshots]] generation snapshot are KEPT (deleting them would
     * make the pin unrestorable); a layered chain keeps every base a live
     * or pinned layer still reads through. */
   def vacuumIvfIndex(spark: org.apache.spark.sql.SparkSession,
-                     path: String): Int = {
-    val live = assignLayers(spark, path)
-      .map(l => l.dir.substring(l.dir.lastIndexOf('/') + 1)).toSet
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val pinned = IndexSnapshots.pinnedPointers(fs, root)
-    fs.listStatus(root).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("assign")
-        && !live.contains(st.getPath.getName)
-        && !pinned.contains(st.getPath.getName))
-      .map { st => fs.delete(st.getPath, true); 1 }.sum +
-      IndexOcc.sweepStaleStages(fs, root) // crashed append/compaction stages
-  }
+                     path: String): Int =
+    IndexOcc.vacuum(spark, path, IndexOcc.IvfLayout)
 
   /** Assign a NEW corpus batch to the index's STORED centroids and append
     * it under the matching `cell=` directories — incremental corpus
     * growth without touching existing cells' files or recomputing
     * anything (the centroids are fixed; queries immediately see the new
-    * vectors). */
+    * vectors). The batch stages outside the writer lock and adopts into
+    * the active dir re-resolved under it ([[IndexOcc.append]]). */
   def appendIvfIndex(corpus: DataFrame, corpusId: Column, corpusVec: Column,
-                     path: String): Unit = {
-    // CONCURRENCY (r12, [[IndexOcc]]): stage outside the writer lock, then
-    // adopt into the active dir RE-RESOLVED under the lock — a concurrent
-    // compaction's pointer swap can no longer strand this batch.
-    val spark = corpus.sparkSession
-    val cents = readCentroids(spark, path)
-    // assignment follows the INDEX'S metric (the _metric sidecar): an
-    // append into an L2/IP index must land rows in the cells its probes
-    // will search, not cosine's
-    val assign: Column => Column = indexMetric(spark, path) match {
-      case "l2" => assignCellL2(spark, cents)
-      case "ip" => assignCellIp(spark, cents)
-      // a raw-vector append into a codes-only lake would silently corrupt
-      // every later probe — refuse loudly, the sq8 append encodes
-      case "l2-sq8" | "cosine-sq8" => throw new IllegalArgumentException(
-        s"$path is an IVF,SQ8 index (codes-only rows) — use appendIvfIndexSq8")
-      case _ => assignCell(spark, cents)
-    }
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val stage =
-      new org.apache.hadoop.fs.Path(root, IndexOcc.stageName("append"))
-    corpus.select(corpusId.as("neighbor_id"),
-        F.vec_quantize(corpusVec, 1000).as("cv"))
-      .withColumn("cell", assign(col("cv")))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(stage.toString)
-    IndexOcc.stagedHook.get()()
-    graft.sinks.LakeDelete.withWriterLock(fs, root) {
-      IndexOcc.adoptStaged(fs, stage,
-        new org.apache.hadoop.fs.Path(assignDir(spark, path)))
-    }
-    fs.delete(stage, true)
-    ()
-  }
+                     path: String): Unit =
+    appendIvf(corpus, corpusId, corpusVec, path, sq8 = false)
 
   /** Append a batch to a persisted `IVF,SQ8` index: rows assign
     * l2-nearest on their RAW quantized vectors, ENCODE against the
     * index's TRAINED bounds (FAISS semantics — bounds never retrain on
     * append; out-of-range values clamp, which is the quantizer's
     * saturation contract), and adopt into the active assignment dir
-    * under the same [[IndexOcc]] writer-lock protocol as
-    * [[appendIvfIndex]]. */
+    * like [[appendIvfIndex]]. */
   def appendIvfIndexSq8(corpus: DataFrame, corpusId: Column,
-                        corpusVec: Column, path: String): Unit = {
+                        corpusVec: Column, path: String): Unit =
+    appendIvf(corpus, corpusId, corpusVec, path, sq8 = true)
+
+  private def appendIvf(corpus: DataFrame, id: Column, vec: Column,
+                        path: String, sq8: Boolean): Unit = {
     val spark = corpus.sparkSession
     val metric = indexMetric(spark, path)
-    require(metric == "l2-sq8" || metric == "cosine-sq8",
+    val codesOnly = metric == "l2-sq8" || metric == "cosine-sq8"
+    // a raw-vector append into a codes-only lake would silently corrupt
+    // every later probe — refuse loudly, the sq8 append encodes
+    if (sq8) require(codesOnly,
       s"$path is not an IVF,SQ8 index — use appendIvfIndex")
-    val cents = readCentroids(spark, path)
-    val (mn, mx) = readSq8Bounds(spark, path)
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val stage =
-      new org.apache.hadoop.fs.Path(root, IndexOcc.stageName("append"))
-    // assignment follows the index's metric on the RAW quantized vector
-    val assign: Column => Column =
-      if (metric == "cosine-sq8") assignCell(spark, cents)
-      else assignCellL2(spark, cents)
-    corpus.select(corpusId.as("neighbor_id"),
-        F.vec_quantize(corpusVec, 1000).as("cv"))
-      .withColumn("cell", assign(col("cv")))
-      .withColumn("codes", F.vec_sq8_encode(col("cv"),
-        typedlit(mn.toSeq), typedlit(mx.toSeq)))
-      .drop("cv")
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(stage.toString)
-    IndexOcc.stagedHook.get()()
-    graft.sinks.LakeDelete.withWriterLock(fs, root) {
-      IndexOcc.adoptStaged(fs, stage,
-        new org.apache.hadoop.fs.Path(assignDir(spark, path)))
-    }
-    fs.delete(stage, true)
-    ()
+    else if (codesOnly) throw new IllegalArgumentException(
+      s"$path is an IVF,SQ8 index (codes-only rows) — use appendIvfIndexSq8")
+    IndexOcc.append(spark, path, IndexOcc.IvfLayout)(stageCells(cellRows(
+      spark, path, metric, readCentroids(spark, path), corpus, id, vec), _))(
+      _ => ())
   }
 
-  private def readIvfFence(spark: org.apache.spark.sql.SparkSession,
-                           path: String): Option[Long] = {
-    val p = new org.apache.hadoop.fs.Path(path, "_ingest_fence")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val txt = try new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8).trim
-      finally in.close()
-      Some(txt.toLong)
-    }
-  }
-
-  private def writeIvfFence(spark: org.apache.spark.sql.SparkSession,
-                            path: String, batchId: Long): Unit = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val tmp = new org.apache.hadoop.fs.Path(root, "._ingest_fence.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(batchId.toString
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    graft.sinks.LakeDelete.atomicOverwrite(fs, tmp,
-      new org.apache.hadoop.fs.Path(root, "_ingest_fence"))
-  }
-
-  /** FENCED, EXACTLY-ONCE batch ingest into an EXISTING IVF index — the
-    * `foreachBatch` body of [[streamIngestIvf]], with the index's metric
-    * dispatched exactly like the append verbs (an IVF,SQ8 index encodes
-    * the batch against its trained bounds). Semantics mirror
-    * [[Retrieval.ingestBatchBm25]]: a batch at-or-below the committed
-    * `_ingest_fence` no-ops (the streaming replay path); otherwise any
-    * uncommitted `ingest<B>-*` residue from a crashed attempt is purged
-    * under the writer lock, the batch adopts with `ingest<batchId>-`
-    * names, and the fence advance (one atomic overwrite) is the commit
-    * point. Centroids are trained offline (the build verbs) — streaming
-    * ingest only grows cells, the FAISS serving contract. */
-  def ingestBatchIvf(batch: DataFrame, id: Column, vec: Column,
-                     path: String, batchId: Long): Boolean = {
-    val spark = batch.sparkSession
-    if (readIvfFence(spark, path).exists(_ >= batchId)) return false
-    val cents = readCentroids(spark, path)
-    require(cents.nonEmpty, s"no IVF index at $path — build it first " +
-      "(writeIvfIndex*); streaming ingest does not train centroids")
-    val metric = indexMetric(spark, path)
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val stage =
-      new org.apache.hadoop.fs.Path(root, IndexOcc.stageName("append"))
+  /** A batch's assignment rows under the INDEX'S metric (the `_metric`
+    * sidecar): an append into an L2/IP index must land rows in the cells
+    * its probes will search, not cosine's, and an IVF,SQ8 index stores
+    * the batch encoded against its trained bounds (codes, no raw `cv`). */
+  private def cellRows(spark: org.apache.spark.sql.SparkSession,
+                       path: String, metric: String,
+                       cents: Array[(Int, Array[Long])], batch: DataFrame,
+                       id: Column, vec: Column): DataFrame = {
     val quantized = batch.select(id.as("neighbor_id"),
       F.vec_quantize(vec, 1000).as("cv"))
-    val staged = metric match {
+    metric match {
       case "l2-sq8" | "cosine-sq8" =>
         val (mn, mx) = readSq8Bounds(spark, path)
         val assign: Column => Column =
@@ -1481,24 +1281,45 @@ object Similarity {
       case _ => quantized
         .withColumn("cell", assignCell(spark, cents)(col("cv")))
     }
-    staged.write.mode("overwrite").partitionBy("cell")
-      .parquet(stage.toString)
-    IndexOcc.stagedHook.get()()
-    val adopted = graft.sinks.LakeDelete.withWriterLock(fs, root) {
-      val fence = readIvfFence(spark, path).getOrElse(-1L)
-      if (fence >= batchId) { fs.delete(stage, true); false }
-      else {
-        IndexOcc.purgeUncommittedIngest(fs,
-          assignLayers(spark, path)
-            .map(l => new org.apache.hadoop.fs.Path(l.dir)), fence)
-        IndexOcc.adoptStaged(fs, stage,
-          new org.apache.hadoop.fs.Path(assignDir(spark, path)),
-          s"ingest$batchId")
-        writeIvfFence(spark, path, batchId)
-        true
-      }
+  }
+
+  private def stageCells(rows: DataFrame,
+                         stage: org.apache.hadoop.fs.Path): Unit =
+    rows.write.mode("overwrite").partitionBy("cell").parquet(stage.toString)
+
+  private def readIvfFence(spark: org.apache.spark.sql.SparkSession,
+                           path: String): Option[Long] = {
+    val p = new org.apache.hadoop.fs.Path(path, "_ingest_fence")
+    graft.sinks.LakeDelete.readSidecar(IndexOcc.fsOf(spark, p), p)
+      .map(_.trim.toLong)
+  }
+
+  /** FENCED, EXACTLY-ONCE batch ingest into an EXISTING IVF index — the
+    * `foreachBatch` body of [[streamIngestIvf]], with the index's metric
+    * dispatched exactly like the append verbs (an IVF,SQ8 index encodes
+    * the batch against its trained bounds). Semantics are
+    * [[IndexOcc.ingest]]'s, the fence being the `_ingest_fence` sidecar:
+    * a batch at-or-below it no-ops (the streaming replay path);
+    * otherwise uncommitted `ingest<B>-*` residue is purged under the
+    * writer lock, the batch adopts with `ingest<batchId>-` names, and the
+    * fence advance (one atomic overwrite) is the commit point. Centroids
+    * are trained offline (the build verbs) — streaming ingest only grows
+    * cells, the FAISS serving contract. */
+  def ingestBatchIvf(batch: DataFrame, id: Column, vec: Column,
+                     path: String, batchId: Long): Boolean = {
+    val spark = batch.sparkSession
+    val fenceFile = new org.apache.hadoop.fs.Path(path, "_ingest_fence")
+    val adopted = IndexOcc.ingest(spark, path, IndexOcc.IvfLayout, batchId)(
+      readIvfFence(spark, path)) { stage =>
+      val cents = readCentroids(spark, path)
+      require(cents.nonEmpty, s"no IVF index at $path — build it first " +
+        "(writeIvfIndex*); streaming ingest does not train centroids")
+      stageCells(cellRows(spark, path, indexMetric(spark, path), cents,
+        batch, id, vec), stage)
+    } { _ =>
+      graft.sinks.LakeDelete.publishSidecar(
+        IndexOcc.fsOf(spark, fenceFile), fenceFile, batchId.toString)
     }
-    fs.delete(stage, true)
     // declaratively-served corpora registered with autoRefresh re-arm
     // their freshness fingerprint on every committed batch (VERDICT r13
     // #5) — without this, streaming ingest advances the index while the

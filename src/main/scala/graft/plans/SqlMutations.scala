@@ -454,10 +454,7 @@ case class GraftManifestCommand(root: String) extends LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[Row] = {
     val rootPath = new org.apache.hadoop.fs.Path(root)
     ZLake.envelopes(spark, root).map { fe =>
-      val relp = {
-        val r = rootPath.toUri.getPath.stripSuffix("/")
-        fe.status.getPath.toUri.getPath.stripPrefix(r).stripPrefix("/")
-      }
+      val relp = ZLake.relPath(rootPath, fe.status.getPath)
       val part = fe.partitionValues
         .map { case (k, v) => s"$k=$v" }.mkString("/")
       val stats = Seq(

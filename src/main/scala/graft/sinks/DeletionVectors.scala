@@ -278,23 +278,15 @@ object DeletionVectors {
     // stage the consolidated store, commit via the shared journal
     val storeRel = stageStore(spark, fs, txnDir, merged)
 
-    val rootUri = rootPath.toUri.getPath.stripSuffix("/")
-    val dropRels = oldStore.map(p =>
-      p.toUri.getPath.stripPrefix(rootUri).stripPrefix("/"))
+    val dropRels = oldStore.map(ZLake.relPath(rootPath, _))
     LakeDelete.stagedHook.get()()
     // read-set: the scanned data files (positions bind to their exact
     // bytes) plus the store files this commit replaces
     val dvFes = oldStore.map(p => fs.getFileStatus(p))
     LakeDelete.commitStaged(spark, fs, rootPath, txnRel, dropRels,
       Seq(storeRel), None,
-      () => LakeDelete.changedIdentities(fs, positive) ++
-        dvFes.flatMap { st =>
-          val cur = try Some(fs.getFileStatus(st.getPath))
-          catch { case _: java.io.FileNotFoundException => None }
-          if (cur.exists(c => c.getLen == st.getLen &&
-            c.getModificationTime == st.getModificationTime)) None
-          else Some(st.getPath.toString)
-        }) match {
+      () => LakeDelete.changedIdentities(fs,
+        positive.map(_.status) ++ dvFes)) match {
       case Left(c) => Left(c)
       case Right(()) => Right(MoRReport(idx.fes.size, fresh.size,
         newRows.toLong, 1))
@@ -337,9 +329,7 @@ object DeletionVectors {
       .select(col("file"), col("positions")).collect()
       .map(r => r.getString(0) -> r.getSeq[Long](1).toArray).toMap
     val idx = ZLake.index(spark, root)
-    val rootUri = rootPath.toUri.getPath.stripSuffix("/")
-    def rel(p: Path): String =
-      p.toUri.getPath.stripPrefix(rootUri).stripPrefix("/")
+    def rel(p: Path): String = ZLake.relPath(rootPath, p)
     val touched = idx.fes.filter(fe =>
       dvRows.get(rel(fe.status.getPath)).exists(_.nonEmpty))
     val partCols = idx.partitionCols
@@ -369,14 +359,8 @@ object DeletionVectors {
     LakeDelete.stagedHook.get()()
     LakeDelete.commitStaged(spark, fs, rootPath, txnRel, dropRels, adds,
       None,
-      () => LakeDelete.changedIdentities(fs, touched) ++
-        dvStatuses.flatMap { st =>
-          val cur = try Some(fs.getFileStatus(st.getPath))
-          catch { case _: java.io.FileNotFoundException => None }
-          if (cur.exists(c => c.getLen == st.getLen &&
-            c.getModificationTime == st.getModificationTime)) None
-          else Some(st.getPath.toString)
-        }) match {
+      () => LakeDelete.changedIdentities(fs,
+        touched.map(_.status) ++ dvStatuses)) match {
       case Left(c) => Left(c)
       case Right(()) =>
         // the store dir itself (now empty) retires with the commit

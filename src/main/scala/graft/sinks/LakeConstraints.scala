@@ -115,13 +115,10 @@ object LakeConstraints {
       val o = arr.addObject()
       o.put("name", c.name); o.put("expr", c.sqlExpr); ()
     }
-    val tmp = new Path(root, s".$SidecarName.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(om.writeValueAsBytes(node)) finally out.close()
     // overwrite-rename, NOT delete-then-rename: a concurrent
     // validateBatch in a delete→rename window would see no constraints
     // and admit a violating batch, and a crash there would drop them all
-    LakeDelete.atomicOverwrite(fs, tmp, sidecar(root))
+    LakeDelete.publishSidecar(fs, sidecar(root), om.writeValueAsString(node))
   }
 
   /** Enforce the lake's constraints against `rows` (an ingest batch or

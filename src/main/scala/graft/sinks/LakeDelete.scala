@@ -3,7 +3,7 @@ package graft.sinks
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{AttributeReference,
   Expression, Literal}
@@ -242,19 +242,14 @@ object LakeDelete {
     (p, rel)
   }
 
-  /** Read-set validation: files in `fes` that no longer exist with the
+  /** Read-set validation: files in `sts` that no longer exist with the
     * `(len, mtime)` identity triage captured. Journaled paths never reuse
     * a relative name, so identity change ⇒ a concurrent writer moved it. */
   private[graft] def changedIdentities(fs: FileSystem,
-                                fes: Seq[ZLake.FileEnvelope]): Seq[String] =
-    fes.flatMap { fe =>
-      val p = fe.status.getPath
-      val cur =
-        try Some(fs.getFileStatus(p))
-        catch { case _: java.io.FileNotFoundException => None }
-      if (cur.exists(s => s.getLen == fe.status.getLen &&
-        s.getModificationTime == fe.status.getModificationTime)) None
-      else Some(p.toString)
+                                       sts: Seq[FileStatus]): Seq[String] =
+    sts.collect {
+      case st if ZLake.unchangedStatus(fs, st.getPath, st.getLen,
+        st.getModificationTime).isEmpty => st.getPath.toString
     }
 
   /** Rename every data file of a staged write under `out` to
@@ -431,15 +426,8 @@ object LakeDelete {
     * skips itself if its id already committed. */
   def readFence(spark: SparkSession, root: String): Option[String] = {
     val rootPath = new Path(root)
-    val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val fp = new Path(rootPath, FenceName)
-    if (!fs.exists(fp)) None
-    else {
-      val in = fs.open(fp)
-      try Some(new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8))
-      finally in.close()
-    }
+    readSidecar(rootPath.getFileSystem(spark.sessionState.newHadoopConf()),
+      new Path(rootPath, FenceName))
   }
 
   /** Publish a fence OUTSIDE a journal commit — for writers whose data
@@ -459,23 +447,23 @@ object LakeDelete {
     * Filesystems without a FileContext binding (AbstractFileSystem) fall
     * back to delete+rename; every fence on such a path that matters also
     * rides the journal, which re-lands it on [[recover]]. */
-  private def writeFence(fs: FileSystem, root: Path, fence: String): Unit = {
-    val tmp = new Path(root, s".$FenceName.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(fence.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    atomicOverwrite(fs, tmp, new Path(root, FenceName))
-  }
+  private def writeFence(fs: FileSystem, root: Path, fence: String): Unit =
+    publishSidecar(fs, new Path(root, FenceName), fence)
 
-  /** Atomic overwrite-publish of a written tmp file onto `dst`: a
+  /** Atomic overwrite-publish of a small sidecar: `text` is written as
+    * UTF-8 to `.<name>.tmp` beside `dst`, then swapped in by a
     * FileContext OVERWRITE rename, so no reader ever observes `dst`
     * absent and a crash leaves either the old or the new bytes — the
-    * contract every '_'-prefixed sidecar (fence, constraints) needs.
-    * Filesystems without a FileContext binding fall back to
-    * delete+rename (the small non-atomic window is the platform's
-    * limitation, same caveat as the writer lock on S3). */
-  private[graft] def atomicOverwrite(fs: FileSystem, tmp: Path,
-                                     dst: Path): Unit = {
+    * contract every '_'-prefixed sidecar (fences, constraints, index
+    * pointers and stats, pins) needs. Filesystems without a FileContext
+    * binding fall back to delete+rename (the small non-atomic window is
+    * the platform's limitation, same caveat as the writer lock on S3). */
+  private[graft] def publishSidecar(fs: FileSystem, dst: Path,
+                                    text: String): Unit = {
+    val tmp = new Path(dst.getParent, s".${dst.getName}.tmp")
+    val out = fs.create(tmp, true)
+    try out.write(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
     val swapped =
       try {
         org.apache.hadoop.fs.FileContext
@@ -490,6 +478,16 @@ object LakeDelete {
       require(fs.rename(tmp, dst), s"could not publish $dst")
     }
   }
+
+  /** A sidecar's UTF-8 text, None when it does not exist. */
+  private[graft] def readSidecar(fs: FileSystem, p: Path): Option[String] =
+    if (!fs.exists(p)) None
+    else {
+      val in = fs.open(p)
+      try Some(new String(in.readAllBytes(),
+        java.nio.charset.StandardCharsets.UTF_8))
+      finally in.close()
+    }
 
   /** Delete every row of the lake at `root` satisfying `predicate`
     * (unresolved column refs — `col("a") > 5 && col("win") === "x"`).
@@ -607,9 +605,7 @@ object LakeDelete {
     if (rewrites.isEmpty)
       return Right(UpdateReport(idx.fes.size, idx.fes.size, 0, 0L))
 
-    val rootUri = rootPath.toUri.getPath.stripSuffix("/")
-    def rel(p: Path): String =
-      p.toUri.getPath.stripPrefix(rootUri).stripPrefix("/")
+    def rel(p: Path): String = ZLake.relPath(rootPath, p)
     def dirRelOf(fe: ZLake.FileEnvelope): String =
       rel(fe.status.getPath.getParent)
 
@@ -675,7 +671,7 @@ object LakeDelete {
     stagedHook.get()() // race injection: staged, commit lock not yet taken
     commitStaged(spark, fs, rootPath, txnRel,
       live.map(fe => rel(fe.status.getPath)), adds, None,
-      () => changedIdentities(fs, live)) match {
+      () => changedIdentities(fs, live.map(_.status))) match {
       case Left(conflicts) => return Left(conflicts)
       case Right(()) => ()
     }
@@ -744,10 +740,7 @@ object LakeDelete {
     val adds = stageRenamed(fs, tmp, txnDir, "compact")
     fs.delete(tmp, true)
 
-    val rootUri = rootPath.toUri.getPath.stripSuffix("/")
-    val dropRels = idx.fes.map(fe =>
-      fe.status.getPath.toUri.getPath.stripPrefix(rootUri)
-        .stripPrefix("/"))
+    val dropRels = idx.fes.map(fe => ZLake.relPath(rootPath, fe.status.getPath))
     stagedHook.get()()
     commitStaged(spark, fs, rootPath, txnRel, dropRels, adds, None,
       () => {
@@ -1239,9 +1232,7 @@ object LakeDelete {
       return Right(DeleteReport(triage.size, untouched, 0, 0, 0L, recovered))
     }
 
-    val rootUri = rootPath.toUri.getPath.stripSuffix("/")
-    def rel(p: Path): String =
-      p.toUri.getPath.stripPrefix(rootUri).stripPrefix("/")
+    def rel(p: Path): String = ZLake.relPath(rootPath, p)
     val stageRoot = txnDir
 
     // ---- stage: ONE job rewrites the whole boundary set ------------------
@@ -1321,7 +1312,7 @@ object LakeDelete {
     // rewrites still has the identity triage saw, then publish + apply
     commitStaged(spark, fs, rootPath, txnRel, dropRels,
       rewriteAdds ++ adds, fence,
-      () => changedIdentities(fs, drops ++ rewritten)) match {
+      () => changedIdentities(fs, (drops ++ rewritten).map(_.status))) match {
       case Left(conflicts) => return Left(conflicts)
       case Right(()) => ()
     }
@@ -1450,9 +1441,9 @@ object LakeDelete {
     ZLake.repairDirManifests(spark,
       (drops ++ replaces ++ adds).map(r => new Path(root, r).getParent)
         .distinct
-        // metadata dirs ('_'-prefixed, e.g. the deletion-vector store)
-        // hold no data files and need no manifests
-        .filterNot(_.getName.startsWith("_")))
+        // metadata dirs (hidden, e.g. the '_'-prefixed deletion-vector
+        // store) hold no data files and need no manifests
+        .filterNot(d => ZLake.isHidden(ZLake.relPath(root, d))))
     // materialize the fence BEFORE retiring the journal: a crash between
     // the two re-applies the journal (idempotent) and rewrites the same
     // fence, so the fence can never show a commit that did not land

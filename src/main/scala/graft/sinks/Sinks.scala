@@ -328,23 +328,15 @@ object Sinks {
             if (oldStores.isEmpty || keptVectors.isEmpty) Nil
             else Seq(DeletionVectors.stageStore(spark, fs, txnDir,
               keptVectors.toSeq.sortBy(_._1)))
-          val rootUri = rootPath.toUri.getPath.stripSuffix("/")
-          def rel(p: Path): String =
-            p.toUri.getPath.stripPrefix(rootUri).stripPrefix("/")
+          def rel(p: Path): String = graft.sources.ZLake.relPath(rootPath, p)
           val dropRels = files.map(fe => rel(fe.status.getPath)) ++
             (if (oldStores.nonEmpty) oldStores.map(rel) else Nil)
           val storeSts = oldStores.map(fs.getFileStatus)
           LakeDelete.stagedHook.get()()
           LakeDelete.commitStaged(spark, fs, rootPath, txnRel, dropRels,
             adds ++ storeAdds, None,
-            () => LakeDelete.changedIdentities(fs, files) ++
-              storeSts.flatMap { st =>
-                val cur = try Some(fs.getFileStatus(st.getPath))
-                catch { case _: java.io.FileNotFoundException => None }
-                if (cur.exists(c => c.getLen == st.getLen &&
-                  c.getModificationTime == st.getModificationTime)) None
-                else Some(st.getPath.toString)
-              }) match {
+            () => LakeDelete.changedIdentities(fs,
+              files.map(_.status) ++ storeSts)) match {
             case Left(c) => Left(c)
             case Right(()) =>
               val d = new Path(rootPath, DeletionVectors.DvDirName)
@@ -732,8 +724,7 @@ object Sinks {
     }
     val partDirs = fs.listStatus(rootPath).toSeq
       .filter(st => st.isDirectory && st.getPath.getName.contains("=") &&
-        !st.getPath.getName.startsWith("_") &&
-        !st.getPath.getName.startsWith("."))
+        !graft.sources.ZLake.isHidden(st.getPath.getName))
       .map(_.getPath).sortBy(_.getName)
     // loaded once per compaction; lakes without snapshots pay one miss
     lazy val snapRefs =

@@ -234,12 +234,7 @@ object Snapshots {
   private def resolve(fs: FileSystem, root: Path, tag: String,
                       rel: String, len: Long, mtime: Long)
       : org.apache.hadoop.fs.FileStatus = {
-    val live = new Path(root, rel)
-    val liveSt =
-      if (fs.exists(live)) Some(fs.getFileStatus(live)).filter(st =>
-        st.getLen == len && st.getModificationTime == mtime)
-      else None
-    liveSt.getOrElse {
+    Z.unchangedStatus(fs, new Path(root, rel), len, mtime).getOrElse {
       val t = trashPath(root, rel, len, mtime)
       require(fs.exists(t),
         s"snapshot '$tag' is broken: $rel (len=$len) is neither " +

@@ -142,7 +142,7 @@ object ZLake {
         }
       listed.flatMap { st =>
         val name = st.getPath.getName
-        if (name.startsWith("_") || name.startsWith(".")) Nil
+        if (isHidden(name)) Nil
         else if (st.isDirectory && !recursive) Nil
         else if (st.isDirectory) {
           val part = name.split("=", 2) match {
@@ -156,6 +156,22 @@ object ZLake {
     }
     (walk(root, Nil).sortBy(_._1.getPath.toString), torn)
   }
+
+  /** The rule's hidden names: a `_`- or `.`-prefixed file or directory
+    * (sidecars, manifests, staging and metadata dirs, checksum files) is
+    * never lake data, and nothing under a hidden directory is either. */
+  private[graft] def isHidden(name: String): Boolean =
+    name.startsWith("_") || name.startsWith(".")
+
+  /** The file's status if it still has the `(len, mtime)` identity a
+    * reader captured; None when it is gone or was rewritten — the
+    * per-file probe of every optimistic conflict check and pin. */
+  private[graft] def unchangedStatus(fs: org.apache.hadoop.fs.FileSystem,
+                                     p: Path, len: Long,
+                                     mtime: Long): Option[FileStatus] =
+    try Some(fs.getFileStatus(p)).filter(st =>
+      st.getLen == len && st.getModificationTime == mtime)
+    catch { case _: java.io.FileNotFoundException => None }
 
   /** Manifest file written beside the data (underscore prefix: invisible
     * to Spark's data-file listing and to [[listDataFiles]]). One manifest
@@ -276,9 +292,7 @@ object ZLake {
     def walk(d: Path): Seq[String] = {
       if (!fs.exists(d)) return Nil
       fs.listStatus(d).toSeq
-        .filter(st => st.isDirectory &&
-          !st.getPath.getName.startsWith("_") &&
-          !st.getPath.getName.startsWith("."))
+        .filter(st => st.isDirectory && !isHidden(st.getPath.getName))
         .sortBy(_.getPath.getName)
         .iterator.map { st =>
           st.getPath.getName.split("=", 2) match {
@@ -352,9 +366,7 @@ object ZLake {
             if (!fs.exists(d)) return None
             readManifest(fs, d).map(_.schema).orElse(
               fs.listStatus(d).toSeq
-                .filter(st => st.isDirectory &&
-                  !st.getPath.getName.startsWith("_") &&
-                  !st.getPath.getName.startsWith("."))
+                .filter(st => st.isDirectory && !isHidden(st.getPath.getName))
                 .sortBy(_.getPath.getName)
                 .iterator.flatMap(st => firstMan(st.getPath))
                 .nextOption())

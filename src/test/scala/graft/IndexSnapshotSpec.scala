@@ -87,10 +87,27 @@ class IndexSnapshotSpec extends AnyFunSuite with SparkSpec {
     val base = vecs(0 until 80)
     Similarity.writeIvfIndex(base, col("vec_id"), col("embedding"),
       base.filter(col("vec_id") < 8), col("vec_id"), col("embedding"), path)
+    Similarity.appendIvfIndex(vecs(80 until 100), col("vec_id"),
+      col("embedding"), path)
+    Similarity.compactIvfIndex(spark, path)
+    assert(Similarity.assignDir(spark, path).endsWith("assign-v1"))
     IndexSnapshots.snapshot(spark, path, "pin")
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    val v1 = new org.apache.hadoop.fs.Path(path, "assign-v1")
+    val pinnedV1 = graft.sources.ZLake.dataFileIdentities(fs, v1)
     Similarity.writeIvfIndex(vecs(0 until 40), col("vec_id"),
       col("embedding"), vecs(0 until 40).filter(col("vec_id") < 4),
       col("vec_id"), col("embedding"), path)
+    // the rebuild resets the pointer to `assign`; the next compaction must
+    // publish a version no existing dir uses, never reuse the pinned one
+    Similarity.appendIvfIndex(vecs(40 until 60), col("vec_id"),
+      col("embedding"), path)
+    Similarity.compactIvfIndex(spark, path)
+    assert(graft.sources.ZLake.dataFileIdentities(fs, v1) == pinnedV1,
+      "the pinned assign-v1 must keep every (rel, len, mtime) it was " +
+        "pinned with")
+    assert(Similarity.assignDir(spark, path).endsWith("assign-v2"))
     val e = intercept[IllegalArgumentException] {
       IndexSnapshots.restore(spark, path, "pin")
     }

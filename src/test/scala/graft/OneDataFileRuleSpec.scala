@@ -11,31 +11,43 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.IndexOcc
 import graft.sources.ZLake
 
-/** Keeps [[ZLake.listDataFilesDetectTorn]] the only place that spells the
-  * lake's data-file rule, and pins the rule once on a local directory
-  * tree (no Spark): its listings, its missing-root failure, and
+/** Keeps each of the lake's and the derived indexes' one-owner rules in
+  * its one place — [[ZLake.listDataFilesDetectTorn]] spells the data-file
+  * rule, [[graft.sinks.LakeDelete.publishSidecar]] the sidecar swap,
+  * [[IndexOcc]] the index compaction loop, [[ZLake.relPath]] the
+  * root-relative path — and pins the data-file rule once on a local
+  * directory tree (no Spark): its listings, its missing-root failure, and
   * [[IndexOcc.adoptStaged]], which moves files by it. */
 class OneDataFileRuleSpec extends AnyFunSuite {
 
-  private val rule = "endsWith(\".parquet\")"
+  /** Source pattern → the `(file, member)` it may appear in ("*" = any
+    * member of the file); None = nowhere in src/main. */
+  private val owners: Seq[(String, Option[(String, String)])] = Seq(
+    "endsWith(\".parquet\")" ->
+      Some("graft/sources/ZLake.scala" -> "listDataFilesDetectTorn"),
+    "atomicOverwrite(" ->
+      Some("graft/sinks/LakeDelete.scala" -> "publishSidecar"),
+    "maxCompactionRetries" -> Some("graft/operators/IndexOcc.scala" -> "*"),
+    "stripPrefix(rootUri)" -> None)
 
-  test("src/main spells the data-file rule once, in ZLake.listDataFilesDetectTorn") {
+  test("src/main spells each one-owner rule only in its owner") {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the repository root: $root")
     val sources = Files.walk(root).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq
+      .map(p => root.relativize(p).toString ->
+        Files.readAllLines(p).asScala.toSeq)
     val member = "^  (?:private(?:\\[\\w+\\])? )?def (\\w+)".r
-    val hits = for {
-      p <- sources
-      lines = Files.readAllLines(p).asScala.toSeq
-      (text, n) <- lines.zipWithIndex if text.contains(rule)
-      owner = lines.take(n).reverseIterator
+    val strays = for {
+      (pattern, owner) <- owners
+      (file, lines) <- sources
+      (text, n) <- lines.zipWithIndex if text.contains(pattern)
+      in = lines.take(n).reverseIterator
         .flatMap(l => member.findFirstMatchIn(l).map(_.group(1)))
         .nextOption().getOrElse("?")
-    } yield (root.relativize(p).toString, n + 1, owner)
-    assert(hits.map(h => (h._1, h._3)) ===
-      Seq(("graft/sources/ZLake.scala", "listDataFilesDetectTorn")),
-      hits.map { case (f, n, o) => s"$f:$n in $o" }.mkString("\n", "\n", ""))
+      if !owner.exists { case (f, m) => f == file && (m == "*" || m == in) }
+    } yield s"$pattern at $file:${n + 1} in $in"
+    assert(strays.isEmpty, strays.mkString("\n", "\n", ""))
   }
 
   private val fs = FileSystem.getLocal(new Configuration()).getRawFileSystem
