@@ -181,14 +181,13 @@ object Queries {
         // ONE scan of events, ONE membership probe per row (the r1 semi+anti
         // double-scan is gone — VERDICT r1 "What's wrong" #3).
         import graft.operators.IntervalIndex
-        val rules = T(s, dir, "nation").select("n_nationkey").collect()
-          .map(_.getInt(0)).toSeq.zipWithIndex
-          .map { case (k, i) => (k * 3L, k * 3L + 4L, 0L, i) }
-        val idx = IntervalIndex.build(rules, lastWins = true)
-        val hit = IntervalIndex.lookupColumn(s, idx)(col("user_id"))
+        val k = col("n_nationkey").cast("long")
+        val hit = IntervalIndex.probe(
+          T(s, dir, "nation").select((k * 3).as("lo"), (k * 3 + 4).as("hi")),
+          "lo", "hi", "lo", lastWins = true)(col("user_id"))
         T(s, dir, "events")
           .select(col("event_id"), col("user_id"),
-            when(hit >= 0, floor(col("value"))).otherwise(0L).as("in_net"))
+            when(hit.isNotNull, floor(col("value"))).otherwise(0L).as("in_net"))
           .orderBy(col("event_id"))
       }),
 

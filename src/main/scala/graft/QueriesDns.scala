@@ -219,16 +219,12 @@ object QueriesDns {
         ON e.user_id BETWEEN n.n_nationkey*5 AND n.n_nationkey*5+4
       GROUP BY 1 ORDER BY province"""),
       (s, dir) => {
-        // disjoint intervals [5k, 5k+4] → rule id = n_nationkey
-        val rules = T(s, dir, "nation").select("n_nationkey").collect()
-          .map(_.getInt(0)).toSeq
-          .map(k => (k * 5L, k * 5L + 4L, 0L, k))
-        val idx = IntervalIndex.build(rules, lastWins = false)
+        // disjoint intervals [5k, 5k+4] → n_name
+        val k = col("n_nationkey").cast("long")
         val nameDim = T(s, dir, "nation")
-          .select(col("n_nationkey").as("rid"), col("n_name"))
-        T(s, dir, "events")
-          .withColumn("rid", IntervalIndex.lookupColumn(s, idx)(col("user_id")))
-          .join(broadcast(nameDim), Seq("rid"), "left")
+          .select((k * 5).as("lo"), (k * 5 + 4).as("hi"), col("n_name"))
+        IntervalIndex.enrichAuto(s, T(s, dir, "events"), col("user_id"),
+            nameDim, "lo", "hi", "lo", lastWins = false)
           .groupBy(coalesce(col("n_name"), lit("unknown")).as("province"))
           .agg(count(lit(1)).as("cnt"),
             sum(when(col("event_type") === "error", 1L).otherwise(0L)).as("errors"))

@@ -55,8 +55,9 @@ object BatchRunner {
     val cleaned = Ingest.clean(spark, lines, windowStartMs, windowSec).toDF()
       .withColumn("authorityDomain",
         graft.functions.Functions.authority_domain(col("domain")))
-    // Every enrichment below is shuffle-free on the fact side: interval-index
-    // probes + broadcast hash joins only (plan-asserted in BatchRunnerSpec).
+    // Every enrichment below is shuffle-free on the fact side and has no
+    // join operator: UDF probes of dim snapshots (interval and hash indexes,
+    // graft.operators.DimSnapshot) only (plan-asserted in BatchRunnerSpec).
     val enriched = Dims.enrichAuthDomain(
       Dims.enrichInNet(spark,
         Dims.enrichClientName(cleaned, dims.clientRules),
@@ -68,21 +69,21 @@ object BatchRunner {
     def stamped(df: DataFrame): DataFrame = df.withColumn("accesstime", stamp)
 
     // The six reports are composed concurrently: given the persisted fact
-    // set each report's build (catalyst analysis of its plan plus any dim
-    // collect / interval-index broadcast it needs) is independent of the
-    // others, so a window pays max(report build) instead of the sum.
-    // Profiled at sf0.1 the serial build is ~0.45 s of pure driver time
-    // per window (topDetail alone ~0.2 s), about a third of the q68 lane.
-    // Plans, rows and column order are byte-identical to the sequential
-    // build; only the composition wall changes.
+    // set each report's build (catalyst analysis of its plan, plus the dim
+    // snapshot builds on the first window of a dim version) is independent
+    // of the others, so a window pays max(report build) instead of the sum.
+    // A window whose dims are unchanged finds every snapshot built and
+    // starts no Spark job while composing. Plans, rows and column order are
+    // byte-identical to the sequential build; only the composition wall
+    // changes.
     val Seq(clear, trend, topDetail, ratios, perCodeTop, topUsers) =
       graft.DriverPool.run(6)(Seq[() => DataFrame](
         () => stamped(Reports.qps(enriched, windowSec.toInt)),
         () => stamped(Reports.trendAgg(enriched, trendThreshold)),
         // the full dns_flow_top shape: top-K + Tuple2Es enrichment
         // (protocol strip, inNet, business attrs, auth-domain attrs, geo
-        // counters) — every step an index probe or broadcast join over the
-        // K-sized top set
+        // counters) — every step a dim-snapshot probe over the K-sized top
+        // set
         () => stamped(Reports.topDetailEnriched(spark,
           Reports.topDetail(enriched, dims.whitelist, topDetailK),
           dims.geoDim, dims.authDomains, dims.mediaRules,

@@ -3,17 +3,21 @@ package graft.dns
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.{Functions => F}
-import graft.operators.IntervalIndex
+import graft.operators.{DimSnapshot, IntervalIndex}
 
-/** Dimension enrichment layer (SURVEY §2.4, J1-J7).
+/** Dimension enrichment layer (SURVEY §2.4, J1-J8).
   *
   * The reference collects each MySQL/Redis dimension to the driver and
   * linear-scans per record (DnsRptCH.scala:796-855, 927-930). Spark-native:
-  * every dimension is a DataFrame (parquet/JDBC behind the same interface),
-  * small equi-keyed dims are broadcast, and every IP-range dim (J1, J2, J3,
-  * J5) goes through one path: a bounded driver-side collect into the O(log n)
-  * [[IntervalIndex]], probed per fact row (mirroring the reference's own
-  * binary-searched geo DB, IpSearch.java:78-127).
+  * every dimension is a DataFrame (parquet/JDBC behind the same interface)
+  * and reaches the fact rows through a [[DimSnapshot]] — a driver-built
+  * lookup structure, collected, built and broadcast once per content
+  * version of the dim and probed per fact row by a UDF, with no join
+  * operator. Every IP-range dim (J1, J2, J3, J5) is an O(log n)
+  * [[IntervalIndex]] (mirroring the reference's own binary-searched geo DB,
+  * IpSearch.java:78-127); every equi-keyed dim (J4, J6/J7, J8) a key → rows
+  * hash index ([[DimSnapshot.equiLookup]]). A window whose dims are
+  * unchanged since the last window starts no dim job at all.
   */
 object Dims {
 
@@ -52,9 +56,8 @@ object Dims {
       .drop("__aipl", "resource_name", "resource_type", "resource_props")
 
   /** J3: aip ∈ (media ∪ business ranges) ⇒ inNet = resolver else 0. One
-    * broadcast index probe per row, no join operator and a single fact scan;
-    * the union reaches the driver through [[IntervalIndex.collectIndex]]'s
-    * bounded collect.
+    * [[IntervalIndex.probe]] of the union's snapshot per row, no join
+    * operator and a single fact scan.
     *
     * The reference's nested-loop precedence quirk (big table empty ⇒ small
     * never consulted, DnsRptCH.scala:222-235) reduces to a union-membership
@@ -62,19 +65,19 @@ object Dims {
     * semantics and document the divergence. */
   def enrichInNet(spark: SparkSession, fact: DataFrame, mediaRules: DataFrame,
                   businessRules: DataFrame): DataFrame = {
-    val (idx, _) = IntervalIndex.collectIndex(
+    val hit = IntervalIndex.probe(
       mediaRules.select("min_long_ip", "max_long_ip")
         .unionByName(businessRules.select("min_long_ip", "max_long_ip")),
-      "min_long_ip", "max_long_ip", "min_long_ip", lastWins = true)
-    val hit = IntervalIndex.lookupColumn(spark, idx)(F.ip_to_long(col("aip")))
-    fact.withColumn("inNet", when(hit >= 0, col("resolver")).otherwise(0L))
+      "min_long_ip", "max_long_ip", "min_long_ip", lastWins = true)(
+      F.ip_to_long(col("aip")))
+    fact.withColumn("inNet", when(hit.isNotNull, col("resolver")).otherwise(0L))
   }
 
-  /** J4: authorityDomain → company metadata (broadcast equi left join,
-    * "未知" defaults; DnsRptCH.scala:237-258). Expects fact to carry an
-    * `authorityDomain` column (from [[F.authority_domain]]). */
+  /** J4: authorityDomain → company metadata (left equi lookup in the
+    * dim's hash snapshot, "未知" defaults; DnsRptCH.scala:237-258). Expects
+    * fact to carry an `authorityDomain` column (from [[F.authority_domain]]). */
   def enrichAuthDomain(fact: DataFrame, authDim: DataFrame): DataFrame =
-    fact.join(broadcast(authDim), Seq("authorityDomain"), "left")
+    DimSnapshot.equiLookup(fact, authDim, "authorityDomain")
       // one withColumns, not a chain of five (each re-analyzes the whole
       // plan — per-window composition cost, see BatchRunner §2.6 note);
       // all five replace in place, so column order is unchanged
@@ -89,7 +92,7 @@ object Dims {
     * `IpSearch.getRegionByIp` (IpSearch.java:188-209 — 大洲/continent,
     * 国家/country, 省份/province, 城市/city, 区县/district, 运营/operator,
     * 区划/admin_code, 英文/en_name, 简码/iso_code, 经度/lon, 纬度/lat) via the
-    * broadcast O(log n) interval index, the Spark equivalent of the
+    * O(log n) interval-index snapshot, the Spark equivalent of the
     * reference's binary-searched geo DB (IpSearch.java:41-127). Attaches
     * every attribute column present on `geoDim`; unmatched fact rows keep
     * nulls (reference: empty map). */
@@ -104,20 +107,22 @@ object Dims {
     "district", "operator", "admin_code", "en_name", "iso_code", "lon", "lat")
   def geoRegionStruct: Column = struct(geoAttrs.map(col): _*)
 
-  /** J6/J7: clientIp → userName (inner) → address/phone (left, default).
-    * Reference: Redis maps broadcast + filter (DnsRptCH.scala:376-400). */
+  /** J6/J7: clientIp → userName (inner) → address/phone (left, default),
+    * two equi lookups in the dims' hash snapshots. Reference: Redis maps
+    * broadcast + filter (DnsRptCH.scala:376-400). */
   def enrichUser(fact: DataFrame, users: DataFrame, userInfo: DataFrame): DataFrame =
-    fact.join(broadcast(users), Seq("clientIp"))            // inner: drop unknown
-      .join(broadcast(userInfo), Seq("userName"), "left")
+    DimSnapshot.equiLookup(                                 // inner: drop unknown
+        DimSnapshot.equiLookup(fact, users, "clientIp", inner = true),
+        userInfo, "userName")
       .withColumns(scala.collection.immutable.ListMap(
         "address" -> coalesce(col("address"), lit(" ")),
         "phone" -> coalesce(col("phone"), lit(" "))))
 
-  /** J8: whitelist membership flag (left semi used as boost flag,
-    * DnsRptCH.scala:570-574). */
+  /** J8: whitelist membership flag (a left equi lookup in the whitelist's
+    * hash snapshot used as boost flag, DnsRptCH.scala:570-574). */
   def withWhitelistFlag(fact: DataFrame, whitelist: DataFrame): DataFrame =
-    fact.join(broadcast(whitelist.select(col("domain"), lit(1).as("__wl"))),
-        Seq("domain"), "left")
+    DimSnapshot.equiLookup(fact,
+        whitelist.select(col("domain"), lit(1).as("__wl")), "domain")
       .withColumn("isWhitelisted", col("__wl").isNotNull)
       .drop("__wl")
 }

@@ -3,7 +3,7 @@ package graft.dns
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.{Functions => F}
-import graft.operators.TopK
+import graft.operators.{DimSnapshot, TopK}
 
 /** The report suite (SURVEY §2.5 aggregations and §2.6 top-K): the reports
   * behind graft's six sink tables and the user report. The reference's A3,
@@ -111,8 +111,9 @@ object Reports {
     *    (province==city ? province : province++city) ++ operator; all 0/null
     *    when the ip is outside the geo db.
     *
-    * Every step is an interval-index probe or broadcast hash join — the fact
-    * side is never shuffled (plan-asserted, BatchRunnerSpec). `geoDim` must
+    * Every step is a probe of a dim snapshot (interval index or hash
+    * index, [[graft.operators.DimSnapshot]]) — no join operator, and the
+    * fact side is never shuffled (plan-asserted, BatchRunnerSpec). `geoDim` must
     * carry country/province/city/operator; its raw attribute columns are
     * consumed into the counters and aIpAddr, then dropped — the output is
     * the reference's dns_flow_top row shape. */
@@ -124,7 +125,7 @@ object Reports {
       .withColumn("authorityDomain", F.authority_domain(col("domain")))
     val withInNet = Dims.enrichInNet(spark, stripped, mediaRules, businessRules)
     val withBiz = Dims.enrichBusiness(withInNet, businessRules)
-    val withAuth = withBiz.join(broadcast(authDim), Seq("authorityDomain"), "left")
+    val withAuth = DimSnapshot.equiLookup(withBiz, authDim, "authorityDomain")
       // single withColumns per group (each withColumn re-analyzes the
       // whole plan; this composes per window — BatchRunner §2.6 note)
       .withColumns(scala.collection.immutable.ListMap(

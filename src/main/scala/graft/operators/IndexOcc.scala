@@ -162,27 +162,33 @@ private[graft] object IndexOcc {
     ()
   }
 
-  /** FENCED INGEST of batch `batchId`: false (and nothing written) when
-    * `fence` already covers it; otherwise `write` stages, and under the
-    * lock the fence is re-checked, uncommitted residue above it purged,
-    * the batch adopted as `ingest<batchId>-*` and `commit` — the kind's
-    * fence advance, the commit point — run with `write`'s result. */
-  def ingest[T](spark: SparkSession, path: String, l: Layout, batchId: Long)(
-      fence: => Option[Long])(write: Path => T)(commit: T => Unit): Boolean = {
-    if (fence.exists(_ >= batchId)) return false
+  /** FENCED INGEST of batch `batchId`: `state` (the kind's committed
+    * state, read once before staging and once under the lock) carries the
+    * fence `fence` extracts. False (and nothing written) when the fence
+    * already covers the batch; otherwise `write` stages under the first
+    * read, and under the lock the fence is re-checked, uncommitted residue
+    * above it purged, the batch adopted as `ingest<batchId>-*` and `commit`
+    * — the kind's fence advance, the commit point — run with the second
+    * read and `write`'s result. */
+  def ingest[S, T](spark: SparkSession, path: String, l: Layout, batchId: Long)(
+      state: => S)(fence: S => Option[Long])(write: (S, Path) => T)(
+      commit: (S, T) => Unit): Boolean = {
+    val before = state
+    if (fence(before).exists(_ >= batchId)) return false
     val root = new Path(path)
     val fs = fsOf(spark, root)
     val stage = new Path(root, stageName("append"))
-    val staged = write(stage)
+    val staged = write(before, stage)
     stagedHook.get()()
     val adopted = LakeDelete.withWriterLock(fs, root) {
-      val f = fence.getOrElse(-1L)
+      val locked = state
+      val f = fence(locked).getOrElse(-1L)
       if (f >= batchId) { fs.delete(stage, true); false }
       else {
         purgeUncommitted(fs, root, l, f)
         adoptStaged(fs, stage, dirOf(root, activeName(fs, root, l)),
           s"ingest$batchId")
-        commit(staged)
+        commit(locked, staged)
         true
       }
     }

@@ -1,10 +1,11 @@
 package graft.operators
 
-import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.api.java.UDF1
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType}
 
-/** Broadcast sorted-interval index with O(log n) point lookup.
+/** Sorted-interval index with O(log n) point lookup.
   *
   * Every IP-range enrichment in [[graft.dns.Dims]] (SURVEY J1/J2/J3/J5) goes
   * through it: a BroadcastNestedLoopJoin on `point BETWEEN lo AND hi` costs
@@ -12,18 +13,20 @@ import org.apache.spark.sql.functions._
   * 100 TB of facts. The reference itself recognises this for its geo database
   * (binary search over a prefix-bucketed interval file, IpSearch.java:78-127);
   * we generalise: overlapping prioritized rules are flattened driver-side into
-  * DISJOINT intervals (sweep line — dims are small, facts are not), broadcast
-  * once, and probed with `java.util.Arrays.binarySearch` inside a UDF. The
-  * fact side keeps its partitioning: no shuffle, no NLJ.
+  * DISJOINT intervals (sweep line — dims are small, facts are not), and
+  * probed with `java.util.Arrays.binarySearch` inside a UDF. The fact side
+  * keeps its partitioning: no shuffle, no NLJ, no join operator.
   *
-  * The lookup returns the winning rule's integer id; attributes are attached
-  * with a broadcast HASH join against the (tiny) rule table — still
-  * shuffle-free.
+  * The index carries each rule's attribute row, so the probe returns the
+  * winning rule's attributes directly. It is a [[DimSnapshot]]: collected,
+  * built and broadcast once per content version of the dim, and reused by
+  * every window that enriches with the same rule table.
   */
 final class IntervalIndex private (
     val starts: Array[Long],   // sorted, disjoint segment starts
     val ends: Array[Long],     // inclusive segment ends, parallel to starts
-    val ids: Array[Int])       // winning rule id per segment
+    val ids: Array[Int],       // winning rule id per segment
+    attrs: Array[Row])         // attribute row per rule id
     extends Serializable {
 
   /** Id of the rule covering `p`, or -1. O(log n). */
@@ -31,6 +34,12 @@ final class IntervalIndex private (
     var idx = java.util.Arrays.binarySearch(starts, p)
     if (idx < 0) idx = -idx - 2 // insertion point - 1 = candidate segment
     if (idx >= 0 && idx < starts.length && p <= ends(idx)) ids(idx) else -1
+  }
+
+  /** Attribute row of the rule covering `p`, or null. O(log n). */
+  def attrsAt(p: Long): Row = {
+    val i = lookup(p)
+    if (i < 0) null else attrs(i)
   }
 }
 
@@ -42,10 +51,12 @@ object IntervalIndex {
     * @param lastWins on overlap keep highest priority (reference "last match
     *                 wins", DnsRptCH.scala:590-596); false keeps lowest
     *                 (reference "first match", DnsRptCH.scala:927-930)
+    * @param attrs    attribute row per rule id, returned by `attrsAt`
     */
-  def build(rules: Seq[(Long, Long, Long, Int)], lastWins: Boolean): IntervalIndex = {
+  def build(rules: Seq[(Long, Long, Long, Int)], lastWins: Boolean,
+            attrs: Array[Row] = Array.empty): IntervalIndex = {
     val valid = rules.filter(r => r._1 <= r._2)
-    if (valid.isEmpty) return new IntervalIndex(Array.empty, Array.empty, Array.empty)
+    if (valid.isEmpty) return new IntervalIndex(Array.empty, Array.empty, Array.empty, attrs)
     // Sweep line over elementary segments between consecutive boundaries.
     val bounds = valid.flatMap(r => Seq(r._1, r._2 + 1)).distinct.sorted.toArray
     val sortedRules = valid.sortBy(_._1).toArray
@@ -69,47 +80,24 @@ object IntervalIndex {
       }
       b += 1
     }
-    new IntervalIndex(ss.toArray, es.toArray, is.toArray)
+    new IntervalIndex(ss.toArray, es.toArray, is.toArray, attrs)
   }
 
-  /** Broadcast `idx` and return a Column computing the winning rule id for a
-    * long-valued point column (-1 = no match). */
-  def lookupColumn(spark: SparkSession, idx: IntervalIndex)(point: Column): Column = {
-    val bc: Broadcast[IntervalIndex] = spark.sparkContext.broadcast(idx)
-    val fn = udf((p: java.lang.Long) =>
-      if (p == null) -1 else bc.value.lookup(p.longValue()))
-    fn(point)
-  }
-
-  /** Ceiling on dim rows the enrich paths will pull to the driver. The index
-    * is a DIM-side structure: the reference's rule tables are 10²-10⁵ rows;
-    * this bound (2M rows ≈ tens of MB collected + broadcast) is 10× headroom
-    * beyond any sane rule table while failing fast — instead of OOMing the
-    * driver — when a caller hands a fact-sized table to the dim parameter. */
-  val maxCollectedRules: Int = 2000000
-
-  /** The bounded driver-side collect behind [[enrichAuto]] and
-    * `Dims.enrichInNet`: `coalesce(1).limit(max+1).collect()` reads the dim
-    * in a single job (a bare `limit` over a multi-file dim scans one
-    * partition, then re-runs for the rest) and never holds more than max+1
-    * rows. Rule ids are the collected row positions; the rows come back so a
-    * caller can attach attributes by the same ids. Exceeding the cap or a
-    * null lo/hi/priority bound fails with a descriptive error instead of an
-    * OOM or an opaque row-access error. */
-  private[graft] def collectIndex(dim: DataFrame, loCol: String, hiCol: String,
-                                  priorityCol: String, lastWins: Boolean,
-                                  maxRules: Int = maxCollectedRules)
-      : (IntervalIndex, Array[org.apache.spark.sql.Row]) = {
-    val rows = dim.coalesce(1).limit(maxRules + 1).collect()
-    require(rows.length <= maxRules,
-      s"IntervalIndex: dimension has more than $maxRules rows (maxCollectedRules) " +
-        "— this operator collects the dim to the driver and is meant for rule " +
-        "tables, not facts. Filter or aggregate the dim down to a rule table " +
-        "before enriching with it.")
+  /** The bounded driver-side collect ([[DimSnapshot.collect]]) of `dim`
+    * into an index whose rule ids are the collected row positions and whose
+    * attribute rows are the collected rows minus `loCol`/`hiCol`: the dim is
+    * collected ONCE, so the index and its attributes cannot drift when the
+    * dim plan's row order is nondeterministic, and dims need no id column.
+    * A null lo/hi/priority bound fails with a descriptive error instead of
+    * an opaque row-access error. */
+  private def collectIndex(dim: DataFrame, loCol: String, hiCol: String,
+                           priorityCol: String, lastWins: Boolean,
+                           maxRules: Int): IntervalIndex = {
+    val rows = DimSnapshot.collect(dim, maxRules)
     val li = dim.schema.fieldIndex(loCol)
     val hiI = dim.schema.fieldIndex(hiCol)
     val pi = dim.schema.fieldIndex(priorityCol)
-    def lng(r: org.apache.spark.sql.Row, i: Int): Long = {
+    def lng(r: Row, i: Int): Long = {
       val v = r.get(i)
       require(v != null,
         s"IntervalIndex: dim row has a null ${dim.columns(i)} bound — filter " +
@@ -119,34 +107,46 @@ object IntervalIndex {
     val rules = rows.toSeq.zipWithIndex.map { case (r, i) =>
       (lng(r, li), lng(r, hiI), lng(r, pi), i)
     }
-    (build(rules, lastWins), rows)
+    val keep = attrIndices(dim, loCol, hiCol)
+    build(rules, lastWins, rows.map(r => Row.fromSeq(keep.map(r.get))))
   }
 
-  /** End-to-end enrichment: compute the winning rule id for `point`, then
-    * broadcast-hash join the collected rule rows on that id. Rule ids are
-    * synthesized from the collected row order, so dims need no unique id
-    * column, and the dim is collected ONCE so the index and the attribute
-    * table cannot drift when the dim plan's row order is nondeterministic.
-    * No window, no shuffle, no NLJ on the fact side: the fact keeps its
-    * partitioning and pays one O(log rules) probe per row. Left-outer:
-    * unmatched fact rows keep nulls for dim attributes (callers apply
-    * `coalesce` defaults). */
+  private def attrIndices(dim: DataFrame, loCol: String, hiCol: String): Seq[Int] = {
+    val drop = Set(dim.schema.fieldIndex(loCol), dim.schema.fieldIndex(hiCol))
+    dim.schema.indices.filterNot(drop)
+  }
+
+  /** The winning rule's attributes (every `dim` column but `loCol` and
+    * `hiCol`) for a point column, as one struct column; null where no rule
+    * covers the point. The index is `dim`'s [[DimSnapshot]]: the first
+    * use of a dim version collects (at most `maxRules` rows, else a
+    * descriptive failure), builds and broadcasts it; later uses only probe.
+    * The struct's fields are nullable, as a left-outer join's would be. */
+  def probe(dim: DataFrame, loCol: String, hiCol: String, priorityCol: String,
+            lastWins: Boolean, maxRules: Int = DimSnapshot.maxCollectedRows)(point: Column): Column = {
+    val idx = DimSnapshot.of(dim, ("interval", loCol, hiCol, priorityCol, lastWins, maxRules))(
+      collectIndex(dim, loCol, hiCol, priorityCol, lastWins, maxRules))
+    val attrType = StructType(attrIndices(dim, loCol, hiCol)
+      .map(i => dim.schema(i).copy(nullable = true)))
+    udf(new UDF1[Any, Row] {
+      override def call(p: Any): Row =
+        if (p == null) null else idx.value.attrsAt(p.asInstanceOf[Long])
+    }, attrType)(point.cast(LongType))
+  }
+
+  /** End-to-end enrichment: the fact's columns followed by the winning
+    * rule's attribute columns (every dim column but `loCol`/`hiCol`), one
+    * O(log rules) [[probe]] per fact row. No join, no window, no shuffle:
+    * the fact keeps its partitioning. Left-outer: unmatched fact rows keep
+    * nulls for dim attributes (callers apply `coalesce` defaults). */
   def enrichAuto(spark: SparkSession, fact: DataFrame, point: Column,
                  dim: DataFrame, loCol: String, hiCol: String,
                  priorityCol: String, lastWins: Boolean,
-                 maxRules: Int = maxCollectedRules): DataFrame = {
-    import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
-    val (idx, rows) = collectIndex(dim, loCol, hiCol, priorityCol, lastWins, maxRules)
-    val attrSchema = StructType(dim.schema.fields :+
-      StructField("__rule_id", IntegerType, nullable = false))
-    val attrRows = rows.zipWithIndex.map { case (r, i) =>
-      org.apache.spark.sql.Row.fromSeq(r.toSeq :+ i)
-    }
-    val attrs = spark.createDataFrame(
-        java.util.Arrays.asList(attrRows: _*), attrSchema)
-      .drop(loCol, hiCol)
-    fact.withColumn("__rule_id", lookupColumn(spark, idx)(point))
-      .join(broadcast(attrs), Seq("__rule_id"), "left")
-      .drop("__rule_id")
+                 maxRules: Int = DimSnapshot.maxCollectedRows): DataFrame = {
+    val hit = probe(dim, loCol, hiCol, priorityCol, lastWins, maxRules)(point)
+    fact.withColumn("__rule", hit)
+      .select(col("*") +: DimSnapshot.spread("__rule",
+        attrIndices(dim, loCol, hiCol).map(dim.columns(_))): _*)
+      .drop("__rule")
   }
 }

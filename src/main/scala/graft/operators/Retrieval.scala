@@ -318,13 +318,17 @@ object Retrieval {
     statsNode(spark, path).flatMap(n =>
       Option(n.get("ingest_batch")).map(_.asLong))
 
-  private def readStats(spark: SparkSession,
-                        path: String): (Long, Long, Int) = {
+  /** The stats sidecar, parsed once: its counts and the ingest fence. */
+  private final case class Stats(nDocs: Long, totalTokens: Long,
+                                 nBuckets: Int, fence: Option[Long])
+
+  private def readStats(spark: SparkSession, path: String): Stats = {
     val node = statsNode(spark, path).getOrElse(
       throw new java.io.FileNotFoundException(s"no BM25 index at $path " +
         s"($StatsFile missing)"))
-    (node.get("n_docs").asLong, node.get("total_tokens").asLong,
-      node.get("n_buckets").asInt)
+    Stats(node.get("n_docs").asLong, node.get("total_tokens").asLong,
+      node.get("n_buckets").asInt,
+      Option(node.get("ingest_batch")).map(_.asLong))
   }
 
   /** Whether a postings index (its stats sidecar) exists at `path` —
@@ -350,13 +354,12 @@ object Retrieval {
     (row.getLong(0), row.getLong(1))
   }
 
-  /** Advance the stats sidecar by a batch's (docs, tokens), re-read under
-    * the writer lock so a concurrent append's advance survives. */
-  private def advanceStats(spark: SparkSession, path: String,
-                           batch: (Long, Long), fence: Option[Long]): Unit = {
-    val (n1, t1, nb) = readStats(spark, path)
-    writeStats(spark, path, n1 + batch._1, t1 + batch._2, nb, fence)
-  }
+  /** Advance the stats sidecar `cur` — read under the writer lock, so a
+    * concurrent append's advance survives — by a batch's (docs, tokens). */
+  private def advanceStats(spark: SparkSession, path: String, cur: Stats,
+                           batch: (Long, Long), fence: Option[Long]): Unit =
+    writeStats(spark, path, cur.nDocs + batch._1, cur.totalTokens + batch._2,
+      cur.nBuckets, fence)
 
   /** Append a NEW batch of documents to the index: postings land in their
     * term buckets (same hash, same layout), the stats sidecar advances by
@@ -368,10 +371,12 @@ object Retrieval {
   def appendBm25Index(docs: DataFrame, id: Column, text: Column,
                       path: String): Unit = {
     val spark = docs.sparkSession
-    val (_, _, nBuckets) = readStats(spark, path)
+    val nBuckets = readStats(spark, path).nBuckets
     IndexOcc.append(spark, path, IndexOcc.Bm25Layout)(
-      stagePostings(docs, id, text, nBuckets, _))(
-      advanceStats(spark, path, _, readIngestFence(spark, path)))
+      stagePostings(docs, id, text, nBuckets, _)) { batch =>
+      val cur = readStats(spark, path) // keeps the committed fence
+      advanceStats(spark, path, cur, batch, cur.fence)
+    }
   }
 
   /** FENCED, EXACTLY-ONCE batch ingest — the `foreachBatch` body of a
@@ -400,9 +405,9 @@ object Retrieval {
       return true
     }
     IndexOcc.ingest(spark, path, IndexOcc.Bm25Layout, batchId)(
-      readIngestFence(spark, path))(
-      stagePostings(batch, id, text, readStats(spark, path)._3, _))(
-      advanceStats(spark, path, _, Some(batchId)))
+      readStats(spark, path))(_.fence)((s, stage) =>
+      stagePostings(batch, id, text, s.nBuckets, stage))(
+      advanceStats(spark, path, _, _, Some(batchId)))
   }
 
   /** Maintain the index from a STREAM: checkpointed `foreachBatch` over
@@ -440,7 +445,7 @@ object Retrieval {
                           params: Bm25Params): DataFrame = {
     require(terms.nonEmpty, "query terms must be non-empty")
     require(terms.distinct == terms, s"duplicate query terms: $terms")
-    val (nDocs, totalTokens, nBuckets) = readStats(spark, path)
+    val Stats(nDocs, totalTokens, nBuckets, _) = readStats(spark, path)
     val buckets = terms.map(t =>
       // the same 60-bit md5-prefix hash the write side's bucketOf uses
       (graft.functions.Kernels.hash60(
@@ -557,7 +562,7 @@ object Retrieval {
                                        minDocFreq: Int): Seq[MltTerm] = {
     require(minTermFreq >= 1, s"minTermFreq must be >= 1 (got $minTermFreq)")
     require(minDocFreq >= 1, s"minDocFreq must be >= 1 (got $minDocFreq)")
-    val (nDocs, _, nBuckets) = readStats(spark, path)
+    val Stats(nDocs, _, nBuckets, _) = readStats(spark, path)
     val ts = spark.range(1)
       .select(TF.tokens(lit(docText)).as("ts")).head().getSeq[String](0)
     val tf: Map[String, Long] =
@@ -641,7 +646,7 @@ object Retrieval {
                         phrase: Seq[String], k: Int,
                         params: Bm25Params = Bm25Params()): DataFrame = {
     require(phrase.nonEmpty, "phrase must be non-empty")
-    val (nDocs, totalTokens, nBuckets) = readStats(spark, path)
+    val Stats(nDocs, totalTokens, nBuckets, _) = readStats(spark, path)
     val distinctTerms = phrase.distinct
     val buckets = distinctTerms.map(t =>
       (graft.functions.Kernels.hash60(
@@ -710,7 +715,7 @@ object Retrieval {
     require(scoring.intersect(negD).isEmpty,
       s"terms cannot be both scored and excluded: " +
         s"${scoring.intersect(negD)}")
-    val (nDocs, totalTokens, nBuckets) = readStats(spark, path)
+    val Stats(nDocs, totalTokens, nBuckets, _) = readStats(spark, path)
     val involved = (scoring ++ negD).distinct
     val buckets = involved.map(t =>
       (graft.functions.Kernels.hash60(

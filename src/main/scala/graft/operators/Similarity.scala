@@ -1310,13 +1310,13 @@ object Similarity {
     val spark = batch.sparkSession
     val fenceFile = new org.apache.hadoop.fs.Path(path, "_ingest_fence")
     val adopted = IndexOcc.ingest(spark, path, IndexOcc.IvfLayout, batchId)(
-      readIvfFence(spark, path)) { stage =>
+      readIvfFence(spark, path))(identity) { (_, stage) =>
       val cents = readCentroids(spark, path)
       require(cents.nonEmpty, s"no IVF index at $path — build it first " +
         "(writeIvfIndex*); streaming ingest does not train centroids")
       stageCells(cellRows(spark, path, indexMetric(spark, path), cents,
         batch, id, vec), stage)
-    } { _ =>
+    } { (_, _) =>
       graft.sinks.LakeDelete.publishSidecar(
         IndexOcc.fsOf(spark, fenceFile), fenceFile, batchId.toString)
     }

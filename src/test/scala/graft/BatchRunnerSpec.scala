@@ -145,7 +145,7 @@ class BatchRunnerSpec extends AnyFunSuite with SparkSpec {
     }
     assert(shuffles.isEmpty,
       s"enrichment stage must be shuffle-free, found: $shuffles")
-    // BroadcastExchange is expected (dims broadcast); SHUFFLE exchanges not
+    // dims are UDF probes of their snapshots; SHUFFLE exchanges are not allowed
     assert(!executed.toString.contains("ShuffleExchange")
       && !executed.toString.contains("ShuffleQueryStage"),
       s"no shuffle exchange may appear anywhere in:\n$executed")

@@ -6,7 +6,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sinks.Sinks
@@ -33,35 +33,6 @@ class LakeWriteManifestSpec extends AnyFunSuite with SparkSpec {
       (new java.sql.Timestamp(w + i * 1000L), s"d${i % 7}", i + salt)))
       .toDF("accesstime", "domain", "cnt").repartition(3)
 
-  /** Spark jobs `body` starts: it runs under a fresh job group (inherited
-    * by driver-pool threads), and a job in another group, seen after it,
-    * proves the asynchronous listener bus has delivered every earlier
-    * job start. */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"counted-${java.util.UUID.randomUUID()}"
-    val flush = s"$group-flush"
-    val seen = new ConcurrentLinkedQueue[String]()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        seen.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
-        ()
-      }
-    }
-    sc.addSparkListener(l)
-    try {
-      sc.setJobGroup(group, "counted")
-      val out = try body finally sc.clearJobGroup()
-      sc.setJobGroup(flush, "flush")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 10000000000L
-      while (!seen.contains(flush) && System.nanoTime() < deadline)
-        Thread.sleep(20)
-      assert(seen.contains(flush), "the listener never saw the flush job")
-      (out, seen.asScala.count(_ == group))
-    } finally sc.removeSparkListener(l)
-  }
-
   private def sorted(df: DataFrame): Seq[String] =
     df.select("accesstime", "domain", "cnt", "win").collect()
       .map(_.mkString("|")).toSeq.sorted
@@ -70,7 +41,7 @@ class LakeWriteManifestSpec extends AnyFunSuite with SparkSpec {
     val dir = tmp("wm") + "/t"
     rows(Seq(w1), 30).write.parquet(dir)
     val schema = spark.read.parquet(dir).schema
-    val (_, jobs) = jobsOf(ZLake.writeManifest(spark, dir, Some(schema)))
+    val (_, jobs) = jobsOf(spark)(ZLake.writeManifest(spark, dir, Some(schema)))
     assert(jobs == 0, s"writeManifest started $jobs Spark jobs")
     assert(manifestFiles(Paths.get(dir)) == parquetFiles(Paths.get(dir)))
   }
@@ -89,7 +60,7 @@ class LakeWriteManifestSpec extends AnyFunSuite with SparkSpec {
     }
 
     val opens = ZLake.footerOpens.get()
-    val (df, jobs) = jobsOf {
+    val (df, jobs) = jobsOf(spark) {
       val d = ZLake.read(spark, table); d.queryExecution.executedPlan; d
     }
     assert(ZLake.footerOpens.get() == opens,
@@ -141,6 +112,35 @@ class LakeWriteManifestSpec extends AnyFunSuite with SparkSpec {
 }
 
 object LakeWriteManifestSpec {
+  /** Spark jobs `body` starts: it runs under a fresh job group (inherited
+    * by driver-pool threads), and a job in another group, seen after it,
+    * proves the asynchronous listener bus has delivered every earlier
+    * job start. */
+  def jobsOf[T](spark: SparkSession)(body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"counted-${java.util.UUID.randomUUID()}"
+    val flush = s"$group-flush"
+    val seen = new ConcurrentLinkedQueue[String]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        seen.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+        ()
+      }
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(group, "counted")
+      val out = try body finally sc.clearJobGroup()
+      sc.setJobGroup(flush, "flush")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 10000000000L
+      while (!seen.contains(flush) && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(seen.contains(flush), "the listener never saw the flush job")
+      (out, seen.asScala.count(_ == group))
+    } finally sc.removeSparkListener(l)
+  }
+
   /** The `win=` directories under a table, in name order. */
   def winDirs(table: String): Seq[Path] = {
     val p = Paths.get(table)

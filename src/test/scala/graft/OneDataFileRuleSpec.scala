@@ -11,24 +11,43 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.IndexOcc
 import graft.sources.ZLake
 
-/** Keeps each of the lake's and the derived indexes' one-owner rules in
-  * its one place — [[ZLake.listDataFilesDetectTorn]] spells the data-file
-  * rule, [[graft.sinks.LakeDelete.publishSidecar]] the sidecar swap,
-  * [[IndexOcc]] the index compaction loop, [[ZLake.relPath]] the
-  * root-relative path — and pins the data-file rule once on a local
+/** Keeps each of the lake's, the derived indexes' and the dimension
+  * enrichments' one-owner rules in its one place —
+  * [[ZLake.listDataFilesDetectTorn]] spells the data-file rule,
+  * [[graft.sinks.LakeDelete.publishSidecar]] the sidecar swap, [[IndexOcc]]
+  * the index compaction loop, [[ZLake.relPath]] the root-relative path,
+  * [[graft.operators.DimSnapshot]] the dims' broadcast variables (no
+  * broadcast join is left in the window's enrichments) — and pins the data-file rule once on a local
   * directory tree (no Spark): its listings, its missing-root failure, and
   * [[IndexOcc.adoptStaged]], which moves files by it. */
 class OneDataFileRuleSpec extends AnyFunSuite {
 
-  /** Source pattern → the `(file, member)` it may appear in ("*" = any
-    * member of the file); None = nowhere in src/main. */
-  private val owners: Seq[(String, Option[(String, String)])] = Seq(
-    "endsWith(\".parquet\")" ->
-      Some("graft/sources/ZLake.scala" -> "listDataFilesDetectTorn"),
-    "atomicOverwrite(" ->
-      Some("graft/sinks/LakeDelete.scala" -> "publishSidecar"),
-    "maxCompactionRetries" -> Some("graft/operators/IndexOcc.scala" -> "*"),
-    "stripPrefix(rootUri)" -> None)
+  /** `pattern` may appear, among the src/main files `within` selects, only
+    * in `owner`'s `(file, member)` ("*" = any member of the file); None =
+    * nowhere. */
+  private final case class Rule(pattern: String, owner: Option[(String, String)],
+                                within: String => Boolean = _ => true)
+
+  /** The DNS window's dimension code: the enrichments and their index. */
+  private def dimCode(f: String): Boolean = f.startsWith("graft/dns/") ||
+    f == "graft/operators/IntervalIndex.scala" ||
+    f == "graft/operators/DimSnapshot.scala"
+
+  private val owners: Seq[Rule] = Seq(
+    Rule("endsWith(\".parquet\")",
+      Some("graft/sources/ZLake.scala" -> "listDataFilesDetectTorn")),
+    Rule("atomicOverwrite(",
+      Some("graft/sinks/LakeDelete.scala" -> "publishSidecar")),
+    Rule("maxCompactionRetries", Some("graft/operators/IndexOcc.scala" -> "*")),
+    Rule("stripPrefix(rootUri)", None),
+    // a dim's broadcast variable is made once per content version, by the
+    // snapshot memo alone
+    Rule(".broadcast(", Some("graft/operators/DimSnapshot.scala" -> "broadcast"),
+      dimCode),
+    // the window's enrichments probe snapshots; no broadcast join is left
+    // (userTags is off the window path)
+    Rule("broadcast(", Some("graft/dns/Reports.scala" -> "userTags"),
+      f => f == "graft/dns/Dims.scala" || f == "graft/dns/Reports.scala"))
 
   test("src/main spells each one-owner rule only in its owner") {
     val root = Paths.get("src/main/scala")
@@ -39,8 +58,8 @@ class OneDataFileRuleSpec extends AnyFunSuite {
         Files.readAllLines(p).asScala.toSeq)
     val member = "^  (?:private(?:\\[\\w+\\])? )?def (\\w+)".r
     val strays = for {
-      (pattern, owner) <- owners
-      (file, lines) <- sources
+      Rule(pattern, owner, within) <- owners
+      (file, lines) <- sources if within(file)
       (text, n) <- lines.zipWithIndex if text.contains(pattern)
       in = lines.take(n).reverseIterator
         .flatMap(l => member.findFirstMatchIn(l).map(_.group(1)))

@@ -88,7 +88,7 @@ class PlanAuditSpec extends AnyFunSuite with SparkSpec {
       spark, fact, col("pt"), dim, "lo", "hi", "lo", lastWins = false)
     val plan = finalPlan(enriched)
     assert(shuffleNodes(plan).isEmpty, s"enrichment must not shuffle:\n$plan")
-    // BroadcastExchange (attr join) is expected; shuffle exchanges are not
+    // the attributes come from the index probe itself; shuffle exchanges are not
     assert(!plan.toString.contains("ShuffleExchange")
       && !plan.toString.contains("ShuffleQueryStage"), plan.toString)
   }
