@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.{Functions => F}
-import graft.operators.{RangeJoin, TopK}
+import graft.operators.{IntervalIndex, TopK}
 
 /** One verifiable query per operator of SURVEY §2, expressed over the
   * driver-generated TPC-H-ish testdata (TESTDATA.md), each paired with an
@@ -144,7 +144,7 @@ object Queries {
           (col("n_nationkey").cast("long") * 400 + 599).as("hi"))
         val fact = T(s, dir, "customer")
           .select(col("c_custkey"), (col("c_custkey") * 7 % 10000).as("pt"))
-        graft.operators.IntervalIndex.enrichAuto(s, fact, col("pt"), dim,
+        IntervalIndex.enrichAuto(fact, col("pt"), dim,
             "lo", "hi", "lo", lastWins = false)
           .select(col("c_custkey"), col("pt"), coalesce(col("rid"), lit(-1L)).as("rule_id"))
           .orderBy(col("c_custkey"))
@@ -160,12 +160,18 @@ object Queries {
       SELECT o_orderkey, coalesce(r_name, 'unknown') AS band_name
       FROM j WHERE rn = 1 ORDER BY o_orderkey"""),
       (s, dir) => {
+        // The point is a DOUBLE and the bounds integers: p ∈ [lo, hi] ⟺
+        // floor(p) + ceil(p) ∈ [2·lo, 2·hi], exact for every double (a cast
+        // would truncate 239999.5 into the last band). The clamp keeps the
+        // sum in BIGINT range; it leaves every band's membership as it is
+        // and sends null, NaN (above every double in SQL order) and ±∞
+        // outside them.
         val dim = T(s, dir, "region").select(col("r_name"),
-          (col("r_regionkey").cast("long") * 40000).as("lo"),
-          (col("r_regionkey").cast("long") * 40000 + 79999).as("hi"))
-        RangeJoin.pointInInterval(T(s, dir, "orders"), dim,
-            col("o_totalprice"), col("lo"), col("hi"),
-            RangeJoin.LastMatch, priority = col("lo"), factKeys = Seq(col("o_orderkey")))
+          (col("r_regionkey").cast("long") * 80000).as("lo2"),
+          (col("r_regionkey").cast("long") * 80000 + 159998).as("hi2"))
+        val p = least(greatest(col("o_totalprice"), lit(-1e18)), lit(1e18))
+        IntervalIndex.enrichAuto(T(s, dir, "orders"), floor(p) + ceil(p), dim,
+            "lo2", "hi2", "lo2", lastWins = true)
           .select(col("o_orderkey"), coalesce(col("r_name"), lit("unknown")).as("band_name"))
           .orderBy(col("o_orderkey"))
       }),

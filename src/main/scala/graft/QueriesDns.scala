@@ -223,7 +223,7 @@ object QueriesDns {
         val k = col("n_nationkey").cast("long")
         val nameDim = T(s, dir, "nation")
           .select((k * 5).as("lo"), (k * 5 + 4).as("hi"), col("n_name"))
-        IntervalIndex.enrichAuto(s, T(s, dir, "events"), col("user_id"),
+        IntervalIndex.enrichAuto(T(s, dir, "events"), col("user_id"),
             nameDim, "lo", "hi", "lo", lastWins = false)
           .groupBy(coalesce(col("n_name"), lit("unknown")).as("province"))
           .agg(count(lit(1)).as("cnt"),
@@ -438,7 +438,7 @@ object QueriesDns {
         // reference parity keeps the non-type attrs null on miss; the ORACLE
         // projection coalesces them to '' because the driver's pandas compare
         // cannot sort None against str — pure rendering, not semantics.
-        Reports.topDetailEnriched(s, top, geo, auth, media, biz)
+        Reports.topDetailEnriched(top, geo, auth, media, biz)
           .select(col("clientName").as("client_name"), col("domain"),
             col("authorityDomain").as("authority_domain"), col("dnsIp").as("dns_ip"),
             col("aip"), col("resolver"), col("error"), col("inNet").as("in_net"),
@@ -492,7 +492,7 @@ object QueriesDns {
         }.toDF("min_long_ip", "max_long_ip", "continent", "country", "province", "city",
           "district", "operator", "admin_code", "en_name", "iso_code", "lon", "lat")
         val fact = T(s, dir, "events").select((col("user_id") % 300).as("pt"))
-        Dims.enrichGeo(s, fact, geo, col("pt"))
+        Dims.enrichGeo(fact, geo, col("pt"))
           .withColumn("geo_region", Dims.geoRegionStruct)
           .select(col("pt"), col("geo_region.*"))
           .groupBy(
@@ -728,7 +728,7 @@ object QueriesDns {
           (col("r_regionkey").cast("long") * 300 + 499).as("hi"))
         val fact = T(s, dir, "customer")
           .select(col("c_custkey"), (col("c_custkey") * 3 % 2000).as("pt"))
-        IntervalIndex.enrichAuto(s, fact, col("pt"), dim, "lo", "hi", "lo",
+        IntervalIndex.enrichAuto(fact, col("pt"), dim, "lo", "hi", "lo",
             lastWins = true)
           .select(col("c_custkey"), col("pt"),
             coalesce(col("r_name"), lit("unknown")).as("band_name"))

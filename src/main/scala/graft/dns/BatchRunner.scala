@@ -59,7 +59,7 @@ object BatchRunner {
     // join operator: UDF probes of dim snapshots (interval and hash indexes,
     // graft.operators.DimSnapshot) only (plan-asserted in BatchRunnerSpec).
     val enriched = Dims.enrichAuthDomain(
-      Dims.enrichInNet(spark,
+      Dims.enrichInNet(
         Dims.enrichClientName(cleaned, dims.clientRules),
         dims.mediaRules, dims.businessRules),
       dims.authDomains)
@@ -84,7 +84,7 @@ object BatchRunner {
         // (protocol strip, inNet, business attrs, auth-domain attrs, geo
         // counters) — every step a dim-snapshot probe over the K-sized top
         // set
-        () => stamped(Reports.topDetailEnriched(spark,
+        () => stamped(Reports.topDetailEnriched(
           Reports.topDetail(enriched, dims.whitelist, topDetailK),
           dims.geoDim, dims.authDomains, dims.mediaRules,
           dims.businessRules)),

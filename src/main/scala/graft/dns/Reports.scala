@@ -117,13 +117,12 @@ object Reports {
     * carry country/province/city/operator; its raw attribute columns are
     * consumed into the counters and aIpAddr, then dropped — the output is
     * the reference's dns_flow_top row shape. */
-  def topDetailEnriched(spark: org.apache.spark.sql.SparkSession, top: DataFrame,
-                        geoDim: DataFrame, authDim: DataFrame,
+  def topDetailEnriched(top: DataFrame, geoDim: DataFrame, authDim: DataFrame,
                         mediaRules: DataFrame, businessRules: DataFrame): DataFrame = {
     val stripped = top
       .withColumn("domain", F.strip_protocol(col("domain")))
       .withColumn("authorityDomain", F.authority_domain(col("domain")))
-    val withInNet = Dims.enrichInNet(spark, stripped, mediaRules, businessRules)
+    val withInNet = Dims.enrichInNet(stripped, mediaRules, businessRules)
     val withBiz = Dims.enrichBusiness(withInNet, businessRules)
     val withAuth = DimSnapshot.equiLookup(withBiz, authDim, "authorityDomain")
       // single withColumns per group (each withColumn re-analyzes the
@@ -132,7 +131,7 @@ object Reports {
         "companyType" -> coalesce(col("companyType"), lit("未知")),
         "websiteType" -> coalesce(col("websiteType"), lit("未知"))))
     val geoAttrCols = geoDim.columns.filterNot(Set("min_long_ip", "max_long_ip"))
-    Dims.enrichGeo(spark, withAuth, geoDim, F.ip_to_long(col("aip")))
+    Dims.enrichGeo(withAuth, geoDim, F.ip_to_long(col("aip")))
       .withColumns(scala.collection.immutable.ListMap(
         "abroadNum" ->
           when(col("country").isNotNull && col("country") =!= "中国",

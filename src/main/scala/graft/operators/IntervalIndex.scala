@@ -1,6 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import scala.collection.mutable.ArrayBuffer
+import scala.reflect.ClassTag
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.api.java.UDF1
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructType}
@@ -17,6 +20,11 @@ import org.apache.spark.sql.types.{LongType, StructType}
   * probed with `java.util.Arrays.binarySearch` inside a UDF. The fact side
   * keeps its partitioning: no shuffle, no NLJ, no join operator.
   *
+  * Its [[IntervalIndex.sweep]] and [[IntervalIndex.segmentOf]] are the
+  * only segment sweep and lookup in the engine: the SQL BETWEEN join's
+  * [[graft.plans.MultiIntervalIndex]] runs the same two, keeping every
+  * covering id per segment where this index keeps one winner.
+  *
   * The index carries each rule's attribute row, so the probe returns the
   * winning rule's attributes directly. It is a [[DimSnapshot]]: collected,
   * built and broadcast once per content version of the dim, and reused by
@@ -31,9 +39,8 @@ final class IntervalIndex private (
 
   /** Id of the rule covering `p`, or -1. O(log n). */
   def lookup(p: Long): Int = {
-    var idx = java.util.Arrays.binarySearch(starts, p)
-    if (idx < 0) idx = -idx - 2 // insertion point - 1 = candidate segment
-    if (idx >= 0 && idx < starts.length && p <= ends(idx)) ids(idx) else -1
+    val s = IntervalIndex.segmentOf(starts, ends, p)
+    if (s < 0) -1 else ids(s)
   }
 
   /** Attribute row of the rule covering `p`, or null. O(log n). */
@@ -55,32 +62,52 @@ object IntervalIndex {
     */
   def build(rules: Seq[(Long, Long, Long, Int)], lastWins: Boolean,
             attrs: Array[Row] = Array.empty): IntervalIndex = {
-    val valid = rules.filter(r => r._1 <= r._2)
-    if (valid.isEmpty) return new IntervalIndex(Array.empty, Array.empty, Array.empty, attrs)
-    // Sweep line over elementary segments between consecutive boundaries.
-    val bounds = valid.flatMap(r => Seq(r._1, r._2 + 1)).distinct.sorted.toArray
-    val sortedRules = valid.sortBy(_._1).toArray
-    val ss = collection.mutable.ArrayBuffer[Long]()
-    val es = collection.mutable.ArrayBuffer[Long]()
-    val is = collection.mutable.ArrayBuffer[Int]()
+    val (ss, es, winners) = sweep(rules)(active =>
+      (if (lastWins) active.maxBy(r => (r._3, r._4))
+       else active.minBy(r => (r._3, r._4)))._4)(_ == _)
+    new IntervalIndex(ss, es, winners, attrs)
+  }
+
+  /** The one segment sweep behind every interval index: flattens
+    * (lo, hi inclusive, priority, id) rules into sorted disjoint segments,
+    * each carrying `payload` of the rules covering it; contiguous segments
+    * with the `same` payload merge. Inverted rules (lo > hi) cover nothing,
+    * like `BETWEEN`; a rule with hi = Long.MaxValue covers the top of the
+    * line. Returns (starts, inclusive ends, payloads), parallel arrays. */
+  private[graft] def sweep[P: ClassTag](rules: Seq[(Long, Long, Long, Int)])(
+      payload: collection.Seq[(Long, Long, Long, Int)] => P)(
+      same: (P, P) => Boolean): (Array[Long], Array[Long], Array[P]) = {
+    val sorted = rules.filter(r => r._1 <= r._2).sortBy(_._1).toArray
+    // segment starts: every lo and every hi + 1 (none past Long.MaxValue)
+    val bounds = (sorted.map(_._1) ++
+      sorted.collect { case r if r._2 != Long.MaxValue => r._2 + 1 }).distinct.sorted
+    val ss = ArrayBuffer[Long]()
+    val es = ArrayBuffer[Long]()
+    val ps = ArrayBuffer[P]()
     var ri = 0 // rules with lo <= segment start, maintained incrementally
-    val active = collection.mutable.ArrayBuffer[(Long, Long, Long, Int)]()
-    var b = 0
-    while (b < bounds.length - 1) {
-      val segLo = bounds(b); val segHi = bounds(b + 1) - 1
-      while (ri < sortedRules.length && sortedRules(ri)._1 <= segLo) {
-        active += sortedRules(ri); ri += 1
+    val active = ArrayBuffer[(Long, Long, Long, Int)]()
+    for (b <- bounds.indices) {
+      val segLo = bounds(b)
+      val segHi = if (b + 1 < bounds.length) bounds(b + 1) - 1 else Long.MaxValue
+      while (ri < sorted.length && sorted(ri)._1 <= segLo) {
+        active += sorted(ri); ri += 1
       }
       active.filterInPlace(_._2 >= segLo)
       if (active.nonEmpty) {
-        val win = if (lastWins) active.maxBy(r => (r._3, r._4)) else active.minBy(r => (r._3, r._4))
-        // merge with previous segment when contiguous and same winner
-        if (is.nonEmpty && is.last == win._4 && es.last == segLo - 1) es(es.length - 1) = segHi
-        else { ss += segLo; es += segHi; is += win._4 }
+        val pay = payload(active)
+        if (ps.nonEmpty && es.last == segLo - 1 && same(ps.last, pay)) es(es.length - 1) = segHi
+        else { ss += segLo; es += segHi; ps += pay }
       }
-      b += 1
     }
-    new IntervalIndex(ss.toArray, es.toArray, is.toArray, attrs)
+    (ss.toArray, es.toArray, ps.toArray)
+  }
+
+  /** The one segment lookup: the index of the [[sweep]] segment covering
+    * `p`, or -1. One binary search, no allocation. */
+  private[graft] def segmentOf(starts: Array[Long], ends: Array[Long], p: Long): Int = {
+    val i = java.util.Arrays.binarySearch(starts, p)
+    val s = if (i < 0) -i - 2 else i // insertion point - 1 = candidate segment
+    if (s >= 0 && p <= ends(s)) s else -1
   }
 
   /** The bounded driver-side collect ([[DimSnapshot.collect]]) of `dim`
@@ -139,9 +166,8 @@ object IntervalIndex {
     * O(log rules) [[probe]] per fact row. No join, no window, no shuffle:
     * the fact keeps its partitioning. Left-outer: unmatched fact rows keep
     * nulls for dim attributes (callers apply `coalesce` defaults). */
-  def enrichAuto(spark: SparkSession, fact: DataFrame, point: Column,
-                 dim: DataFrame, loCol: String, hiCol: String,
-                 priorityCol: String, lastWins: Boolean,
+  def enrichAuto(fact: DataFrame, point: Column, dim: DataFrame,
+                 loCol: String, hiCol: String, priorityCol: String, lastWins: Boolean,
                  maxRules: Int = DimSnapshot.maxCollectedRows): DataFrame = {
     val hit = probe(dim, loCol, hiCol, priorityCol, lastWins, maxRules)(point)
     fact.withColumn("__rule", hit)

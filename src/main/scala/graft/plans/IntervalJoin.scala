@@ -9,6 +9,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
 import org.apache.spark.sql.catalyst.plans.physical.Partitioning
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.types.{ByteType, DateType, IntegerType, LongType, ShortType, TimestampType}
+import graft.operators.IntervalIndex
 
 /** Whole-operator Catalyst integration for point-in-interval joins.
   *
@@ -30,7 +31,10 @@ import org.apache.spark.sql.types.{ByteType, DateType, IntegerType, LongType, Sh
   * EVERY matching interval, so the rewrite is transparent to SQL authors.
   *
   * Scope guards (falls through to Spark's own planner otherwise):
-  *  - integral point/bound types (long-encoded IPs, epoch seconds, keys);
+  *  - point and bounds of one integral type (long-encoded IPs, epoch
+  *    seconds, keys, DATE, TIMESTAMP), compared by their internal values
+  *    (days, microseconds) — never cast, which nulls a DATE and truncates a
+  *    TIMESTAMP to seconds;
   *  - build side under `spark.graft.intervalJoin.maxBuildBytes` by Catalyst
   *    stats (same contract as autoBroadcastJoinThreshold);
   *  - inner / left-outer (build right) / right-outer (build left) — shapes
@@ -46,65 +50,47 @@ object IntervalJoin {
     * everything overlaps everything. 64M ids ≈ 512 MB broadcast — refuse
     * beyond that with a clear error instead of OOMing the driver. */
   val maxStoredIds: Long = 64L << 20
+
+  /** The internal value of an integral point or bound (a DATE's days, a
+    * TIMESTAMP's microseconds), widened to long. */
+  private[plans] def internalLong(v: Any): Long = v.asInstanceOf[Number].longValue()
 }
 
 /** Sorted disjoint segments, each carrying ALL covering interval ids (join
-  * semantics — contrast [[graft.operators.IntervalIndex]] which keeps one
-  * winner for first/last-match enrichment). Lookup is one binary search. */
+  * semantics). Built by the one segment sweep of
+  * [[graft.operators.IntervalIndex]] and probed by its one segment lookup;
+  * only the per-segment payload differs. */
 final class MultiIntervalIndex private (
     val starts: Array[Long], val ends: Array[Long],
     val idLists: Array[Array[Int]]) extends Serializable {
 
   /** Ids of every interval covering `p` (possibly empty). O(log segments). */
   def lookup(p: Long): Array[Int] = {
-    var idx = java.util.Arrays.binarySearch(starts, p)
-    if (idx < 0) idx = -idx - 2 // insertion point - 1 = candidate segment
-    if (idx >= 0 && idx < starts.length && p <= ends(idx)) idLists(idx)
-    else MultiIntervalIndex.none
+    val s = IntervalIndex.segmentOf(starts, ends, p)
+    if (s < 0) MultiIntervalIndex.none else idLists(s)
   }
 }
 
 object MultiIntervalIndex {
   val none: Array[Int] = Array.emptyIntArray
 
-  /** Sweep-line flatten of (lo, hi inclusive, id) into disjoint segments.
-    * Inverted intervals (lo > hi) match nothing, like `BETWEEN`. */
+  /** Flatten (lo, hi inclusive, id) into disjoint segments. Inverted
+    * intervals (lo > hi) match nothing, like `BETWEEN`. */
   def build(intervals: Seq[(Long, Long, Int)]): MultiIntervalIndex = {
-    val valid = intervals.filter(r => r._1 <= r._2)
-    if (valid.isEmpty)
-      return new MultiIntervalIndex(Array.empty, Array.empty, Array.empty)
-    val bounds = valid.flatMap(r => Seq(r._1, r._2 + 1)).distinct.sorted.toArray
-    val sorted = valid.sortBy(_._1).toArray
-    val ss = collection.mutable.ArrayBuffer[Long]()
-    val es = collection.mutable.ArrayBuffer[Long]()
-    val ls = collection.mutable.ArrayBuffer[Array[Int]]()
+    // ids kept so far; adjacent sweep segments always differ in cover set,
+    // so no kept segment is merged away
     var stored = 0L
-    var ri = 0
-    val active = collection.mutable.ArrayBuffer[(Long, Long, Int)]()
-    var b = 0
-    while (b < bounds.length - 1) {
-      val segLo = bounds(b); val segHi = bounds(b + 1) - 1
-      while (ri < sorted.length && sorted(ri)._1 <= segLo) {
-        active += sorted(ri); ri += 1
-      }
-      active.filterInPlace(_._2 >= segLo)
-      if (active.nonEmpty) {
-        val ids = active.map(_._3).toArray.sorted
-        stored += ids.length
-        require(stored <= IntervalJoin.maxStoredIds,
-          s"IntervalJoin: flattened index exceeds ${IntervalJoin.maxStoredIds} " +
-            "stored ids — the build side's intervals overlap too heavily to " +
-            "broadcast; disable spark.graft.intervalJoin.enabled for this query")
-        // merge with previous segment when contiguous and identical cover set
-        if (ls.nonEmpty && es.last == segLo - 1 &&
-            java.util.Arrays.equals(ls.last, ids)) {
-          stored -= ids.length
-          es(es.length - 1) = segHi
-        } else { ss += segLo; es += segHi; ls += ids }
-      }
-      b += 1
-    }
-    new MultiIntervalIndex(ss.toArray, es.toArray, ls.toArray)
+    val rules = intervals.map(r => (r._1, r._2, 0L, r._3))
+    val (ss, es, ls) = IntervalIndex.sweep(rules) { active =>
+      val ids = active.map(_._4).toArray.sorted
+      stored += ids.length
+      require(stored <= IntervalJoin.maxStoredIds,
+        s"IntervalJoin: flattened index exceeds ${IntervalJoin.maxStoredIds} " +
+          "stored ids — the build side's intervals overlap too heavily to " +
+          "broadcast; disable spark.graft.intervalJoin.enabled for this query")
+      ids
+    }(java.util.Arrays.equals(_, _))
+    new MultiIntervalIndex(ss, es, ls)
   }
 }
 
@@ -143,7 +129,7 @@ case class IntervalJoinExec(
     val intervals = buildRows.iterator.zipWithIndex.flatMap { case (r, i) =>
       val l = loB.eval(r); val h = hiB.eval(r)
       if (l == null || h == null) Iterator.empty // null bound matches nothing
-      else Iterator.single((l.asInstanceOf[Long], h.asInstanceOf[Long], i))
+      else Iterator.single((IntervalJoin.internalLong(l), IntervalJoin.internalLong(h), i))
     }.toSeq
     val bc = sparkContext.broadcast(
       (MultiIntervalIndex.build(intervals), buildRows))
@@ -167,7 +153,7 @@ case class IntervalJoinExec(
         val p = pointB.eval(srow)
         val ids =
           if (p == null) MultiIntervalIndex.none
-          else idx.lookup(p.asInstanceOf[Long])
+          else idx.lookup(IntervalJoin.internalLong(p))
         var emitted = false
         val matches: Iterator[InternalRow] = ids.iterator
           .map(i => j(rows(i), srow))
@@ -210,8 +196,6 @@ class IntervalJoinStrategy(session: SparkSession)
     case DateType | TimestampType => true // day / microsecond integrals
     case _ => false
   }
-  private def asLong(e: Expression): Expression =
-    if (e.dataType == LongType) e else Cast(e, LongType)
 
   /** (point, bound, isLower) when `c` bounds an expression of one side by an
     * expression of the other; point side encoded as pointOnLeft. */
@@ -229,7 +213,8 @@ class IntervalJoinStrategy(session: SparkSession)
     }
     def mk(p: Expression, b: Expression, lower: Boolean): Option[BoundCond] =
       (sideOf(p), sideOf(b)) match {
-        case (Some(ps), Some(bs)) if ps != bs && integral(p) && integral(b) =>
+        case (Some(ps), Some(bs))
+            if ps != bs && integral(p) && p.dataType == b.dataType =>
           Some(BoundCond(p, b, ps, lower, c))
         case _ => None
       }
@@ -267,8 +252,8 @@ class IntervalJoinStrategy(session: SparkSession)
           val residual = conjuncts
             .filterNot(c => c.fastEquals(lower.src) || c.fastEquals(upper.src))
             .reduceOption(And)
-          IntervalJoinExec(asLong(lower.point), asLong(lower.bound),
-            asLong(upper.bound), joinType, buildIsLeft, residual,
+          IntervalJoinExec(lower.point, lower.bound, upper.bound,
+            joinType, buildIsLeft, residual,
             planLater(l), planLater(r)) :: Nil
         }
       }

@@ -128,7 +128,7 @@ class BatchRunnerSpec extends AnyFunSuite with SparkSpec {
     // the r1 windowed J1 exchanged+sorted the whole fact table on a per-row
     // key; the IntervalIndex default must not shuffle the fact side at all
     val enriched = Dims.enrichAuthDomain(
-      Dims.enrichInNet(spark,
+      Dims.enrichInNet(
         Dims.enrichClientName(fact, dims.clientRules),
         dims.mediaRules, dims.businessRules),
       dims.authDomains)
@@ -173,7 +173,7 @@ class BatchRunnerSpec extends AnyFunSuite with SparkSpec {
     val geo = Seq((ip("115.238.0.0"), ip("115.238.255.255"),
       "中国", "浙江", "杭州", "中国电信"))
       .toDF("min_long_ip", "max_long_ip", "country", "province", "city", "operator")
-    val enriched = Reports.topDetailEnriched(spark, top, geo, auth, media, biz)
+    val enriched = Reports.topDetailEnriched(top, geo, auth, media, biz)
     enriched.collect()
     val executed = enriched.queryExecution.executedPlan match {
       case a: AdaptiveSparkPlanExec => a.executedPlan
@@ -224,7 +224,7 @@ class BatchRunnerSpec extends AnyFunSuite with SparkSpec {
       val seq = Map(
         "clear" -> Reports.qps(rs.facts, 300),
         "trend" -> Reports.trendAgg(rs.facts, 0L),
-        "top_detail" -> Reports.topDetailEnriched(spark,
+        "top_detail" -> Reports.topDetailEnriched(
           Reports.topDetail(rs.facts, dims.whitelist, 70000),
           dims.geoDim, dims.authDomains, dims.mediaRules, dims.businessRules),
         "ratios" -> Reports.requestTypeRatio(rs.facts)

@@ -149,7 +149,7 @@ class DimSnapshotSpec extends AnyFunSuite with SparkSpec {
       .toDF("pt", "authorityDomain")
     def enrich(): DataFrame =
       graft.operators.DimSnapshot.equiLookup(
-        IntervalIndex.enrichAuto(spark, fact, col("pt"), ranges, "lo", "hi", "lo",
+        IntervalIndex.enrichAuto(fact, col("pt"), ranges, "lo", "hi", "lo",
           lastWins = false), auth, "authorityDomain")
     val (outs, jobs) = jobsOf(spark)(DriverPool.run(2)(Seq(() => enrich(), () => enrich())))
     assert(jobs == 2, s"two bodies over two new dims started $jobs jobs, not one per dim")

@@ -75,7 +75,7 @@ class GeoDatSourceSpec extends AnyFunSuite with SparkSpec {
       .withColumnRenamed("start_ip", "min_long_ip")
       .withColumnRenamed("end_ip", "max_long_ip")
     val fact = Seq(5L, 12L, 99999L).toDF("pt")
-    val got = graft.dns.Dims.enrichGeo(spark, fact, dim, col("pt"))
+    val got = graft.dns.Dims.enrichGeo(fact, dim, col("pt"))
       .select(col("pt"), col("continent"), col("operator"))
       .orderBy("pt").collect()
     assert(got(0).getString(1) == "Asia" && got(0).getString(2) == "电信")

@@ -22,7 +22,7 @@ class GeoEnrichSpec extends AnyFunSuite with SparkSpec {
       .repartition(4)
     val facts = Seq("115.238.23.2", "58.250.137.36", "8.8.8.8")
       .toDF("aip")
-    val out = Dims.enrichGeo(spark, facts, geo, F.ip_to_long(col("aip")))
+    val out = Dims.enrichGeo(facts, geo, F.ip_to_long(col("aip")))
       .select("aip", "operator", "province").as[(String, String, String)]
       .collect().sortBy(_._1).toSeq
     assert(out == Seq(

@@ -18,7 +18,7 @@ class InNetSpec extends AnyFunSuite with SparkSpec {
     val facts = Seq(
       ("10.1.2.3", 7L), ("115.238.9.9", 3L), ("8.8.8.8", 5L), ("bogus", 1L))
       .toDF("aip", "resolver")
-    val got = Dims.enrichInNet(spark, facts, media, biz)
+    val got = Dims.enrichInNet(facts, media, biz)
       .select("aip", "inNet").as[(String, Long)].collect().sortBy(_._1).toSeq
     assert(got == Seq(("10.1.2.3", 7L), ("115.238.9.9", 3L),
       ("8.8.8.8", 0L), ("bogus", 0L)))

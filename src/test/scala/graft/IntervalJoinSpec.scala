@@ -103,6 +103,37 @@ class IntervalJoinSpec extends AnyFunSuite with SparkSpec
       JOIN ij_fact f ON f.pt BETWEEN d.lo AND d.hi""")
   }
 
+  /** [[assertParity]] of a BETWEEN join of two SQL VALUES lists, `dim`
+    * rows (lo, hi, tag) and `fact` rows (fid, pt), on which vanilla Spark
+    * matches at least one row. */
+  private def assertParityOver(dim: String, fact: String): Unit = {
+    val sql = s"""
+      SELECT f.fid, d.tag FROM VALUES $fact AS f(fid, pt)
+      JOIN VALUES $dim AS d(lo, hi, tag) ON f.pt BETWEEN d.lo AND d.hi"""
+    spark.conf.set(IntervalJoin.enabledKey, "false")
+    try assert(spark.sql(sql).count() > 0, "the vanilla join must match rows")
+    finally spark.conf.set(IntervalJoin.enabledKey, "true")
+    assertParity(sql)
+  }
+
+  test("DATE points and bounds compare as days") {
+    assertParityOver(
+      "(DATE'2024-01-01', DATE'2024-01-31', 'jan'), (DATE'2024-02-01', DATE'2024-02-29', 'feb')",
+      "(1, DATE'2024-01-15'), (2, DATE'2024-02-29'), (3, DATE'2024-03-01')")
+  }
+
+  test("sub-second TIMESTAMP points and bounds compare as microseconds") {
+    assertParityOver(
+      "(timestamp_micros(10700000), timestamp_micros(20000000), 'late')",
+      "(1, timestamp_micros(10200000)), (2, timestamp_micros(10800000))")
+  }
+
+  test("a bound at Long.MaxValue covers the top of the line") {
+    assertParityOver(
+      "(0L, 9223372036854775807L, 'open'), (10L, 20L, 'mid')",
+      "(1, 1L), (2, 15L), (3, 100L), (4, 9223372036854775807L), (5, -1L)")
+  }
+
   test("guards: non-integral types and big build sides fall through") {
     mkTables()
     withStrategy {

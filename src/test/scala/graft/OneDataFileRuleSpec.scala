@@ -17,7 +17,9 @@ import graft.sources.ZLake
   * [[graft.sinks.LakeDelete.publishSidecar]] the sidecar swap, [[IndexOcc]]
   * the index compaction loop, [[ZLake.relPath]] the root-relative path,
   * [[graft.operators.DimSnapshot]] the dims' broadcast variables (no
-  * broadcast join is left in the window's enrichments) — and pins the data-file rule once on a local
+  * broadcast join is left in the window's enrichments),
+  * [[graft.operators.IntervalIndex.segmentOf]] the interval lookup — and
+  * pins the data-file rule once on a local
   * directory tree (no Spark): its listings, its missing-root failure, and
   * [[IndexOcc.adoptStaged]], which moves files by it. */
 class OneDataFileRuleSpec extends AnyFunSuite {
@@ -47,7 +49,12 @@ class OneDataFileRuleSpec extends AnyFunSuite {
     // the window's enrichments probe snapshots; no broadcast join is left
     // (userTags is off the window path)
     Rule("broadcast(", Some("graft/dns/Reports.scala" -> "userTags"),
-      f => f == "graft/dns/Dims.scala" || f == "graft/dns/Reports.scala"))
+      f => f == "graft/dns/Dims.scala" || f == "graft/dns/Reports.scala"),
+    // "point in [lo, hi]" has one segment lookup, shared by the dim
+    // enrichments and the SQL BETWEEN join, and no nested-loop variant
+    Rule("Arrays.binarySearch(",
+      Some("graft/operators/IntervalIndex.scala" -> "segmentOf")),
+    Rule("RangeJoin", None))
 
   test("src/main spells each one-owner rule only in its owner") {
     val root = Paths.get("src/main/scala")

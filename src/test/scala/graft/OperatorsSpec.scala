@@ -33,43 +33,67 @@ class OperatorsSpec extends AnyFunSuite with SparkSpec {
     assert(idx.lookup(7) == 2 && idx.lookup(8) == -1) // inverted rule dropped
   }
 
-  // ---- RangeJoin policies --------------------------------------------------
-  test("RangeJoin first/last-match policies") {
+  // ---- enrichAuto: first/last-match over a dim ----------------------------
+  test("IntervalIndex first/last-match policies") {
     val fact = Seq((1L, 15L), (2L, 35L), (3L, 99L)).toDF("id", "pt")
     val dim = Seq((10L, 20L, 1L, "a"), (12L, 40L, 2L, "b"), (30L, 50L, 3L, "c"))
       .toDF("lo", "hi", "prio", "tag")
-    def run(policy: RangeJoin.MatchPolicy) =
-      RangeJoin.pointInInterval(fact, dim, col("pt"), col("lo"), col("hi"),
-          policy, col("prio"), Seq(col("id")))
+    def run(lastWins: Boolean) =
+      IntervalIndex.enrichAuto(fact, col("pt"), dim, "lo", "hi", "prio", lastWins)
         .select(col("id"), col("tag")).as[(Long, String)].collect().sortBy(_._1).toSeq
-    assert(run(RangeJoin.FirstMatch) == Seq((1L, "a"), (2L, "b"), (3L, null)))
-    assert(run(RangeJoin.LastMatch) == Seq((1L, "b"), (2L, "c"), (3L, null)))
+    assert(run(lastWins = false) == Seq((1L, "a"), (2L, "b"), (3L, null)))
+    assert(run(lastWins = true) == Seq((1L, "b"), (2L, "c"), (3L, null)))
   }
 
-  test("enrichAuto (flattened index) agrees with the windowed RangeJoin on random rules") {
-    // the two J1/J2 implementations — full-fact window vs broadcast interval
-    // index — must never drift; seeded random overlapping rule sets
+  test("enrichAuto (flattened index) agrees with the naive scan on random rules") {
+    // the DataFrame face of the index (collect, build, broadcast, probe,
+    // attribute spread) against a per-row linear scan of the same dim;
+    // seeded random overlapping rule sets with distinct lo values, so the
+    // lo priority alone picks the winner
     val rnd = new scala.util.Random(42)
     (0 until 3).foreach { trial =>
-      // distinct lo values: equal priorities would make the WINDOW variant's
-      // tie-break nondeterministic (not a semantics difference)
       val los = rnd.shuffle((0 until 1000).toList).take(20)
-      val dim = los.zipWithIndex.map { case (lo, i) =>
+      val rules = los.zipWithIndex.map { case (lo, i) =>
         (lo.toLong, lo.toLong + rnd.nextInt(300), s"tag${trial}_$i")
-      }.toDF("lo", "hi", "tag")
-      val fact = Seq.tabulate(200)(i => (i.toLong, rnd.nextInt(1600).toLong - 100))
-        .toDF("id", "pt")
-      def windowed(policy: RangeJoin.MatchPolicy) =
-        RangeJoin.pointInInterval(fact, dim, col("pt"), col("lo"), col("hi"),
-            policy, col("lo"), Seq(col("id")))
-          .select(col("id"), col("tag")).as[(Long, String)].collect().sortBy(_._1).toSeq
+      }
+      val facts = Seq.tabulate(200)(i => (i.toLong, rnd.nextInt(1600).toLong - 100))
+      def naive(lastWins: Boolean) = facts.map { case (id, pt) =>
+        val hits = rules.filter(r => r._1 <= pt && pt <= r._2)
+        (id, if (hits.isEmpty) null
+             else (if (lastWins) hits.maxBy(_._1) else hits.minBy(_._1))._3)
+      }
       def indexed(lastWins: Boolean) =
-        graft.operators.IntervalIndex.enrichAuto(spark, fact, col("pt"), dim,
-            "lo", "hi", "lo", lastWins)
+        IntervalIndex.enrichAuto(facts.toDF("id", "pt"), col("pt"),
+            rules.toDF("lo", "hi", "tag"), "lo", "hi", "lo", lastWins)
           .select(col("id"), col("tag")).as[(Long, String)].collect().sortBy(_._1).toSeq
-      assert(windowed(RangeJoin.FirstMatch) == indexed(lastWins = false), s"first, trial $trial")
-      assert(windowed(RangeJoin.LastMatch) == indexed(lastWins = true), s"last, trial $trial")
+      assert(naive(lastWins = false) == indexed(lastWins = false), s"first, trial $trial")
+      assert(naive(lastWins = true) == indexed(lastWins = true), s"last, trial $trial")
     }
+  }
+
+  test("q07: a fractional price between two integral bands matches neither") {
+    // q07 probes the DOUBLE o_totalprice against integral bands
+    // [40000k, 40000k + 79999], last match wins; a probe that cast the
+    // price to BIGINT would put 239999.5 into the last band and -0.5 into
+    // the first. The oracle SQL, run by Spark itself, is the reference.
+    val dir = java.nio.file.Files.createTempDirectory("graft-q07").toString
+    val prices = Seq(-0.5, 0.0, 0.5, 79999.0, 79999.5, 119999.5, 159999.5,
+      239999.0, 239999.5, 240000.0, -1e300, 1e300, Double.NaN,
+      Double.PositiveInfinity, Double.NegativeInfinity).map(Option(_)) :+ None
+    prices.zipWithIndex.map { case (p, i) => (i.toLong, p) }
+      .toDF("o_orderkey", "o_totalprice").write.parquet(s"$dir/orders.parquet")
+    Seq("AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST").zipWithIndex
+      .map { case (n, k) => (k, n) }.toDF("r_regionkey", "r_name")
+      .write.parquet(s"$dir/region.parquet")
+    val q07 = Queries.byName("q07_range_join_last")
+    val got = q07.fn(spark, dir).as[(Long, String)].collect().toSeq
+    assert(got.map(_._2) == Seq("unknown", "AFRICA", "AFRICA", "AMERICA",
+      "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST", "unknown", "unknown",
+      "unknown", "unknown", "unknown", "unknown", "unknown", "unknown"))
+    spark.read.parquet(s"$dir/orders.parquet").createOrReplaceTempView("orders")
+    spark.read.parquet(s"$dir/region.parquet").createOrReplaceTempView("region")
+    try assert(spark.sql(q07.oracle.get).as[(Long, String)].collect().toSeq == got)
+    finally Seq("orders", "region").foreach(spark.catalog.dropTempView)
   }
 
   test("IntervalIndex.enrichAuto fails fast on fact-sized and null-bound dims") {
@@ -79,7 +103,7 @@ class OperatorsSpec extends AnyFunSuite with SparkSpec {
     val big = spark.range(50)
       .selectExpr("id AS lo", "id + 1 AS hi", "CAST(id AS STRING) AS tag")
     val eBig = intercept[IllegalArgumentException] {
-      graft.operators.IntervalIndex.enrichAuto(spark, fact, col("pt"), big,
+      graft.operators.IntervalIndex.enrichAuto(fact, col("pt"), big,
         "lo", "hi", "lo", lastWins = false, maxRules = 10)
     }
     assert(eBig.getMessage.contains("more than 10 rows") &&
@@ -88,14 +112,14 @@ class OperatorsSpec extends AnyFunSuite with SparkSpec {
     val nullDim = Seq((Some(1L), None: Option[Long], "x"))
       .toDF("lo", "hi", "tag")
     val eNull = intercept[IllegalArgumentException] {
-      graft.operators.IntervalIndex.enrichAuto(spark, fact, col("pt"), nullDim,
+      graft.operators.IntervalIndex.enrichAuto(fact, col("pt"), nullDim,
         "lo", "hi", "lo", lastWins = false)
     }
     assert(eNull.getMessage.contains("null"))
     // the J3 in-net path reaches the driver through the same guarded collect
     val nullRanges = nullDim.selectExpr("lo AS min_long_ip", "hi AS max_long_ip")
     val eInNet = intercept[IllegalArgumentException] {
-      graft.dns.Dims.enrichInNet(spark, Seq(("10.0.0.1", 1L)).toDF("aip", "resolver"),
+      graft.dns.Dims.enrichInNet(Seq(("10.0.0.1", 1L)).toDF("aip", "resolver"),
         nullRanges, nullRanges)
     }
     assert(eInNet.getMessage.contains("null"))

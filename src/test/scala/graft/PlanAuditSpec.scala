@@ -85,7 +85,7 @@ class PlanAuditSpec extends AnyFunSuite with SparkSpec {
     val fact = spark.read.parquet(s"$sf/customer.parquet")
       .select(col("c_custkey"), (col("c_custkey") * 7 % 10000).as("pt"))
     val enriched = graft.operators.IntervalIndex.enrichAuto(
-      spark, fact, col("pt"), dim, "lo", "hi", "lo", lastWins = false)
+      fact, col("pt"), dim, "lo", "hi", "lo", lastWins = false)
     val plan = finalPlan(enriched)
     assert(shuffleNodes(plan).isEmpty, s"enrichment must not shuffle:\n$plan")
     // the attributes come from the index probe itself; shuffle exchanges are not
