@@ -1,39 +1,47 @@
 package graft.dns
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.{Functions => F}
 
 /** Raw-log → clean fact pipeline (SURVEY §2.3, P1-P9).
   *
-  * The reference does this row-at-a-time in a `mapPartitions` with fastjson
-  * (DnsRptCH.scala:861-979). Here every step is a Catalyst column expression:
-  * the JSON parse is `from_json` with an explicit pruned schema, all filters
-  * are pushable predicates, and the whole chain stays in one
-  * WholeStageCodegen span until the first shuffle.
+  * The reference does this row-at-a-time in a `mapPartitions` with fastjson,
+  * parsing each line once (DnsRptCH.scala:861-979). Here every step is a
+  * Catalyst column expression: the JSON parse is one `from_json` with an
+  * explicit schema, sealed by [[parse]] behind a `Generate`, so that the
+  * filters (P2-P4, null rcode) read fields of that one parsed struct in one
+  * whole-stage-codegen `Filter`. The parsing `Generate` and the projection
+  * with the answer derivation's lambda `filter` run outside whole-stage
+  * codegen.
   */
 object Ingest {
 
-  /** P1: parse JSON lines; malformed rows produce a null struct and are
-    * dropped (reference: log-and-skip, DnsRptCH.scala:866-873). */
-  def parse(lines: DataFrame, lineCol: String = "value"): DataFrame =
-    lines.select(from_json(col(lineCol), DnsModel.rawSchema).as("r"))
-      .filter(col("r").isNotNull && col("r.Domain").isNotNull)
-      .select(col("r.*"))
-
-  /** [[parse]] plus an operational metric: `bad_records` = dropped
-    * (malformed / domain-less) lines, counted in the same pass as the parse —
-    * no second scan of the input. Uses `Dataset.observe`, whose metrics are
-    * EXACTLY-ONCE per completed action (task retries / speculative execution
-    * don't double-count, unlike an accumulator updated in a filter UDF).
-    * Read the count with `obs.get("bad_records")` after an action. */
-  def parseCounting(lines: DataFrame, obs: org.apache.spark.sql.Observation,
-                    lineCol: String = "value"): DataFrame = {
+  /** P1: parse JSON lines; malformed or domain-less lines produce a null
+    * struct or Domain and are dropped (reference: log-and-skip,
+    * DnsRptCH.scala:866-873).
+    *
+    * The parsed struct sits behind `explode(array(...))`, a `Generate`:
+    * the optimizer pushes no filter on `r` below it. Without it, every
+    * later filter (P2/P3/P4, null rcode) is pushed below the projection
+    * that defines `r` and substitutes the parse into each conjunct, so a
+    * line is parsed once per filter (17 `from_json`s in `clean`'s plan),
+    * and that `Filter` falls out of whole-stage codegen.
+    *
+    * With `obs`, `bad_records` = the dropped lines, counted between the
+    * parse and the filter (`CollectMetrics` is a pushdown barrier too), in
+    * the same pass as the parse, no second scan of the input. `observe`'s
+    * metrics are EXACTLY-ONCE per completed action (task retries and
+    * speculative execution don't double-count, unlike an accumulator
+    * updated in a filter UDF). Read the count with `obs.get("bad_records")`
+    * after an action. */
+  def parse(lines: DataFrame, lineCol: String = "value",
+            obs: Option[Observation] = None): DataFrame = {
     val bad = col("r").isNull || col("r.Domain").isNull
-    // observe() sits between parse and filter: CollectMetrics is a pushdown
-    // barrier, so the dropped rows are still visible to the metric.
-    lines.select(from_json(col(lineCol), DnsModel.rawSchema).as("r"))
-      .observe(obs, sum(when(bad, 1L).otherwise(0L)).as("bad_records"))
+    val parsed = lines.select(
+      explode(array(from_json(col(lineCol), DnsModel.rawSchema))).as("r"))
+    obs.fold(parsed)(o =>
+      parsed.observe(o, sum(when(bad, 1L).otherwise(0L)).as("bad_records")))
       .filter(!bad)
       .select(col("r.*"))
   }

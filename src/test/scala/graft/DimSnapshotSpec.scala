@@ -2,6 +2,9 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -83,6 +86,32 @@ class DimSnapshotSpec extends AnyFunSuite with SparkSpec {
       assert(jobs == 0, s"composing over unchanged dims started $jobs Spark jobs")
       assert(second.all.map { case (n, df) => n -> rows(df) } == want)
     } finally second.unpersist()
+  }
+
+  test("a steady window compiles only the classes its literals change") {
+    val dir = tmp()
+    writeDims(dir, 1, ("浙江", "杭州", "中国电信"))
+    // window k: a file of the fixture lines moved k windows on, so each
+    // window has its own P3 bounds and `accesstime` stamp and the same rows
+    def window(k: Int): Long = {
+      val shift = k * 300000L
+      val file = java.nio.file.Paths.get(dir, s"lines-$k.json")
+      Files.write(file, rawLines.map("\"Timestamp\":(\\d+)".r.replaceAllIn(_,
+        m => s"\"Timestamp\":${m.group(1).toLong + shift}")).asJava)
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val rs = BatchRunner.run(spark, spark.read.text(file.toString), readDims(dir),
+        windowStart + shift, trendThreshold = 0L)
+      try rs.all.values.foreach(_.collect()) finally rs.unpersist()
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles
+    }
+    window(0)
+    window(1)
+    val third = window(2)
+    // 16 in this fixture, each a class whose code holds the P3 bounds or the
+    // `accesstime` stamp; a repeat of a window compiles none. With the
+    // codegen cache at Spark's default of 100 entries a window evicts its
+    // own classes: 23-35 here, ~80 at 10^4 lines.
+    assert(third <= 16, s"a steady window compiled $third classes")
   }
 
   test("rewriting client_rules and geo between two windows applies the new rows") {

@@ -1,5 +1,9 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.JsonToStructs
+import org.apache.spark.sql.execution.{FilterExec, InputAdapter, SparkPlan,
+  WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.dns._
@@ -25,6 +29,30 @@ class DnsPipelineSpec extends AnyFunSuite with SparkSpec {
   test("clean: drops malformed, non-response, garbage-domain, out-of-window") {
     val domains = cleaned.select("domain").as[String].collect().sorted
     assert(domains.toSeq == Seq("mail.example.com", "nx.example.org", "www.taobao.com"))
+  }
+
+  test("clean parses each line once, its filters inside whole-stage codegen") {
+    // lines from an RDD, as from a file: the optimizer folds a plan over
+    // a local relation into a local relation
+    val lines = spark.sparkContext.parallelize(rawLines).toDF("value")
+    val qe = Ingest.clean(spark, lines, windowStart).queryExecution
+    val parses = qe.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+      case j: JsonToStructs => j }))
+    assert(parses.size == 1, s"${parses.size} JSON parses in\n${qe.optimizedPlan}")
+    val plan = qe.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    // the filters of a codegen stage: below it, above its input adapters
+    def fused(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: InputAdapter => Nil
+      case f: FilterExec => f +: f.children.flatMap(fused)
+      case o => o.children.flatMap(fused)
+    }
+    val filters = plan.collect { case f: FilterExec => f }
+    val inCodegen = plan.collect { case w: WholeStageCodegenExec =>
+      fused(w.child) }.flatten
+    assert(filters.nonEmpty && inCodegen == filters, s"\n$plan")
   }
 
   test("answer derivation: first A answer, last answer type, error flag") {
@@ -79,9 +107,9 @@ class DnsPipelineSpec extends AnyFunSuite with SparkSpec {
   }
 
 
-  test("parseCounting tallies dropped lines in the same pass (observe)") {
+  test("parse with an observation tallies dropped lines in the same pass") {
     val obs = new org.apache.spark.sql.Observation("ingest")
-    val out = Ingest.parseCounting(rawLines.toDF("value"), obs)
+    val out = Ingest.parse(rawLines.toDF("value"), obs = Some(obs))
     val kept = out.count()
     // 7 fixture lines: 1 garbage JSON + 0 domain-less; QR/window/domain
     // filters run AFTER parse, so only the non-JSON line is "bad" here.

@@ -18,7 +18,8 @@ import graft.sources.ZLake
   * the index compaction loop, [[ZLake.relPath]] the root-relative path,
   * [[graft.operators.DimSnapshot]] the dims' broadcast variables (no
   * broadcast join is left in the window's enrichments),
-  * [[graft.operators.IntervalIndex.segmentOf]] the interval lookup — and
+  * [[graft.operators.IntervalIndex.segmentOf]] the interval lookup,
+  * [[graft.dns.Ingest.parse]] the one JSON parse of a DNS line — and
   * pins the data-file rule once on a local
   * directory tree (no Spark): its listings, its missing-root failure, and
   * [[IndexOcc.adoptStaged]], which moves files by it. */
@@ -54,7 +55,11 @@ class OneDataFileRuleSpec extends AnyFunSuite {
     // enrichments and the SQL BETWEEN join, and no nested-loop variant
     Rule("Arrays.binarySearch(",
       Some("graft/operators/IntervalIndex.scala" -> "segmentOf")),
-    Rule("RangeJoin", None))
+    Rule("RangeJoin", None),
+    // a DNS line is parsed once, behind the barrier that keeps the filters
+    // from re-parsing it
+    Rule("from_json(", Some("graft/dns/Ingest.scala" -> "parse"),
+      _.startsWith("graft/dns/")))
 
   test("src/main spells each one-owner rule only in its owner") {
     val root = Paths.get("src/main/scala")
