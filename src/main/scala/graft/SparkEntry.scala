@@ -42,14 +42,12 @@ object GraftSession {
       // INT96 files read fine but stay conservatively unpruned
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       .config("spark.ui.enabled", "false")
-      // one window's generated classes must fit in the codegen cache: the
-      // first window of a streaming DNS job compiles 136, a steady one
-      // 77-92 (windowbench stream_trickle, 4 CPUs), and at Spark's default
-      // of 100 entries the LRU evicts a window's own classes before the
-      // next window reuses them, so every window recompiled ~80 of them
-      // (~1 s of compile). With room for them, a steady window compiles
-      // only the 12-13 classes that differ in the window's literals. A
-      // static conf: it takes effect for the first session of a JVM.
+      // room for one DNS window's generated classes: 136 at warm-up and
+      // 77-92 per steady window (windowbench stream_trickle, 4 CPUs). At
+      // Spark's default of 100 the LRU evicts a window's own classes before
+      // the next window reuses them, and each window recompiled ~80 (~1 s
+      // of compile); with room, a steady window compiles only the 12-13
+      // classes its literals change. Static: read once per JVM.
       .config("spark.sql.codegen.cache.maxEntries", "1000")
       // the engine's SQL surface is default-on: graft_* functions plus the
       // BETWEEN-join planner strategy (production wiring would set the same
